@@ -17,7 +17,9 @@ import graft.engine.{KV, MRApp, MapReduce}
   */
 class CrashRecoverySpec extends AnyFunSuite {
   private lazy val spark = SparkTestBase.spark
-  private val glob = "/root/reference/src/main/pg-*.txt"
+  // The corpus guarantees a crash target: MrCorpus.CrashBook's path holds
+  // "sherlock" and its text holds the word "Sherlock".
+  private def glob = MrCorpus.glob
 
   test("map-side task crash on first attempt still matches the golden run") {
     val inner = AppRegistry("wc")

@@ -20,11 +20,11 @@ import graft.engine.MapReduce
   *     (one successful attempt, attempt number 0 — no re-execution, no
   *     double-counting), and with the split cap below the smallest file the
   *     map stage has exactly one task per input file (the reference's
-  *     8-map-executions check over the same pg corpus).
+  *     8-map-executions check over its pg corpus; here over [[MrCorpus]]).
   */
 class SchedulerIntrospectionSpec extends AnyFunSuite {
   private lazy val spark = SparkTestBase.spark
-  private val glob = "/root/reference/src/main/pg-*.txt"
+  private def glob = MrCorpus.glob
 
   private case class TaskRec(stageId: Int, partition: Int, attempt: Int,
       launch: Long, finish: Long, ok: Boolean)
@@ -75,8 +75,13 @@ class SchedulerIntrospectionSpec extends AnyFunSuite {
     sc.addSparkListener(listener)
     try {
       sc.setJobGroup(group, "scheduler introspection golden run")
-      // minMapTasks=24 puts the combine-split cap (3.3MB/24 ≈ 137KB) below
-      // the smallest pg file (139KB): exactly one map task per file.
+      // minMapTasks=24 puts the combine-split cap (790,611 B/24 ≈ 33KB)
+      // below the smallest non-empty corpus file (pg-being_ernest.txt,
+      // 55KB; MrCorpus checks every file stays above it): one map task per
+      // file. The zero-byte pg-empty.txt is a map task of its own too:
+      // Hadoop gives a zero-length file a block with no host, so Spark
+      // 4.1's wholeTextFiles packing never joins it to the node-local
+      // files — 9 tasks for the 9 files.
       val out = MapReduce
         .run(spark, AppRegistry("wc"), glob, nReduce = 10, minMapTasks = 24)
         .collect()
@@ -105,7 +110,11 @@ class SchedulerIntrospectionSpec extends AnyFunSuite {
 
       // jobcount: one map task per input file, every partition exactly once.
       val nFiles = MapReduce.globPaths(glob).size
-      assert(nFiles == 8, s"corpus moved? $nFiles files")
+      assert(nFiles == MrCorpus.files.size, s"corpus moved? $nFiles files")
+      if (MrCorpus.gutenbergPresent) {
+        val pgFiles = MapReduce.globPaths(MrCorpus.gutenbergGlob).size
+        assert(pgFiles == 8, s"corpus moved? $pgFiles files")
+      }
       assert(counts(mapStage) == nFiles,
         s"expected $nFiles map tasks (one per file), got ${counts(mapStage)}")
       assert(counts(reduceStage) == 10)
