@@ -117,7 +117,7 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = Sessions.cpus
     // Shuffle partitions default to the core count (right at the driver
     // SFs), but MUST scale with data, not cores: at 10x the data a
     // 32-partition shuffle gives every hash-aggregate task 10x the rows
@@ -126,20 +126,13 @@ object Bench {
     // count is safe at small SFs; this is the standard spill-aware
     // sizing knob, surfaced for the scale probes.
     val shufflePartitions =
-      sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTITIONS", cpus)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-bench")
-      .config("spark.sql.shuffle.partitions", shufflePartitions)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+      sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTITIONS", cpus.toString)
+    val spark = Sessions.local("graft-bench",
+      "spark.sql.shuffle.partitions" -> shufflePartitions)
     // SPARK_GRAFT_LOG=INFO turns on per-job timing lines for
     // tools/profile_query.sh (the local-mode stand-in for the Spark UI's
     // stage timeline — the UI is off in every harness JVM). Default WARN.
     spark.sparkContext.setLogLevel(sys.env.getOrElse("SPARK_GRAFT_LOG", "WARN"))
-    Sessions.quietBoundedWindowWarn()
 
     // Untimed warmup on the BENCHMARKED dataset: loads classes, JITs the
     // codegen paths, and scans every table in sfDir once — warming a
@@ -172,30 +165,25 @@ object Bench {
     // inside ±9% and the headline total inside ±11%, so 3 is the default.
     val repeat = sys.env.get("SPARK_GRAFT_BENCH_REPEAT")
       .flatMap(_.toIntOption).getOrElse(3) max 1
+    // Always-on task-metric listener. Per-query task counts in the
+    // artifact (VERDICT r13 #7) make serial-by-design (the decode
+    // family's zero-exchange map law over a one-split scan)
+    // distinguishable from serial-by-bug (a one-split scan feeding heavy
+    // map work) without jstack archaeology. Per-query spill and shuffle
+    // bytes tell a spill knee (per-partition bytes outgrew execution
+    // memory; fix = partitions ∝ data) from an algorithmic term (work
+    // grew super-linearly; fix = the plan). The last repeat of each query
+    // is bracketed by deterministic listenerBus.waitUntilEmpty drains, so
+    // each recorded delta is exactly one run — no trailing-task bleed, no
+    // summing across repeats. A few AtomicLong adds per task end — no
+    // measurable cost next to a task's own overhead.
+    val taskCount = new TaskCountListener
+    spark.sparkContext.addSparkListener(taskCount)
     // Optional isolation filter (comma-separated query names): lets a
     // fresh JVM time a suspect query without the preceding sweeps. Any
     // DECLARED query can be isolated (not just headline names), and an
     // unknown name fails loudly — a typo must not produce a passing-
     // looking empty run.
-    // SPARK_GRAFT_BENCH_SPILL=1 attributes cumulative task metrics (memory/
-    // disk spill, shuffle bytes) to each query by before/after delta — the
-    // scale probes need to tell a spill knee (per-partition bytes outgrew
-    // execution memory; fix = partitions ∝ data) from an algorithmic term
-    // (work grew super-linearly; fix = the plan). Each iteration brackets
-    // its snapshots with a deterministic listenerBus.waitUntilEmpty drain,
-    // so the recorded delta is exactly one run's bytes — no trailing-task
-    // bleed, no summing across repeats.
-    val spillOn = sys.env.get("SPARK_GRAFT_BENCH_SPILL").contains("1")
-    val spill = new SpillListener
-    if (spillOn) spark.sparkContext.addSparkListener(spill)
-    // Always-on task counter (VERDICT r13 #7): per-query task counts in
-    // the artifact make serial-by-design (the decode family's
-    // zero-exchange map law over a one-split scan) distinguishable from
-    // serial-by-bug (a one-split scan feeding heavy map work) without
-    // jstack archaeology. One AtomicLong increment per task end — no
-    // measurable cost next to a task's own overhead.
-    val taskCount = new TaskCountListener
-    spark.sparkContext.addSparkListener(taskCount)
     val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
     val selected = only match {
@@ -250,15 +238,13 @@ object Bench {
           graft.queries.Q.releaseMaterialized(spark)
         }
         val times = (1 to repeat).map { i =>
-          // Spill attribution snapshots PER ITERATION and records the last
-          // iteration's delta: the queries are deterministic (same bytes
-          // every repeat), so this is per-RUN bytes — the old per-query
-          // delta spanned all repeats and reported repeat× the real spill.
+          // Task-metric attribution records the last iteration's delta:
+          // the queries are deterministic (same bytes every repeat), so
+          // this is per-RUN bytes, not repeat× the real spill.
           var approx = false
           val last = i == repeat
           if (last) approx ||= !drainBus()
-          val before = if (spillOn && last) spill.snapshot() else null
-          val tasksBefore = if (last) taskCount.tasks else 0L
+          val before = if (last) taskCount.snapshot() else null
           val t0 = System.nanoTime()
           val ok =
             try {
@@ -273,8 +259,8 @@ object Bench {
           val dt = if (ok) (System.nanoTime() - t0) / 1e9 else -1.0
           if (last) {
             approx ||= !drainBus()
-            taskRows(name) = taskCount.tasks - tasksBefore
-            if (spillOn) spillRows(name) = spill.deltaJson(before, approx)
+            taskRows(name) = taskCount.tasks - before(0)
+            spillRows(name) = taskCount.spillJson(before, approx)
           }
           // Per-repeat release of the dead materialized frames (round 14,
           // guide §5 "unpersist when done" — see Q.releaseMaterialized):
@@ -421,11 +407,8 @@ object Bench {
     val band = """{"per_query_pct":9,"total_pct":11,""" +
       """"rule":"totals outside the band of the prior round's """ +
       """like-for-like sum get one quiet-box re-run before becoming the record"}"""
-    val spillField =
-      if (spillOn)
-        spillRows.map { case (k, v) => "\"" + k + "\":" + v }
-          .mkString(""""spill":{""", ",", "},")
-      else ""
+    val spillField = spillRows.map { case (k, v) => "\"" + k + "\":" + v }
+      .mkString(""""spill":{""", ",", "},")
     // Run provenance IN the artifact (round-10 lesson #2: a contaminated
     // record is only adjudicable if the record says what the box was
     // doing): loadavg before/after the timed sweeps plus the kernel's
@@ -560,23 +543,19 @@ object Bench {
     }
   }
 
-  /** Cumulative task-end counter (thread-safe; see SpillListener). */
-  private[graft] final class TaskCountListener extends SparkListener {
-    private val n = new java.util.concurrent.atomic.AtomicLong
-    override def onTaskEnd(te: SparkListenerTaskEnd): Unit = n.incrementAndGet()
-    def tasks: Long = n.get
-  }
-
-  /** Cumulative task-metric totals (thread-safe: onTaskEnd fires on the
-    * listener-bus thread while the bench thread snapshots).
+  /** Cumulative task-end count and task-metric totals (thread-safe:
+    * onTaskEnd fires on the listener-bus thread while the bench thread
+    * snapshots).
     */
-  private final class SpillListener extends SparkListener {
+  private[graft] final class TaskCountListener extends SparkListener {
     import java.util.concurrent.atomic.AtomicLong
+    private val n = new AtomicLong
     private val memSpill = new AtomicLong
     private val diskSpill = new AtomicLong
     private val shufWrite = new AtomicLong
     private val shufRead = new AtomicLong
     override def onTaskEnd(te: SparkListenerTaskEnd): Unit = {
+      n.incrementAndGet()
       val m = te.taskMetrics
       if (m != null) {
         memSpill.addAndGet(m.memoryBytesSpilled)
@@ -585,10 +564,12 @@ object Bench {
         shufRead.addAndGet(m.shuffleReadMetrics.totalBytesRead)
       }
     }
+    def tasks: Long = n.get
+    /** (tasks, memory spill, disk spill, shuffle write, shuffle read). */
     def snapshot(): Array[Long] =
-      Array(memSpill.get, diskSpill.get, shufWrite.get, shufRead.get)
-    def deltaJson(before: Array[Long], approx: Boolean = false): String = {
-      val d = snapshot().zip(before).map { case (a, b) => a - b }
+      Array(n.get, memSpill.get, diskSpill.get, shufWrite.get, shufRead.get)
+    def spillJson(before: Array[Long], approx: Boolean): String = {
+      val d = snapshot().zip(before).map { case (a, b) => a - b }.drop(1)
       def gb(x: Long): String =
         String.format(java.util.Locale.ROOT, "%.2f", Double.box(x / 1e9))
       // approx=true: a listener-bus drain timed out around this row's

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev tool: dump formatted physical plans for declared queries.
   * Usage: runMain graft.Explain [sfDir] [queryName...]  (default: all)
   */
@@ -11,14 +9,8 @@ object Explain {
     val names =
       if (args.length > 1) args.drop(1).toSeq
       else SparkEntry.queries.keys.toSeq.sorted
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Sessions.local("graft-explain")
     spark.sparkContext.setLogLevel("ERROR")
-    Sessions.quietBoundedWindowWarn()
     names.foreach { n =>
       println(s"\n========== $n ==========")
       SparkEntry.queries(n)(spark, sfDir).explain("formatted")

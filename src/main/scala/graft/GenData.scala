@@ -292,15 +292,7 @@ object GenData {
   def main(args: Array[String]): Unit = {
     require(args.length == 2 || args.length == 3,
       "usage: GenData <outDir> <sf> [onlyTable1,onlyTable2]")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-gendata")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.local("graft-gendata")
     try {
       if (args.length == 3)
         generateOnly(spark, args(0), args(1).toDouble,

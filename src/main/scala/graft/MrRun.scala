@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 import graft.apps.AppRegistry
 import graft.engine.MapReduce
 
@@ -33,6 +31,10 @@ object MrRun {
       }
     }
     val sequential = args.contains("--sequential")
+    ioError(inputGlob, outDir).foreach { msg =>
+      System.err.println(s"error: $msg")
+      sys.exit(2)
+    }
 
     if (sequential) {
       val lines = MapReduce.runSequential(app, MapReduce.globPaths(inputGlob))
@@ -45,18 +47,25 @@ object MrRun {
           .getBytes(java.nio.charset.StandardCharsets.UTF_8))
       println(s"[mr] sequential ${app.name}: ${lines.size} groups -> $outDir/mr-out-0")
     } else {
-      val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-      val spark = SparkSession.builder()
-        .master(s"local[$cpus]")
-        .appName(s"graft-mr-${app.name}")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-      spark.sparkContext.setLogLevel("WARN")
-      Sessions.quietBoundedWindowWarn()
+      val spark = Sessions.local(s"graft-mr-${app.name}")
       MapReduce.runToText(spark, app, inputGlob, outDir, nReduce)
       println(s"[mr] distributed ${app.name}: nReduce=$nReduce -> $outDir")
       spark.stop()
     }
+  }
+
+  /** The input/output error both modes share, checked before any session
+    * starts: a glob that matches no file (Hadoop glob syntax, as the
+    * distributed scan reads it) or an output path that already exists.
+    */
+  def ioError(inputGlob: String, outDir: String): Option[String] = {
+    val conf = new org.apache.hadoop.conf.Configuration
+    val glob = new org.apache.hadoop.fs.Path(inputGlob)
+    val out = new org.apache.hadoop.fs.Path(outDir)
+    if (Option(glob.getFileSystem(conf).globStatus(glob)).forall(_.isEmpty))
+      Some(s"input glob '$inputGlob' matches no files")
+    else if (out.getFileSystem(conf).exists(out))
+      Some(s"output directory '$outDir' already exists")
+    else None
   }
 }

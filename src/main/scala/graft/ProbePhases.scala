@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev measurement tool (optimization round): split one declared query's
   * wall clock into CONSTRUCT (builder runs, incl. any construction-time
   * actions like convergence loops), PLAN (queryExecution.executedPlan
@@ -18,16 +16,7 @@ object ProbePhases {
     val name = args(0)
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
     val reps = if (args.length > 2) args(2).toInt else 3
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    Sessions.quietBoundedWindowWarn()
+    val spark = Sessions.local("graft-probe-phases")
     val fn = SparkEntry.queries(name)
     def t[A](body: => A): (Double, A) = {
       val t0 = System.nanoTime(); val a = body

@@ -1,9 +1,43 @@
 package graft
 
-/** Session-level logging posture shared by every entry point (Verify,
-  * Bench, the CLIs, the test base).
+import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
+
+/** The one session recipe shared by every entry point (the CLIs, Verify,
+  * Bench, the test base), so they get the same configuration by
+  * construction.
   */
 object Sessions {
+
+  /** Local-mode cores: `SPARK_GRAFT_CPUS`, else every available processor. */
+  def cpus: Int = sys.env.get("SPARK_GRAFT_CPUS").flatMap(_.toIntOption)
+    .filter(_ > 0).getOrElse(Runtime.getRuntime.availableProcessors)
+
+  /** `local[cpus]` with one shuffle partition per core, UTC, no UI, WARN
+    * logging. AQE is Spark 4's default, so it is not set here. The caller's
+    * `conf` pairs are applied last and win (`spark.master` included).
+    */
+  def local(app: String, conf: (String, String)*): SparkSession = {
+    val n = cpus.toString
+    val builder = SparkSession.builder()
+      .master(s"local[$n]")
+      .appName(app)
+      .config("spark.sql.shuffle.partitions", n)
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.ui.enabled", "false")
+    val (extensions, rest) = conf.partition(_._1 == "spark.sql.extensions")
+    rest.foreach { case (k, v) => builder.config(k, v) }
+    // Spark reads `spark.sql.extensions` from the SparkContext's conf, so a
+    // session built on an already running context (the test JVM's shared
+    // one) would drop it; applied here, it holds on a fresh context too.
+    extensions.flatMap(_._2.split(",")).foreach { c =>
+      builder.withExtensions(Class.forName(c.trim).getDeclaredConstructor()
+        .newInstance().asInstanceOf[SparkSessionExtensions => Unit])
+    }
+    val spark = builder.getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    quietBoundedWindowWarn()
+    spark
+  }
 
   /** Silence WindowExec's "No Partition Defined" WARN.
     *

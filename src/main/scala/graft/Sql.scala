@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Ad-hoc SQL CLI over the engine: builds a session with GraftExtensions
   * (native fnv1a32 / arr_dot available in SQL), registers every testdata
   * table as a temp view, runs the given statement, prints the result.
@@ -16,17 +14,8 @@ object Sql {
     }
     val sfDir = args.head
     val sql = args.drop(1).mkString(" ")
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")}]")
-      .appName("graft-sql")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .withExtensions(new graft.functions.GraftExtensions)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    Sessions.quietBoundedWindowWarn()
+    val spark = Sessions.local("graft-sql",
+      "spark.sql.extensions" -> classOf[graft.functions.GraftExtensions].getName)
     queries.Tables.names.foreach { n =>
       try queries.Tables.t(spark, sfDir, n).createOrReplaceTempView(n)
       catch {

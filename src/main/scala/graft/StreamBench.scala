@@ -2,7 +2,7 @@ package graft
 
 import java.sql.Timestamp
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.streaming.StreamingQuery
 
@@ -68,7 +68,6 @@ object StreamBench {
       stateRowsMid: Long, stateRowsEnd: Long, stateBytesEnd: Long)
 
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val perBatch = sys.env.get("SPARK_GRAFT_STREAM_ROWS")
       .flatMap(_.toIntOption).getOrElse(20000)
     // Cadence knob for the throughput-attribution pass: the same total
@@ -79,17 +78,9 @@ object StreamBench {
     // proportion to the batch count).
     val batches = sys.env.get("SPARK_GRAFT_STREAM_BATCHES")
       .flatMap(_.toIntOption).getOrElse(5)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-stream-bench")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.streaming.stateStore.providerClass",
+    val spark = Sessions.local("graft-stream-bench",
+      "spark.sql.streaming.stateStore.providerClass" ->
         "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    Sessions.quietBoundedWindowWarn()
     implicit val sql: org.apache.spark.sql.SQLContext = spark.sqlContext
     import spark.implicits._
 

@@ -1,7 +1,9 @@
 package graft.engine
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.SparkSession
 
 /** Spark-native restatement of the reference MapReduce runtime
   * (src/mr/worker.go + src/mr/coordinator.go), pipeline
@@ -42,14 +44,21 @@ object MapReduce {
     */
   def run(spark: SparkSession, app: MRApp, inputGlob: String,
           nReduce: Int = 10, minMapTasks: Int = 2): RDD[(String, String)] =
-    spark.sparkContext
+    shuffleReduce(app, nReduce, spark.sparkContext
       .wholeTextFiles(inputGlob, minMapTasks)
       .flatMap { case (file, contents) =>
         // wholeTextFiles yields URIs (file:/...); apps see plain paths like
         // the reference's os.Args file names (src/main/mrcoordinator.go:23).
         app.map(plainPath(file), contents).map(kv => (kv.key, kv.value))
-      }
-      .groupByKey(new FnvPartitioner(nReduce))
+      })
+
+  /** The tail [[run]] and [[runLines]] share: the mapped pairs cross the
+    * FNV shuffle into nReduce partitions and each key's full value list
+    * goes to one `reduce` call.
+    */
+  private def shuffleReduce(app: MRApp, nReduce: Int,
+      pairs: RDD[(String, String)]): RDD[(String, String)] =
+    pairs.groupByKey(new FnvPartitioner(nReduce))
       .map { case (k, vs) => (k, app.reduce(k, vs.toSeq)) }
 
   private def plainPath(uri: String): String =
@@ -79,7 +88,7 @@ object MapReduce {
   def runLines(spark: SparkSession, app: MRApp, inputGlob: String,
                nReduce: Int = 10): RDD[(String, String)] = {
     import org.apache.spark.sql.functions.{col, input_file_name}
-    spark.read.text(inputGlob)
+    shuffleReduce(app, nReduce, spark.read.text(inputGlob)
       .select(input_file_name().as("file"), col("value"))
       .rdd
       .mapPartitions { rows =>
@@ -90,9 +99,7 @@ object MapReduce {
           if (uri != lastUri) { lastUri = uri; lastPath = plainPath(uri) }
           app.map(lastPath, r.getString(1)).map(kv => (kv.key, kv.value))
         }
-      }
-      .groupByKey(new FnvPartitioner(nReduce))
-      .map { case (k, vs) => (k, app.reduce(k, vs.toSeq)) }
+      })
   }
 
   /** Map-side-combinable fast path for algebraic reducers (associative +
@@ -119,13 +126,6 @@ object MapReduce {
     run(spark, app, inputGlob, nReduce)
       .map { case (k, v) => s"$k $v" }
       .saveAsTextFile(outDir)
-
-  /** DataFrame face of [[run]] — schema `(key string, value string)`. */
-  def runToDF(spark: SparkSession, app: MRApp, inputGlob: String,
-              nReduce: Int = 10): DataFrame = {
-    import spark.implicits._
-    run(spark, app, inputGlob, nReduce).toDF("key", "value")
-  }
 
   /** Single-process sequential oracle, mirroring src/main/mrsequential.go:25-87:
     * read every file → map → global sort by key → group runs → reduce →
@@ -158,12 +158,5 @@ object MapReduce {
     try stream.iterator().asScala.toSeq
       .filter(f => matcher.matches(f.getFileName)).sortBy(_.toString)
     finally stream.close()
-  }
-
-  private implicit class IterAsScala[A](it: java.util.Iterator[A]) {
-    def asScala: Iterator[A] = new Iterator[A] {
-      def hasNext: Boolean = it.hasNext
-      def next(): A = it.next()
-    }
   }
 }

@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 
 import graft.functions.Hashing
-import graft.state.{KvOp, KvRsmMachine, KvStateMachine, KvTypes, Rsm, RsmEntry}
+import graft.state.{KvBatch, KvOp, KvRsmMachine, KvTypes, Rsm, RsmEntry}
 
 /** Engine-level operators exposed as queries: the FNV shard router (S6) via
   * the native Catalyst expression, and the versioned-KV CAS replay (S1/S2)
@@ -42,12 +42,13 @@ object EngineOps {
     "Versioned-KV CAS replay (S1/S2 spec, src/kvsrv1/rpc/rpc.go:19-39): " +
       "events become an ordered Put log per user — non-error events carry " +
       "the correct expected version (count of prior non-error ops), error " +
-      "events carry a poisoned version and must be rejected. ONE shuffle " +
-      "with a SECONDARY SORT: repartition by user + in-partition sort on " +
-      "(user, event_id) delivers each user's log as a contiguous ordered " +
-      "run that STREAMS through the CAS fold — no per-user " +
-      "materialization, so a pathologically hot user spills in the sort " +
-      "instead of blowing the heap (round 2 held each history in a Seq). " +
+      "events carry a poisoned version and must be rejected. The log is " +
+      "replayed by KvBatch.replay, ONE shuffle with a SECONDARY SORT: the " +
+      "version window's user-keyed exchange is reused by the replay's " +
+      "repartition, and the in-partition sort on (user, event_id) delivers " +
+      "each user's log as a contiguous ordered run that STREAMS through " +
+      "the CAS fold — no per-user materialization, so a pathologically " +
+      "hot user spills in the sort instead of blowing the heap. " +
       "The oracle is the closed form the deterministic log implies. Scales " +
       "per-key with no cross-key coordination — the state-store sharding " +
       "contract.",
@@ -62,24 +63,21 @@ object EngineOps {
       GROUP BY user_id""".stripMargin),
     (spark, dir) => {
       import spark.implicits._
-      t(spark, dir, "events")
-        .select(col("event_id"), col("user_id"), col("event_type"))
-        .as[(Long, Long, String)]
-        .repartition(col("user_id"))
-        .sortWithinPartitions(col("user_id"), col("event_id"))
-        .mapPartitions(it =>
-          graft.engine.SortedRuns.fold(it,
-            (r: (Long, Long, String)) => r._2) { (uid, run) =>
-            var priorOk = 0L
-            val ops = run.map { case (eid, _, etype) =>
-              val version = if (etype == "error") 999999999L else priorOk
-              if (etype != "error") priorOk += 1
-              KvOp(uid.toString, eid.toString, version, retried = false,
-                seq = eid)
-            }
-            KvStateMachine.replayKey(uid.toString, ops)
-          })
-        .toDF()
+      // Expected version of a non-error op = its user's prior non-error
+      // ops; partitioned by the replay's own key, so the replay's
+      // repartition reuses this exchange.
+      val w = Window.partitionBy(col("key")).orderBy(col("seq"))
+        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+      val ops = t(spark, dir, "events")
+        .select(col("user_id").cast("string").as("key"),
+          col("event_id").as("seq"),
+          when(col("event_type") === "error", 0L).otherwise(1L).as("ok"))
+        .select(col("key"), col("seq").cast("string").as("value"),
+          when(col("ok") === 1L, sum(col("ok")).over(w) - 1L)
+            .otherwise(999999999L).as("version"),
+          lit(false).as("retried"), col("seq"))
+        .as[KvOp]
+      KvBatch.replay(spark, ops).toDF()
         .select(col("key").cast("long").as("key"), col("value"),
           col("version"), col("nApplied").as("n_applied"),
           col("nRejected").as("n_rejected"))

@@ -1048,9 +1048,10 @@ object TextOps {
     * pair frame, while the full recount's explode is trivial at that
     * scale — the loop is job-launch-bound, exactly the round-10 BPE
     * attribution. The delta wins where the recount's per-round explode
-    * is the cost — measured at a 2M-distinct-word corpus (the synthetic
-    * GenHiVocab table, ~10M adjacent-pair occurrences per recount;
-    * same-session pairs under comparable calibration 8.5-11.1 s): full
+    * is the cost — measured at a 2M-distinct-word corpus (a synthetic
+    * documents table of base-36 words, 200 per doc, ~10M adjacent-pair
+    * occurrences per recount; same-session pairs under comparable
+    * calibration 8.5-11.1 s; PLANS.md, round 12): full
     * recount 243.5 s, delta 139.8 s with union+re-aggregate counts
     * merging, 128.2 s with the FULL-OUTER JOIN merge below (the counts
     * frame keeps its hash partitioning across the per-round checkpoint,
@@ -1058,7 +1059,7 @@ object TextOps {
     * recount, widening with vocabulary since late-round deltas shrink
     * toward single words while the recount stays vocabulary-sized every
     * round. The round-13 sweep closed ADVICE r12's unmeasured band by
-    * walking the gate's whole domain (GenHiVocab corpora, paired runs
+    * walking the gate's whole domain (probe_bpe_gate_r13.json; paired runs
     * under comparable in-artifact calibration, this box): delta wins
     * 1.73x at 96k vocab (116.4 vs 67.4 s), 1.95x at 256k (179.0 vs
     * 91.7), 2.03x at 1M (217.7 vs 107.1), 1.9x at 2M (r12) — i.e. the

@@ -72,6 +72,19 @@ class BenchHeadlineSpec extends AnyFunSuite {
         spark.sparkContext, 30000L)
       assert(l.tasks - before == parts,
         s"expected exactly $parts task ends, got ${l.tasks - before}")
+      // The same listener carries the spill/shuffle columns: a map-only
+      // job writes no shuffle bytes, a job with an exchange does.
+      def shuffleWritten(job: => Unit): Long = {
+        val b = l.snapshot()(3)
+        job
+        org.apache.spark.GraftSparkShim.waitListenerBusEmpty(
+          spark.sparkContext, 30000L)
+        l.snapshot()(3) - b
+      }
+      assert(shuffleWritten(spark.range(0, 1000, 1, parts)
+        .write.format("noop").mode("overwrite").save()) == 0L)
+      assert(shuffleWritten(spark.range(0, 1000, 1, parts)
+        .repartition(3).write.format("noop").mode("overwrite").save()) > 0L)
     } finally spark.sparkContext.removeSparkListener(l)
   }
 

@@ -12,17 +12,19 @@ class ExtensionsSpec extends AnyFunSuite {
   test("fnv1a32, arr_dot, rolling_hash31, md5_lanes, cdc_cuts callable from SQL via GraftExtensions") {
     // Extensions bind at session build; getOrCreate would return the shared
     // test session without them. Clear the default/active session so the
-    // builder constructs a fresh one (reusing the JVM's SparkContext), then
+    // recipe constructs a fresh one (reusing the shared test session's
+    // SparkContext, built first so this suite never sets its master), then
     // restore the shared session for later suites.
-    val prior = SparkSession.getDefaultSession
+    val prior = SparkTestBase.spark
     SparkSession.clearActiveSession()
     SparkSession.clearDefaultSession()
     try {
-      val spark = SparkSession.builder()
-        .master("local[2]")
-        .config("spark.ui.enabled", "false")
-        .withExtensions(new GraftExtensions)
-        .getOrCreate()
+      val spark = Sessions.local("graft-extensions",
+        "spark.sql.extensions" -> classOf[GraftExtensions].getName)
+      // The recipe's session settings hold on the fresh session too.
+      assert(spark.conf.get("spark.sql.session.timeZone") == "UTC")
+      assert(spark.conf.get("spark.sql.shuffle.partitions") ==
+        Sessions.cpus.toString)
       val hash = spark.sql("SELECT fnv1a32('foobar')").collect().head.getLong(0)
       assert(hash == Fnv1a.hash32("foobar"))
       val dot = spark.sql(
@@ -50,10 +52,8 @@ class ExtensionsSpec extends AnyFunSuite {
         .toLongArray().toSeq)
       assert(cuts.nonEmpty && cuts.forall(c => c >= 8 && c <= text.length))
     } finally {
-      prior.foreach { s =>
-        SparkSession.setDefaultSession(s)
-        SparkSession.setActiveSession(s)
-      }
+      SparkSession.setDefaultSession(prior)
+      SparkSession.setActiveSession(prior)
     }
   }
 

@@ -44,15 +44,7 @@ object SparkTestBase {
   // local[4,2]: 4 threads, maxFailures=2 — lets CrashRecoverySpec inject a
   // first-attempt task failure (the reference's crash suite, E11) without
   // failing the job; harmless for every other suite.
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4,2]")
-      .appName("graft-tests")
-      .config("spark.sql.shuffle.partitions", stressPartitions)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    Sessions.quietBoundedWindowWarn()
-    s
-  }
+  lazy val spark: SparkSession = Sessions.local("graft-tests",
+    "spark.master" -> "local[4,2]",
+    "spark.sql.shuffle.partitions" -> stressPartitions)
 }

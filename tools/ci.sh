@@ -11,9 +11,10 @@
 #                                       DeterminismSpec's layout sweep at
 #                                       3/17/200 shuffle partitions (200 =
 #                                       the stock cluster default)
-#   2. tools/stress.sh N              — N repeat-suite trials, varied
+#   2. python3 perfbench/test_run.py  — the benchmark harness's own tests
+#   3. tools/stress.sh N              — N repeat-suite trials, varied
 #                                       layouts/seeds/arrival orders
-#   3. Verify+DuckDB oracle sweep at sf0.01 under each materialization
+#   4. Verify+DuckDB oracle sweep at sf0.01 under each materialization
 #      posture: localCheckpoint (default), persist, checkpoint
 set -uo pipefail
 cd "$(dirname "$0")/.."
@@ -29,6 +30,15 @@ if sbt -batch test >/tmp/graft_ci_test.log 2>&1; then
 else
   tail -20 /tmp/graft_ci_test.log
   record "sbt test" FAIL
+fi
+
+echo "=== ci: benchmark tests ==="
+if python3 perfbench/test_run.py >/tmp/graft_ci_perfbench.log 2>&1; then
+  tail -3 /tmp/graft_ci_perfbench.log
+  record "perfbench tests" PASS
+else
+  tail -20 /tmp/graft_ci_perfbench.log
+  record "perfbench tests" FAIL
 fi
 
 echo "=== ci: stress x$TRIALS ==="

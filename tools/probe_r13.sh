@@ -50,7 +50,7 @@ run() { # run <sfdir> <partitions> <query> <out> <extra_java_opts>
   GRAFT_CLASSES="$FROZEN" EXTRA_JAVA_OPTS="$5" \
   SPARK_GRAFT_SF_DIR=$1 SPARK_GRAFT_CPUS=32 SPARK_DRIVER_MEM=96g \
   SPARK_GRAFT_SHUFFLE_PARTITIONS=$2 SPARK_GRAFT_BENCH_REPEAT=1 \
-  SPARK_GRAFT_BENCH_SPILL=1 SPARK_GRAFT_BENCH_ONLY="$3" BENCH_OUT="$4" \
+  SPARK_GRAFT_BENCH_ONLY="$3" BENCH_OUT="$4" \
     tools/run_main.sh graft.Bench > "/tmp/${base}.log" 2>&1
   kill "$pollpid" 2>/dev/null || true
   echo "--- $4 (min free disk: $(sort -t' ' -k2 -V "$poll" | head -1))"

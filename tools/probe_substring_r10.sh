@@ -5,8 +5,8 @@
 # g30 leg:
 #   - partitions ∝ data: g30 runs at 768 and 1536 so per-partition
 #     explosion bytes stay at/below the g10@256 level that was linear;
-#   - spill counters ON (SPARK_GRAFT_BENCH_SPILL=1, the new Bench
-#     listener): the artifact itself now says whether executors spilled.
+#   - spill counters (Bench's always-on task-metric listener): the
+#     artifact itself says whether executors spilled.
 # Like-for-like discipline: g10 baseline re-measured same-session,
 # same box, solo legs via tools/run_main.sh.
 #
@@ -19,7 +19,7 @@ G30=/root/repo/probe/g30
 run() { # run <sfdir> <partitions> <repeat> <out>
   SPARK_GRAFT_SF_DIR=$1 SPARK_GRAFT_CPUS=32 SPARK_DRIVER_MEM=96g \
   SPARK_GRAFT_SHUFFLE_PARTITIONS=$2 SPARK_GRAFT_BENCH_REPEAT=$3 \
-  SPARK_GRAFT_BENCH_ONLY=dedup_substring SPARK_GRAFT_BENCH_SPILL=1 \
+  SPARK_GRAFT_BENCH_ONLY=dedup_substring \
   BENCH_OUT="$4" \
     tools/run_main.sh graft.Bench > "/tmp/$(basename "$4" .json).log" 2>&1
   tail -1 "/tmp/$(basename "$4" .json).log" | cut -c1-600
