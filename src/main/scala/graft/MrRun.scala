@@ -55,16 +55,14 @@ object MrRun {
   }
 
   /** The input/output error both modes share, checked before any session
-    * starts: a glob that matches no file (Hadoop glob syntax, as the
-    * distributed scan reads it) or an output path that already exists.
+    * starts: a glob that matches no file ([[MapReduce.globPaths]], the
+    * files both modes read) or an output path that already exists.
     */
   def ioError(inputGlob: String, outDir: String): Option[String] = {
-    val conf = new org.apache.hadoop.conf.Configuration
-    val glob = new org.apache.hadoop.fs.Path(inputGlob)
     val out = new org.apache.hadoop.fs.Path(outDir)
-    if (Option(glob.getFileSystem(conf).globStatus(glob)).forall(_.isEmpty))
+    if (MapReduce.globPaths(inputGlob).isEmpty)
       Some(s"input glob '$inputGlob' matches no files")
-    else if (out.getFileSystem(conf).exists(out))
+    else if (out.getFileSystem(new org.apache.hadoop.conf.Configuration).exists(out))
       Some(s"output directory '$outDir' already exists")
     else None
   }

@@ -12,9 +12,10 @@ object Sessions {
   def cpus: Int = sys.env.get("SPARK_GRAFT_CPUS").flatMap(_.toIntOption)
     .filter(_ > 0).getOrElse(Runtime.getRuntime.availableProcessors)
 
-  /** `local[cpus]` with one shuffle partition per core, UTC, no UI, WARN
-    * logging. AQE is Spark 4's default, so it is not set here. The caller's
-    * `conf` pairs are applied last and win (`spark.master` included).
+  /** `local[cpus]` with one shuffle partition per core, UTC and no UI (the
+    * WARN root level comes from `log4j2.properties`). AQE is Spark 4's
+    * default, so it is not set here. The caller's `conf` pairs are applied
+    * last and win (`spark.master` included).
     */
   def local(app: String, conf: (String, String)*): SparkSession = {
     val n = cpus.toString
@@ -34,7 +35,6 @@ object Sessions {
         .newInstance().asInstanceOf[SparkSessionExtensions => Unit])
     }
     val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
     quietBoundedWindowWarn()
     spark
   }

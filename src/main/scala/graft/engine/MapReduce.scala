@@ -1,7 +1,5 @@
 package graft.engine
 
-import scala.jdk.CollectionConverters._
-
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.SparkSession
 
@@ -147,16 +145,20 @@ object MapReduce {
       .map { case (k, kvs) => s"$k ${app.reduce(k, kvs.map(_.value))}" }
   }
 
-  /** Expands a glob like `/dir/pg-*.txt` into sorted paths (driver-side). */
+  /** Expands a glob into the sorted local paths of the files it names,
+    * with the same Hadoop glob the distributed scan (`wholeTextFiles`)
+    * reads: any component may hold a wildcard, a matched directory gives
+    * its files, and names starting with `_` or `.` are skipped.
+    */
   def globPaths(glob: String): Seq[java.nio.file.Path] = {
-    val p = java.nio.file.Paths.get(glob)
-    // A bare relative glob ("pg-*.txt") has no parent: list the cwd.
-    val dir = Option(p.getParent).getOrElse(java.nio.file.Paths.get("."))
-    val matcher = java.nio.file.FileSystems.getDefault
-      .getPathMatcher("glob:" + p.getFileName.toString)
-    val stream = java.nio.file.Files.list(dir)
-    try stream.iterator().asScala.toSeq
-      .filter(f => matcher.matches(f.getFileName)).sortBy(_.toString)
-    finally stream.close()
+    val pattern = new org.apache.hadoop.fs.Path(glob)
+    val fs = pattern.getFileSystem(new org.apache.hadoop.conf.Configuration)
+    val visible: org.apache.hadoop.fs.PathFilter =
+      p => !p.getName.startsWith("_") && !p.getName.startsWith(".")
+    Option(fs.globStatus(pattern, visible)).toSeq.flatten
+      .flatMap(s => if (s.isDirectory) fs.listStatus(s.getPath, visible).toSeq else Seq(s))
+      .filter(_.isFile)
+      .map(s => java.nio.file.Paths.get(s.getPath.toUri))
+      .sortBy(_.toString)
   }
 }

@@ -12,9 +12,11 @@
 #                                       3/17/200 shuffle partitions (200 =
 #                                       the stock cluster default)
 #   2. python3 perfbench/test_run.py  — the benchmark harness's own tests
-#   3. tools/stress.sh N              — N repeat-suite trials, varied
+#   3. tools/test_run_main.sh         — the class-data-sharing launcher:
+#                                       miss/hit, exit codes, key pruning
+#   4. tools/stress.sh N              — N repeat-suite trials, varied
 #                                       layouts/seeds/arrival orders
-#   4. Verify+DuckDB oracle sweep at sf0.01 under each materialization
+#   5. Verify+DuckDB oracle sweep at sf0.01 under each materialization
 #      posture: localCheckpoint (default), persist, checkpoint
 set -uo pipefail
 cd "$(dirname "$0")/.."
@@ -39,6 +41,15 @@ if python3 perfbench/test_run.py >/tmp/graft_ci_perfbench.log 2>&1; then
 else
   tail -20 /tmp/graft_ci_perfbench.log
   record "perfbench tests" FAIL
+fi
+
+echo "=== ci: launcher test ==="
+if tools/test_run_main.sh >/tmp/graft_ci_run_main.log 2>&1; then
+  tail -1 /tmp/graft_ci_run_main.log
+  record "launcher test" PASS
+else
+  tail -20 /tmp/graft_ci_run_main.log
+  record "launcher test" FAIL
 fi
 
 echo "=== ci: stress x$TRIALS ==="
