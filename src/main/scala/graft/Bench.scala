@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
-import org.apache.spark.sql.SparkSession
 
 /** Benchmark main (driver contract): runs the headline queries on
   * SPARK_GRAFT_SF_DIR, prints ONE JSON line
@@ -72,63 +71,9 @@ object Bench {
     "src_deletion_vectors", "src_metadata_count", "src_restore",
     "src_bloom_point_read")
 
-  /** Fixed-shape calibration plan (round-11 ask #2): three consecutive
-    * rounds of judges re-ran benches to dismiss ambient noise the artifact
-    * could not explain by itself — the calibration ledger measured ~2.7×
-    * cross-session drift on identical code. This query is the in-artifact
-    * yardstick: deterministic (xxhash64 of a range — no data files, no
-    * sfDir dependence), CPU+shuffle balanced (64M hashes map-side, a
-    * ~9M-distinct-key exchange, sum/count aggregate), pinned to its own
-    * shuffle width (64) so a probe's 2560-partition session conf can't
-    * change its shape, and FROZEN — BenchCalibrationSpec pins the exact
-    * aggregate checksum, so any edit to this plan fails the build instead
-    * of silently moving the yardstick. It runs untimed-then-timed at sweep
-    * start and timed again at sweep end; cross-round comparisons divide
-    * wall times through calibration_sec to cancel box state.
-    */
-  def calibrationDf(spark: SparkSession): org.apache.spark.sql.DataFrame =
-    spark.range(0L, 64L * 1000 * 1000, 1L, 32)
-      // The 32-bit mask keeps every group sum (and the spec's global
-      // checksum) far from Long overflow — Spark 4 runs ANSI by default,
-      // where an overflowing sum() THROWS instead of wrapping.
-      .selectExpr("xxhash64(id) & 4294967295 AS h",
-        "pmod(xxhash64(id, 7L), 9000000L) AS k")
-      .groupBy("k")
-      .agg(org.apache.spark.sql.functions.sum("h").as("s"),
-        org.apache.spark.sql.functions.count(
-          org.apache.spark.sql.functions.lit(1)).as("n"))
-
-  /** One timed calibration run (seconds) under the frozen session shape. */
-  def calibrationSec(spark: SparkSession): Double = {
-    val conf = spark.conf
-    val savedParts = conf.get("spark.sql.shuffle.partitions")
-    val savedAqe = conf.get("spark.sql.adaptive.enabled")
-    conf.set("spark.sql.shuffle.partitions", "64")
-    conf.set("spark.sql.adaptive.enabled", "false")
-    try {
-      val t0 = System.nanoTime()
-      calibrationDf(spark).write.format("noop").mode("overwrite").save()
-      (System.nanoTime() - t0) / 1e9
-    } finally {
-      conf.set("spark.sql.shuffle.partitions", savedParts)
-      conf.set("spark.sql.adaptive.enabled", savedAqe)
-    }
-  }
-
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = Sessions.cpus
-    // Shuffle partitions default to the core count (right at the driver
-    // SFs), but MUST scale with data, not cores: at 10x the data a
-    // 32-partition shuffle gives every hash-aggregate task 10x the rows
-    // and the same task memory — the g10 probe OOM'd exactly there.
-    // AQE coalesces excess partitions when they're small, so a high
-    // count is safe at small SFs; this is the standard spill-aware
-    // sizing knob, surfaced for the scale probes.
-    val shufflePartitions =
-      sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTITIONS", cpus.toString)
-    val spark = Sessions.local("graft-bench",
-      "spark.sql.shuffle.partitions" -> shufflePartitions)
+    val spark = Sessions.local("graft-bench")
     // SPARK_GRAFT_LOG=INFO turns on per-job timing lines for
     // tools/profile_query.sh (the local-mode stand-in for the Spark UI's
     // stage timeline — the UI is off in every harness JVM). Default WARN.
@@ -214,170 +159,67 @@ object Bench {
             "[bench] listener bus still busy after 30 s; spill row approximate")
           false
       }
-    // Isolation-mode warm pass (round-11 "What's wrong #2"): a fresh JVM
-    // timing one query pays cold shared-builder materializations the full
-    // sweep amortizes across neighbors (dedup_keep_best: 5.2 s isolated vs
-    // 3.76 s in-sweep, same box, same hour) — an isolation number was NOT
-    // comparable to a sweep number. Default: run each isolated query once
-    // UNTIMED before the timed repeats, but only when repeat > 1 — the
-    // repeat=1 scale probes time a single multi-hour leg where a warm pass
-    // would double the wall clock, and they compare only against other
-    // probe legs run the same way. SPARK_GRAFT_BENCH_WARM=1/0 overrides;
-    // the artifact records which mode ran (isolation_warm in provenance).
-    val isolationWarm = sys.env.get("SPARK_GRAFT_BENCH_WARM") match {
-      case Some(v) => v == "1"
-      case None    => only.nonEmpty && repeat > 1
-    }
+    // Isolation-mode warm pass: a fresh JVM timing one query pays cold
+    // shared-builder materializations the full sweep amortizes across
+    // neighbors (dedup_keep_best: 5.2 s isolated vs 3.76 s in-sweep, same
+    // box, same hour). So an isolated query runs once UNTIMED before its
+    // timed repeats when repeat > 1; a repeat=1 run times a single cold
+    // pass. The artifact records which mode ran (isolation_warm).
+    val isolationWarm = only.nonEmpty && repeat > 1
     val taskRows = scala.collection.mutable.LinkedHashMap.empty[String, Long]
-    def sweep(): Seq[(String, Seq[Double])] =
-      selected.filter(queries.contains).map { name =>
-        if (isolationWarm) {
-          try queries(name)(spark, sfDir)
-            .write.format("noop").mode("overwrite").save()
-          catch { case _: Throwable => () } // timed pass reports the failure
-          graft.queries.Q.releaseMaterialized(spark)
-        }
-        val times = (1 to repeat).map { i =>
-          // Task-metric attribution records the last iteration's delta:
-          // the queries are deterministic (same bytes every repeat), so
-          // this is per-RUN bytes, not repeat× the real spill.
-          var approx = false
-          val last = i == repeat
-          if (last) approx ||= !drainBus()
-          val before = if (last) taskCount.snapshot() else null
-          val t0 = System.nanoTime()
-          val ok =
-            try {
-              queries(name)(spark, sfDir)
-                .write.format("noop").mode("overwrite").save()
-              true
-            } catch {
-              case e: Throwable =>
-                System.err.println(s"[bench] $name failed: ${e.getMessage}")
-                false
-            }
-          val dt = if (ok) (System.nanoTime() - t0) / 1e9 else -1.0
-          if (last) {
-            approx ||= !drainBus()
-            taskRows(name) = taskCount.tasks - before(0)
-            spillRows(name) = taskCount.spillJson(before, approx)
-          }
-          // Per-repeat release of the dead materialized frames (round 14,
-          // guide §5 "unpersist when done" — see Q.releaseMaterialized):
-          // every repeat re-builds every checkpointed frame from parquet,
-          // so the previous repeat's blocks are garbage the async
-          // cleaner only frees after a driver GC. Letting them pile up
-          // measured as a 4x calibration-yardstick slowdown across the
-          // sweep (6.95 s -> 28.2 s on the quiet r14 baseline box) that
-          // lands on whatever allocation-heavy queries run late — the
-          // r13 "32-core regression family" was exactly this. The
-          // release runs OUTSIDE the timed region and changes no query's
-          // computation: every timed run still computes from parquet.
-          graft.queries.Q.releaseMaterialized(spark)
-          // A failed query reports -1 (not its near-zero elapsed time) so
-          // the metric can't be silently flattered by fast failures.
-          dt
-        }
-        name -> (if (times.contains(-1.0)) Seq(-1.0) else times.sorted)
-      }
-
     val loadavgStart = loadavg()
-    // Calibration bracketing: one untimed pass (JIT/codegen) then the
-    // timed start measurement; the end measurement after the sweeps is
-    // equally warm, so start≈end on a steady box and start≠end convicts
-    // mid-sweep load drift in the artifact itself.
-    calibrationSec(spark)
-    val calStart = calibrationSec(spark)
-    var raw = sweep()
-    // Noise-band rule, now IN the runner (round-10 lesson: the official
-    // record shipped a 1.41× "regression" that was pure CI-session
-    // contamination, and the artifact's own mandated re-run never
-    // happened). For a FULL headline sweep, compare the like-for-like sum
-    // (shared query names, both sides succeeded) against the newest
-    // committed BENCH_r*.json (or SPARK_GRAFT_BENCH_PRIOR): if this sweep
-    // is more than the calibrated +11% band SLOWER, it is presumed
-    // ambient-load noise and the whole sweep re-runs once, the record
-    // taking the per-query min across both passes (a faster-than-band
-    // sweep is a code/data change, not contention — flagged, not re-run).
-    var rerunField = """"rerun":false"""
-    // Prior record resolved ONCE for both the noise-band re-run rule and
-    // the per-query vs_prior column (full sweeps only — an isolated
-    // subset's JIT/cache state is not sweep-comparable).
-    val priorInfo = if (only.isEmpty) priorTotals() else None
-    // Calibration ratio vs the prior record: a 1.5× slower box makes
-    // every query 1.5× slower INCLUDING the frozen yardstick, so
-    // dividing it out cancels box state. Records before round 12 carry
-    // no calibration → ratio 1 (unscaled, as before).
-    val priorCalRatio = priorInfo match {
-      case Some((_, _, Some(pc))) if pc > 0 && calStart > 0 => calStart / pc
-      case _ => 1.0
-    }
-    if (sys.env.get("SPARK_GRAFT_BENCH_NO_RERUN").isEmpty) {
-      priorInfo match {
-        case Some((priorPath, prior, _)) =>
-          def sharedSum(r: Seq[(String, Seq[Double])]): (Double, Double) = {
-            val shared = r.filter { case (n, ts) =>
-              ts.head > 0 && prior.get(n).exists(_ > 0) }
-            (shared.map(_._2.head).sum, shared.map(x => prior(x._1)).sum)
-          }
-          val (ours, rawTheirs) = sharedSum(raw)
-          // The band comparison applies the calibration ratio so box
-          // state divides out before the ±11% rule.
-          val calRatio = priorCalRatio
-          val theirs = rawTheirs * calRatio
-          if (theirs > 0 && ours > theirs * 1.11) {
-            System.err.println(
-              f"[bench] like-for-like total ${ours}%.1f s vs prior " +
-                f"${theirs}%.1f s ($priorPath) is outside the +11%% noise " +
-                "band: presuming ambient load, re-running the sweep once")
-            val second = sweep()
-            val byName = second.toMap
-            raw = raw.map { case (n, ts) =>
-              val merged = (ts ++ byName.getOrElse(n, Nil)).filter(_ >= 0)
-              n -> (if (merged.isEmpty) Seq(-1.0) else merged.sorted)
-            }
-            // prior_total is the prior record's OWN like-for-like sum (a
-            // number a reader can find in that record); the calibration-
-            // scaled comparand gets its own name (ADVICE r12: the old
-            // artifact stored the scaled value under prior_total, which
-            // appears in no prior record).
-            rerunField = """"rerun":true,"first_pass_total":""" + jf(ours) +
-              ""","prior_total":""" + jf(rawTheirs) +
-              ""","prior_total_scaled":""" + jf(theirs) +
-              ""","prior_cal_ratio":""" + jf(calRatio) +
-              ""","prior_record":"""" + priorPath + "\""
-          } else if (theirs > 0)
-            rerunField = """"rerun":false,"prior_total":""" + jf(rawTheirs) +
-              ""","prior_total_scaled":""" + jf(theirs) +
-              ""","prior_cal_ratio":""" + jf(calRatio) +
-              ""","prior_record":"""" + priorPath + "\""
-        case None => ()
+    val raw = selected.filter(queries.contains).map { name =>
+      if (isolationWarm) {
+        try queries(name)(spark, sfDir)
+          .write.format("noop").mode("overwrite").save()
+        catch { case _: Throwable => () } // timed pass reports the failure
+        graft.queries.Q.releaseMaterialized(spark)
       }
+      val times = (1 to repeat).map { i =>
+        // Task-metric attribution records the last iteration's delta:
+        // the queries are deterministic (same bytes every repeat), so
+        // this is per-RUN bytes, not repeat× the real spill.
+        var approx = false
+        val last = i == repeat
+        if (last) approx ||= !drainBus()
+        val before = if (last) taskCount.snapshot() else null
+        val t0 = System.nanoTime()
+        val ok =
+          try {
+            queries(name)(spark, sfDir)
+              .write.format("noop").mode("overwrite").save()
+            true
+          } catch {
+            case e: Throwable =>
+              System.err.println(s"[bench] $name failed: ${e.getMessage}")
+              false
+          }
+        val dt = if (ok) (System.nanoTime() - t0) / 1e9 else -1.0
+        if (last) {
+          approx ||= !drainBus()
+          taskRows(name) = taskCount.tasks - before(0)
+          spillRows(name) = taskCount.spillJson(before, approx)
+        }
+        // Per-repeat release of the dead materialized frames (round 14,
+        // guide §5 "unpersist when done" — see Q.releaseMaterialized):
+        // every repeat re-builds every checkpointed frame from parquet,
+        // so the previous repeat's blocks are garbage the async
+        // cleaner only frees after a driver GC. Letting them pile up
+        // measured as a 4x slowdown of a fixed-shape plan across the
+        // sweep (6.95 s -> 28.2 s on the quiet r14 baseline box) that
+        // lands on whatever allocation-heavy queries run late — the
+        // r13 "32-core regression family" was exactly this. The
+        // release runs OUTSIDE the timed region and changes no query's
+        // computation: every timed run still computes from parquet.
+        graft.queries.Q.releaseMaterialized(spark)
+        // A failed query reports -1 (not its near-zero elapsed time) so
+        // the metric can't be silently flattered by fast failures.
+        dt
+      }
+      name -> (if (times.contains(-1.0)) Seq(-1.0) else times.sorted)
     }
-    val calEnd = calibrationSec(spark)
     val loadavgEnd = loadavg()
     val results = raw.map { case (name, ts) => name -> ts.head } // min
-    // Per-query regression adjudication IN the artifact (VERDICT r12 #4:
-    // the calibration yardstick dissolved all three of the round's
-    // apparent regressions by hand — fold the arithmetic in so the
-    // record adjudicates itself): each shared query carries its prior
-    // wall, the raw delta, the calibration-normalized delta, and the
-    // ±9% per-query band's verdict on the NORMALIZED value.
-    // Normalization uses min(start, end) calibration (VERDICT r13 #5:
-    // the r13 artifact normalized by a start-of-run calibration taken
-    // during a 4.65x ambient spike, which marked every query "improved";
-    // the min of the two brackets is the run's best evidence of quiet-
-    // box speed, and both raw values stay in provenance for forensics).
-    val vsPriorCalRatio = priorInfo match {
-      case Some((_, _, Some(pc))) if pc > 0 =>
-        math.min(calStart, calEnd) / pc
-      case _ => 1.0
-    }
-    val vsPriorField = priorInfo match {
-      case Some((_, prior, _)) =>
-        s""""vs_prior":${vsPriorJson(results, prior, vsPriorCalRatio)},"""
-      case None => ""
-    }
     val qs = results
       .map { case (k, v) => "\"" + k + "\":" + jf(v) }
       .mkString("{", ",", "}")
@@ -398,35 +240,17 @@ object Bench {
     // make a breaking change read as a speedup.
     val total =
       if (results.exists(_._2 < 0)) -1.0 else results.map(_._2).sum
-    // Calibrated noise band (round 6, three full min-of-3 sweeps on this
-    // box): per-query min repeatable to ±9%, headline total to ±11%.
-    // Re-run rule carried in the artifact itself: a sweep whose total
-    // lands outside ±11% of the previous round's like-for-like total is
-    // presumed ambient-load noise and must be re-run on a quiet box
-    // before becoming the round's record (PLANS.md round-6 post-mortem).
-    val band = """{"per_query_pct":9,"total_pct":11,""" +
-      """"rule":"totals outside the band of the prior round's """ +
-      """like-for-like sum get one quiet-box re-run before becoming the record"}"""
     val spillField = spillRows.map { case (k, v) => "\"" + k + "\":" + v }
       .mkString(""""spill":{""", ",", "},")
-    // Run provenance IN the artifact (round-10 lesson #2: a contaminated
-    // record is only adjudicable if the record says what the box was
-    // doing): loadavg before/after the timed sweeps plus the kernel's
-    // runnable/total process counts — a loadavg far above this JVM's own
-    // core use means the numbers were measured against a loaded box, and
-    // the artifact now convicts itself instead of needing forensics.
-    // calibration_sec = min(start, end) of the frozen yardstick
-    // (Bench.calibrationDf): divide two records' walls through their
-    // calibration_sec to cancel box state before calling anything a
-    // regression. isolation_warm says whether isolated queries got the
-    // untimed warm pass (sweep-comparable) or not (probe legs, repeat=1).
+    // Run provenance IN the artifact: loadavg before/after the timed
+    // sweep plus the kernel's runnable/total process counts — a loadavg
+    // far above this JVM's own core use means the numbers were measured
+    // against a loaded box. isolation_warm says whether isolated queries
+    // got the untimed warm pass.
     val prov = s"""{"loadavg_start":"$loadavgStart",""" +
-      s""""loadavg_end":"$loadavgEnd","cpus":$cpus,""" +
-      s""""shuffle_partitions":$shufflePartitions,""" +
-      s""""calibration_sec":${jf(math.min(calStart, calEnd))},""" +
-      s""""calibration_start_sec":${jf(calStart)},""" +
-      s""""calibration_end_sec":${jf(calEnd)},""" +
-      s""""isolation_warm":$isolationWarm,$rerunField}"""
+      s""""loadavg_end":"$loadavgEnd","cpus":${Sessions.cpus},""" +
+      s""""shuffle_partitions":${spark.conf.get("spark.sql.shuffle.partitions")},""" +
+      s""""isolation_warm":$isolationWarm}"""
     // Per-query task counts of the LAST timed repeat (VERDICT r13 #7):
     // a query whose heavy stage is one task on a 32-core box is either
     // map-only-over-one-split by design or under-split by bug — the
@@ -436,9 +260,8 @@ object Bench {
       .mkString(""""tasks":{""", ",", "},")
     val line =
       s"""{"metric":"total","value":${jf(total)},"unit":"sec",""" +
-        s""""queries":$qs,"spreads":$spreads,$tasksField$spillField$vsPriorField""" +
-        s""""repeat":$repeat,""" +
-        s""""noise_band":$band,"provenance":$prov,"sf":"$sfDir"}"""
+        s""""queries":$qs,"spreads":$spreads,$tasksField$spillField""" +
+        s""""repeat":$repeat,"provenance":$prov,"sf":"$sfDir"}"""
     println(line)
     // Also write the line to a file: sbt decorates stdout with [info]
     // prefixes, which broke the driver's JSON parse in round 1.
@@ -456,37 +279,6 @@ object Bench {
     spark.stop()
   }
 
-  /** Locale-pinned JSON number (3 decimals): the f-interpolator formats
-    * with the JVM default locale, and a comma-decimal default (de_DE,
-    * fr_FR) would make every numeric field invalid JSON.
-    */
-  /** The `vs_prior` artifact column: one entry per benched query. A
-    * query shared with the prior record (both sides succeeded) carries
-    * the prior wall, the raw percent delta, the calibration-normalized
-    * percent delta (raw divided through the two records' frozen-yardstick
-    * ratio — box state cancels), and the ±9% per-query noise band's
-    * verdict ON THE NORMALIZED delta: `regression` / `improved` outside
-    * the band, `within_band` inside it. Queries the prior record lacks
-    * (or either side failed on) report `new`.
-    */
-  private[graft] def vsPriorJson(results: Seq[(String, Double)],
-      prior: Map[String, Double], calRatio: Double): String =
-    results.map { case (n, v) =>
-      val body = prior.get(n) match {
-        case Some(p) if p > 0 && v > 0 =>
-          val rawPct = (v / p - 1.0) * 100.0
-          val normPct = (v / (p * calRatio) - 1.0) * 100.0
-          val verdict =
-            if (normPct > 9.0) "regression"
-            else if (normPct < -9.0) "improved"
-            else "within_band"
-          s"""{"prior":${jf(p)},"delta_pct":${jf(rawPct)},""" +
-            s""""norm_delta_pct":${jf(normPct)},"verdict":"$verdict"}"""
-        case _ => """{"verdict":"new"}"""
-      }
-      "\"" + n + "\":" + body
-    }.mkString("{", ",", "}")
-
   private def jf(x: Double): String =
     String.format(java.util.Locale.ROOT, "%.3f", Double.box(x))
 
@@ -496,52 +288,6 @@ object Bench {
         java.nio.file.Paths.get("/proc/loadavg")), "UTF-8")
       .trim.split("\\s+").take(4).mkString(" ")
     catch { case _: Throwable => "" }
-
-  /** The prior round's per-query seconds (and its calibration_sec, when
-    * recorded) for the noise-band comparison: SPARK_GRAFT_BENCH_PRIOR if
-    * set, else the newest-round record among BENCH_r*.json AND
-    * bench_ci_r*.json that actually parses into a queries map. Round 11's
-    * driver-committed BENCH_r11.json is a wrapper (n/rc/tail fields, no
-    * top-level queries object), so candidates that don't parse fall
-    * through to the next-newest instead of silently disabling the band —
-    * bench_ci_r11.json is the real round-11 record and wins there.
-    */
-  private def priorTotals()
-      : Option[(String, Map[String, Double], Option[Double])] = {
-    def parse(p: String)
-        : Option[(String, Map[String, Double], Option[Double])] =
-      try {
-        val root = new com.fasterxml.jackson.databind.ObjectMapper()
-          .readTree(new java.io.File(p))
-        val node = root.get("queries")
-        if (node == null || !node.isObject) None
-        else {
-          val it = node.fields()
-          val m = scala.collection.mutable.Map.empty[String, Double]
-          while (it.hasNext) {
-            val e = it.next(); m(e.getKey) = e.getValue.asDouble()
-          }
-          val cal = Option(root.get("provenance"))
-            .flatMap(pr => Option(pr.get("calibration_sec")))
-            .map(_.asDouble()).filter(_ > 0)
-          Some((p, m.toMap, cal))
-        }
-      } catch { case _: Throwable => None }
-    sys.env.get("SPARK_GRAFT_BENCH_PRIOR") match {
-      case Some(p) => parse(p)
-      case None =>
-        val re = "(?:BENCH|bench_ci)_r(\\d+)\\.json".r
-        Option(new java.io.File(".").listFiles()).toSeq.flatten
-          .flatMap { f =>
-            f.getName match {
-              case re(n) => Some((n.toInt, f.getPath))
-              case _     => None
-            }
-          }
-          .sortBy { case (round, path) => (-round, path) }
-          .view.flatMap(c => parse(c._2)).headOption
-    }
-  }
 
   /** Cumulative task-end count and task-metric totals (thread-safe:
     * onTaskEnd fires on the listener-bus thread while the bench thread

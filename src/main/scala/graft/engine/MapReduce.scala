@@ -19,8 +19,8 @@ import org.apache.spark.sql.SparkSession
   * Scale note: `wholeTextFiles` matches the reference's one-map-task-per-file
   * granularity (src/mr/coordinator.go:191-207) and is right for corpus-style
   * inputs (many files ≪ executor memory each). For 100 TB of line-oriented
-  * text use [[runLines]] (block-splittable `spark.read.text`) or the
-  * relational DataFrame path (`graft.queries` modules), not this faithful
+  * text use the relational DataFrame path (`graft.queries` modules, whose
+  * `spark.read.text` scans split at block boundaries), not this faithful
   * whole-file surface.
   */
 object MapReduce {
@@ -30,7 +30,6 @@ object MapReduce {
     * `groupByKey` (not `reduceByKey`) is deliberate: the reference contract
     * hands `reduce` the FULL value list per key (src/mr/worker.go:188-203) —
     * no combiners exist there, and a general `reducef` is not algebraic.
-    * Apps that are algebraic can opt into [[runAlgebraic]].
     *
     * `minMapTasks` tunes `wholeTextFiles`'s file-combining: Spark packs
     * small files into shared splits (maxSplitSize = totalBytes/minPartitions);
@@ -42,21 +41,14 @@ object MapReduce {
     */
   def run(spark: SparkSession, app: MRApp, inputGlob: String,
           nReduce: Int = 10, minMapTasks: Int = 2): RDD[(String, String)] =
-    shuffleReduce(app, nReduce, spark.sparkContext
+    spark.sparkContext
       .wholeTextFiles(inputGlob, minMapTasks)
       .flatMap { case (file, contents) =>
         // wholeTextFiles yields URIs (file:/...); apps see plain paths like
         // the reference's os.Args file names (src/main/mrcoordinator.go:23).
         app.map(plainPath(file), contents).map(kv => (kv.key, kv.value))
-      })
-
-  /** The tail [[run]] and [[runLines]] share: the mapped pairs cross the
-    * FNV shuffle into nReduce partitions and each key's full value list
-    * goes to one `reduce` call.
-    */
-  private def shuffleReduce(app: MRApp, nReduce: Int,
-      pairs: RDD[(String, String)]): RDD[(String, String)] =
-    pairs.groupByKey(new FnvPartitioner(nReduce))
+      }
+      .groupByKey(new FnvPartitioner(nReduce))
       .map { case (k, vs) => (k, app.reduce(k, vs.toSeq)) }
 
   private def plainPath(uri: String): String =
@@ -64,54 +56,6 @@ object MapReduce {
       val p = new java.net.URI(uri).getPath
       if (p == null || p.isEmpty) uri else p
     } catch { case _: Exception => uri }
-
-  /** Splittable line-oriented run, for apps whose map distributes over
-    * lines (`map(f, a + "\n" + b) == map(f, a) ++ map(f, b)` — true of
-    * wc/grep-style tokenizers that treat newline as a separator; NOT of
-    * apps with per-document map state, e.g. the indexer's per-file
-    * distinct, which keep the faithful [[run]]). Input comes through
-    * `spark.read.text` — splittable at block boundaries, so one 10 GB file
-    * becomes many parallel MAP tasks bounded by
-    * `spark.sql.files.maxPartitionBytes` rather than file count. The
-    * REDUCE side still honors the reference contract (the full value list
-    * per key, no combiner) and therefore still materializes a hot key's
-    * values on one reducer — at ingestion scale, algebraic apps (wc is)
-    * must take [[runAlgebraic]]'s map-side-combine path instead; this
-    * runner fixes the map side only. Map tasks see the owning file's
-    * plain path, like [[run]]'s apps do (reference granularity:
-    * src/mr/coordinator.go:191-207); the URI→path parse is memoized per
-    * partition (input_file_name is constant within a split — paying a URI
-    * parse per LINE would dominate the hot path).
-    */
-  def runLines(spark: SparkSession, app: MRApp, inputGlob: String,
-               nReduce: Int = 10): RDD[(String, String)] = {
-    import org.apache.spark.sql.functions.{col, input_file_name}
-    shuffleReduce(app, nReduce, spark.read.text(inputGlob)
-      .select(input_file_name().as("file"), col("value"))
-      .rdd
-      .mapPartitions { rows =>
-        var lastUri: String = null
-        var lastPath: String = null
-        rows.flatMap { r =>
-          val uri = r.getString(0)
-          if (uri != lastUri) { lastUri = uri; lastPath = plainPath(uri) }
-          app.map(lastPath, r.getString(1)).map(kv => (kv.key, kv.value))
-        }
-      })
-  }
-
-  /** Map-side-combinable fast path for algebraic reducers (associative +
-    * commutative over the raw values). Not the general contract — see [[run]].
-    */
-  def runAlgebraic(spark: SparkSession, app: MRApp, inputGlob: String,
-                   combine: (String, String) => String,
-                   nReduce: Int = 10): RDD[(String, String)] =
-    spark.sparkContext
-      .wholeTextFiles(inputGlob)
-      .flatMap { case (file, contents) =>
-        app.map(plainPath(file), contents).map(kv => (kv.key, kv.value))
-      }
-      .reduceByKey(new FnvPartitioner(nReduce), combine)
 
   /** Writes the reference's text-sink format: one `"key value"` line per
     * group (src/mr/worker.go:203-219), one output file per reduce partition
@@ -148,11 +92,16 @@ object MapReduce {
   /** Expands a glob into the sorted local paths of the files it names,
     * with the same Hadoop glob the distributed scan (`wholeTextFiles`)
     * reads: any component may hold a wildcard, a matched directory gives
-    * its files, and names starting with `_` or `.` are skipped.
+    * its files, and names starting with `_` or `.` are skipped. The glob
+    * reads the running session's Hadoop configuration, as the scan does; a
+    * new one (parsing `core-default.xml` again, 20–50 ms) is built only
+    * when no session exists yet.
     */
   def globPaths(glob: String): Seq[java.nio.file.Path] = {
     val pattern = new org.apache.hadoop.fs.Path(glob)
-    val fs = pattern.getFileSystem(new org.apache.hadoop.conf.Configuration)
+    val conf = SparkSession.getActiveSession.orElse(SparkSession.getDefaultSession)
+      .fold(new org.apache.hadoop.conf.Configuration)(_.sparkContext.hadoopConfiguration)
+    val fs = pattern.getFileSystem(conf)
     val visible: org.apache.hadoop.fs.PathFilter =
       p => !p.getName.startsWith("_") && !p.getName.startsWith(".")
     Option(fs.globStatus(pattern, visible)).toSeq.flatten

@@ -2261,7 +2261,7 @@ object Similarity {
       "this is the kNN join's cost plus component rounds over the " +
       "MUTUAL subgraph (reciprocity thins edges sharply, and MEASURED: " +
       "0.427 of directed edges survive at 2k vectors, 0.400 at 20k, " +
-      "0.377 at 200k on the isotropic corpus — probe_mutual_r13.json — " +
+      "0.377 at 200k on the isotropic corpus — history/probe_mutual_r13.json — " +
       "so the per-round shuffle is ~0.4x the kNN graph, a ratio that " +
       "tightens, not loosens, with corpus size).",
     Some(s"""

@@ -1059,8 +1059,8 @@ object TextOps {
     * recount, widening with vocabulary since late-round deltas shrink
     * toward single words while the recount stays vocabulary-sized every
     * round. The round-13 sweep closed ADVICE r12's unmeasured band by
-    * walking the gate's whole domain (probe_bpe_gate_r13.json; paired runs
-    * under comparable in-artifact calibration, this box): delta wins
+    * walking the gate's whole domain (history/probe_bpe_gate_r13.json;
+    * paired runs under comparable in-artifact calibration, this box): delta wins
     * 1.73x at 96k vocab (116.4 vs 67.4 s), 1.95x at 256k (179.0 vs
     * 91.7), 2.03x at 1M (217.7 vs 107.1), 1.9x at 2M (r12) — i.e. the
     * delta wins EVERYWHERE the distributed loop runs at all (the only

@@ -29,28 +29,6 @@ class BenchHeadlineSpec extends AnyFunSuite {
       s"oracled queries: ${SparkEntry.oracleSql.size}, docs say 183")
   }
 
-  test("vs_prior adjudication column: fields present, normalized verdict") {
-    // VERDICT r12 #4: bench artifacts must adjudicate their own apparent
-    // regressions — each shared query reports prior/raw-delta/normalized-
-    // delta and the ±9% band's verdict on the NORMALIZED value. This
-    // pins the field names the artifact carries and the verdict
-    // arithmetic (a 1.5× slower box with calRatio 1.5 is within_band,
-    // not a regression; the same wall on a same-speed box is one).
-    val prior = Map("a" -> 1.0, "b" -> 1.0, "c" -> 1.0)
-    val res = Seq("a" -> 1.5, "b" -> 1.5, "c" -> 0.5, "d" -> 1.0)
-    val slowBox = Bench.vsPriorJson(res, prior, calRatio = 1.5)
-    assert(slowBox.contains(""""a":{"prior":1.000,"delta_pct":50.000,"""),
-      slowBox)
-    assert(slowBox.contains(
-      """"norm_delta_pct":0.000,"verdict":"within_band""""), slowBox)
-    assert(slowBox.contains(""""d":{"verdict":"new"}"""), slowBox)
-    val sameBox = Bench.vsPriorJson(res, prior, calRatio = 1.0)
-    assert(sameBox.contains(""""a":{"prior":1.000,"delta_pct":50.000,""" +
-      """"norm_delta_pct":50.000,"verdict":"regression"}"""), sameBox)
-    assert(sameBox.contains(""""c":{"prior":1.000,"delta_pct":-50.000,""" +
-      """"norm_delta_pct":-50.000,"verdict":"improved"}"""), sameBox)
-  }
-
   test("per-query task counting: the listener counts every task end") {
     // VERDICT r13 #7: the bench artifact carries a `tasks` count per
     // query (delta of this counter over the last timed repeat) so
@@ -86,28 +64,5 @@ class BenchHeadlineSpec extends AnyFunSuite {
       assert(shuffleWritten(spark.range(0, 1000, 1, parts)
         .repartition(3).write.format("noop").mode("overwrite").save()) > 0L)
     } finally spark.sparkContext.removeSparkListener(l)
-  }
-
-  test("the calibration yardstick is present and FROZEN") {
-    // Bench runs Bench.calibrationDf untimed+timed at sweep start and
-    // timed at sweep end, and records calibration_sec in the artifact's
-    // provenance; cross-round comparisons divide wall times through it
-    // to cancel box state (the ledger measured ~2.7x cross-session
-    // ambient drift on identical code). That only works if the yardstick
-    // NEVER moves: this pins the exact aggregate checksum of the frozen
-    // plan, so any edit to it fails the build instead of silently
-    // re-basing every historical comparison.
-    val spark = SparkTestBase.spark
-    import org.apache.spark.sql.functions.{count, lit, sum}
-    val r = Bench.calibrationDf(spark)
-      .agg(sum("s").as("cks"), sum("n").as("rows"),
-        count(lit(1)).as("groups"))
-      .head()
-    assert(r.getLong(1) == 64L * 1000 * 1000,
-      s"calibration row count moved: ${r.getLong(1)}")
-    assert(r.getLong(2) == 8992642L,
-      s"calibration group count moved: ${r.getLong(2)}")
-    assert(r.getLong(0) == 137442317794416533L,
-      s"calibration checksum moved: ${r.getLong(0)}")
   }
 }

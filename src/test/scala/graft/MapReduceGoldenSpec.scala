@@ -36,25 +36,6 @@ class MapReduceGoldenSpec extends AnyFunSuite {
     assert(distributedSorted("wc", 3) == distributedSorted("wc", 10))
   }
 
-  test("wc: splittable runLines equals whole-file run on the pg corpus") {
-    // wc's map distributes over lines (newline is a token separator).
-    // indexer does NOT (its map-side `.distinct` is per-DOCUMENT);
-    // collector/filecount need whole-file context — all three stay on the
-    // faithful whole-file path.
-    val viaLines = MapReduce.runLines(spark, AppRegistry("wc"), glob, 10)
-      .map { case (k, v) => s"$k $v" }.collect().toSeq.sorted
-    assert(viaLines == distributedSorted("wc", 10))
-  }
-
-  test("wc: algebraic combiner path (runAlgebraic) equals groupByKey path") {
-    // wc's reduce is a count => combinable as integer addition.
-    val viaCombiner = MapReduce
-      .runAlgebraic(spark, AppRegistry("wc"), glob,
-        (a, b) => (a.toLong + b.toLong).toString, nReduce = 10)
-      .map { case (k, v) => s"$k $v" }.collect().toSeq.sorted
-    assert(viaCombiner == distributedSorted("wc", 10))
-  }
-
   test("wc: known corpus total word count") {
     // Lock the exact tokenizer-dependent sum: the generator's word count.
     val total = MapReduce.run(spark, AppRegistry("wc"), glob, 10)

@@ -86,6 +86,22 @@ class MrRunSpec extends AnyFunSuite {
     }
   }
 
+  test("under a running session the glob lists the files the scan reads") {
+    val spark = SparkTestBase.spark
+    assert(org.apache.spark.sql.SparkSession.getDefaultSession.nonEmpty)
+    withTempDir { dir =>
+      write(dir.resolve("a/pg-1.txt"), "the cat sat")
+      write(dir.resolve("b/pg-2.txt"), "the dog")
+      write(dir.resolve("b/notes.txt"), "skipped")
+      val glob = s"$dir/*/pg-*.txt"
+      val want = Seq(dir.resolve("a/pg-1.txt"), dir.resolve("b/pg-2.txt"))
+      assert(MapReduce.globPaths(glob) == want)
+      val scanned = spark.sparkContext.wholeTextFiles(glob).keys.collect()
+        .map(u => java.nio.file.Paths.get(new java.net.URI(u))).toSeq.sorted
+      assert(scanned == want)
+    }
+  }
+
   test("a zero-byte input is an empty map task, not an error") {
     withTempDir { dir =>
       write(dir.resolve("pg-empty.txt"), "")

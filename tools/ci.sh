@@ -14,9 +14,12 @@
 #   2. python3 perfbench/test_run.py  — the benchmark harness's own tests
 #   3. tools/test_run_main.sh         — the class-data-sharing launcher:
 #                                       miss/hit, exit codes, key pruning
-#   4. tools/stress.sh N              — N repeat-suite trials, varied
+#   4. bench smoke                    — graft.Bench on three queries at
+#                                       sf0.001: the JSON line parses, no
+#                                       query failed, no retired field
+#   5. tools/stress.sh N              — N repeat-suite trials, varied
 #                                       layouts/seeds/arrival orders
-#   5. Verify+DuckDB oracle sweep at sf0.01 under each materialization
+#   6. Verify+DuckDB oracle sweep at sf0.01 under each materialization
 #      posture: localCheckpoint (default), persist, checkpoint
 set -uo pipefail
 cd "$(dirname "$0")/.."
@@ -50,6 +53,22 @@ if tools/test_run_main.sh >/tmp/graft_ci_run_main.log 2>&1; then
 else
   tail -20 /tmp/graft_ci_run_main.log
   record "launcher test" FAIL
+fi
+
+echo "=== ci: bench smoke ==="
+if SPARK_GRAFT_SF_DIR="$(dirname "$SF_DIR")/sf0.001" SPARK_GRAFT_BENCH_REPEAT=1 \
+     SPARK_GRAFT_BENCH_ONLY=q1_pricing_summary,mr_wordcount,dedup_components \
+     BENCH_OUT=/tmp/graft_ci_bench_smoke.json \
+     tools/run_main.sh graft.Bench >/tmp/graft_ci_bench_smoke.log 2>&1 \
+   && python3 -c 'import json, sys; raw = open(sys.argv[1]).read(); d = json.loads(raw)
+assert d["value"] > 0 and all(v >= 0 for v in d["queries"].values()), raw
+assert "\"vs_prior\"" not in raw and "\"calibration_sec\"" not in raw, raw' \
+     /tmp/graft_ci_bench_smoke.json; then
+  cat /tmp/graft_ci_bench_smoke.json
+  record "bench smoke" PASS
+else
+  tail -10 /tmp/graft_ci_bench_smoke.log
+  record "bench smoke" FAIL
 fi
 
 echo "=== ci: stress x$TRIALS ==="

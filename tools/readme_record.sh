@@ -30,6 +30,6 @@ print(f"Bench ({d['sf']}, min-of-{d.get('repeat','?')}): "
       f"worst 3: " + ", ".join(f"{k} {v:.2f}s" for k, v in worst) + ".")
 if prov:
     print(f"Provenance: loadavg {prov.get('loadavg_start','?')} -> "
-          f"{prov.get('loadavg_end','?')}, rerun={prov.get('rerun')}.")
+          f"{prov.get('loadavg_end','?')}.")
 EOF
 fi
