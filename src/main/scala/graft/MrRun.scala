@@ -56,13 +56,15 @@ object MrRun {
 
   /** The input/output error both modes share, checked before any session
     * starts: a glob that matches no file ([[MapReduce.globPaths]], the
-    * files both modes read) or an output path that already exists.
+    * files both modes read) or an output path that already exists. Both
+    * checks read one Hadoop configuration.
     */
   def ioError(inputGlob: String, outDir: String): Option[String] = {
+    val conf = MapReduce.hadoopConf()
     val out = new org.apache.hadoop.fs.Path(outDir)
-    if (MapReduce.globPaths(inputGlob).isEmpty)
+    if (MapReduce.globPaths(inputGlob, conf).isEmpty)
       Some(s"input glob '$inputGlob' matches no files")
-    else if (out.getFileSystem(new org.apache.hadoop.conf.Configuration).exists(out))
+    else if (out.getFileSystem(conf).exists(out))
       Some(s"output directory '$outDir' already exists")
     else None
   }

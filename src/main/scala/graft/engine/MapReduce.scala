@@ -1,5 +1,10 @@
 package graft.engine
 
+import scala.collection.immutable.ArraySeq
+import scala.collection.mutable
+import scala.jdk.CollectionConverters._
+
+import org.apache.hadoop.conf.Configuration
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.SparkSession
 
@@ -7,8 +12,9 @@ import org.apache.spark.sql.SparkSession
   * (src/mr/worker.go + src/mr/coordinator.go), pipeline
   * E1→E2→E3/E4/E5→E6/E7→E8→E9 from SURVEY.md §2.1:
   *
-  *   whole-file scan → user map → FNV hash shuffle (nReduce partitions) →
-  *   per-key grouping → user reduce → "key value" text lines.
+  *   whole-file scan → user map, grouped by key per call → FNV hash
+  *   shuffle (nReduce partitions) → per-key list merge → user reduce →
+  *   "key value" text lines.
   *
   * Scheduling concerns E10–E13 (phase barrier, straggler re-execution,
   * completion tracking, worker polling) are Spark built-ins: the shuffle stage
@@ -27,9 +33,14 @@ object MapReduce {
 
   /** Distributed run, returning (key, reduced-value) pairs.
     *
-    * `groupByKey` (not `reduceByKey`) is deliberate: the reference contract
-    * hands `reduce` the FULL value list per key (src/mr/worker.go:188-203) —
-    * no combiners exist there, and a general `reducef` is not algebraic.
+    * The reference hands `reduce` the FULL value list of a key, once
+    * (src/mr/worker.go:188-203): it has no combiner, and a general `reducef`
+    * is not algebraic. So nothing here calls `reduce` early. What is
+    * combined is lists: each map call's output is grouped by key inside the
+    * call (in-mapper combining), so the shuffle moves one `(key, values)`
+    * record per distinct key of a call, written by [[KeyValuesSerializer]].
+    * The reduce side concatenates a key's lists, one per map call, into one
+    * array and hands `reduce` that array as an immutable `Seq`.
     *
     * `minMapTasks` tunes `wholeTextFiles`'s file-combining: Spark packs
     * small files into shared splits (maxSplitSize = totalBytes/minPartitions);
@@ -46,10 +57,28 @@ object MapReduce {
       .flatMap { case (file, contents) =>
         // wholeTextFiles yields URIs (file:/...); apps see plain paths like
         // the reference's os.Args file names (src/main/mrcoordinator.go:23).
-        app.map(plainPath(file), contents).map(kv => (kv.key, kv.value))
+        groupValues(app.map(plainPath(file), contents))
       }
-      .groupByKey(new FnvPartitioner(nReduce))
-      .map { case (k, vs) => (k, app.reduce(k, vs.toSeq)) }
+      .combineByKeyWithClassTag[List[Array[String]]](
+        List(_), (lists, vs) => vs :: lists, _ ::: _,
+        new FnvPartitioner(nReduce), mapSideCombine = false, KeyValuesSerializer)
+      .map { case (k, lists) => (k, app.reduce(k, concat(lists))) }
+
+  /** One map call's output as one record per distinct key. */
+  private def groupValues(kvs: Seq[KV]): Iterator[(String, Array[String])] = {
+    val groups = new java.util.HashMap[String, mutable.ArrayBuilder[String]]
+    kvs.foreach(kv => groups.computeIfAbsent(kv.key, _ => Array.newBuilder[String]) += kv.value)
+    groups.entrySet.iterator.asScala.map(e => (e.getKey, e.getValue.result()))
+  }
+
+  /** A key's lists, kept apart until its reduce call so that a key in many
+    * map calls is copied once, not once per merge.
+    */
+  private def concat(lists: List[Array[String]]): Seq[String] =
+    ArraySeq.unsafeWrapArray(lists match {
+      case one :: Nil => one
+      case _ => Array.concat(lists: _*)
+    })
 
   private def plainPath(uri: String): String =
     try {
@@ -92,15 +121,10 @@ object MapReduce {
   /** Expands a glob into the sorted local paths of the files it names,
     * with the same Hadoop glob the distributed scan (`wholeTextFiles`)
     * reads: any component may hold a wildcard, a matched directory gives
-    * its files, and names starting with `_` or `.` are skipped. The glob
-    * reads the running session's Hadoop configuration, as the scan does; a
-    * new one (parsing `core-default.xml` again, 20–50 ms) is built only
-    * when no session exists yet.
+    * its files, and names starting with `_` or `.` are skipped.
     */
-  def globPaths(glob: String): Seq[java.nio.file.Path] = {
+  def globPaths(glob: String, conf: Configuration = hadoopConf()): Seq[java.nio.file.Path] = {
     val pattern = new org.apache.hadoop.fs.Path(glob)
-    val conf = SparkSession.getActiveSession.orElse(SparkSession.getDefaultSession)
-      .fold(new org.apache.hadoop.conf.Configuration)(_.sparkContext.hadoopConfiguration)
     val fs = pattern.getFileSystem(conf)
     val visible: org.apache.hadoop.fs.PathFilter =
       p => !p.getName.startsWith("_") && !p.getName.startsWith(".")
@@ -110,4 +134,12 @@ object MapReduce {
       .map(s => java.nio.file.Paths.get(s.getPath.toUri))
       .sortBy(_.toString)
   }
+
+  /** The running session's Hadoop configuration, which the scan reads; a
+    * new one (parsing `core-default.xml` again, 20–50 ms) only when no
+    * session exists yet.
+    */
+  def hadoopConf(): Configuration =
+    SparkSession.getActiveSession.orElse(SparkSession.getDefaultSession)
+      .fold(new Configuration)(_.sparkContext.hadoopConfiguration)
 }

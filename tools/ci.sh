@@ -20,7 +20,10 @@
 #   5. tools/stress.sh N              — N repeat-suite trials, varied
 #                                       layouts/seeds/arrival orders
 #   6. Verify+DuckDB oracle sweep at sf0.01 under each materialization
-#      posture: localCheckpoint (default), persist, checkpoint
+#      posture: localCheckpoint (default), persist, checkpoint, and the
+#      serialized-level fallback (mem_disk)
+#   7. codegen gate                   — no sweep log of step 6 holds a
+#                                       codegen fallback to interpreter mode
 set -uo pipefail
 cd "$(dirname "$0")/.."
 SF_DIR=${SF_DIR:-/root/testdata/sf0.01}

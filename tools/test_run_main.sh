@@ -8,7 +8,8 @@
 #   - the next launch is a hit that maps the archive: it starts under
 #     -Xshare:on, which refuses to run without it, and class+load logs
 #     classes from the top-layer shared objects file;
-#   - MrRun wc through the archive writes the same sorted lines as
+#   - MrRun wc and MrRun indexer (whose values, file names, merge across
+#     map calls) through the archive write the same sorted lines as
 #     --sequential;
 #   - no launch writes a Spark INFO line to stderr;
 #   - changing a class file's bytes gives a new key and prunes the old one.
@@ -55,6 +56,10 @@ check "a hit loads classes from the archive" \
 launch graft.MrRun wc "$GLOB" "$TMP/out-seq" --sequential >/dev/null
 check "wc through the archive equals --sequential" \
   '[ -s "$TMP/out-seq/mr-out-0" ] && diff <(sort "$TMP"/out-hit/part-*) <(sort "$TMP/out-seq/mr-out-0") >/dev/null'
+launch graft.MrRun indexer "$GLOB" "$TMP/out-idx" >/dev/null
+launch graft.MrRun indexer "$GLOB" "$TMP/out-idx-seq" --sequential >/dev/null
+check "indexer through the archive equals --sequential" \
+  '[ -s "$TMP/out-idx-seq/mr-out-0" ] && diff <(sort "$TMP"/out-idx/part-*) <(sort "$TMP/out-idx-seq/mr-out-0") >/dev/null'
 check "no launch writes an INFO line to stderr" '! grep -q " INFO " "$TMP/stderr"'
 
 # A class MrRun never loads, so the extra byte changes the key only.
