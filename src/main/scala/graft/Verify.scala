@@ -4,30 +4,12 @@ import java.nio.file.{Files, Paths}
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
+    if (args.length != 2) {
+      System.err.println("usage: Verify <sfDir> <outDir>")
+      sys.exit(2)
+    }
     val Array(sfDir, outDir) = args
     val spark = Sessions.local("graft-verify")
-    // Cluster-posture sweep knob: SPARK_GRAFT_MATERIALIZE=persist (or
-    // checkpoint/none) runs the whole oracle sweep under that
-    // Q.materialize strategy — certifying the non-default postures end to
-    // end, not just on MaterializeSpec's samples. Under persist the cache
-    // is cleared per query: the sweep is 90+ independent queries, and
-    // letting their persisted subtrees accumulate measures eviction
-    // pressure, not the strategy.
-    val strategy = sys.env.get("SPARK_GRAFT_MATERIALIZE")
-    strategy.foreach(spark.conf.set("spark.graft.materialize", _))
-    // Storage-level posture (round 13): SPARK_GRAFT_MATERIALIZE_LEVEL=
-    // mem_disk sweeps under the deserialized fallback level — the
-    // pre-r13 behavior, kept oracle-certified so the knob stays a
-    // measured trade, not a bitrotted branch.
-    sys.env.get("SPARK_GRAFT_MATERIALIZE_LEVEL")
-      .foreach(spark.conf.set("spark.graft.materialize.level", _))
-    // The checkpoint strategy needs a directory; default it under outDir
-    // so the sweep runs instead of every materializing query failing on
-    // the unset conf (on a cluster the real HDFS/object-store dir is set
-    // explicitly and wins).
-    if (strategy.contains("checkpoint") &&
-        !spark.conf.getOption("spark.graft.checkpointDir").isDefined)
-      spark.conf.set("spark.graft.checkpointDir", s"$outDir/_checkpoints")
     new java.io.File(outDir).mkdirs()
     // Dev-only iteration knob: SPARK_GRAFT_VERIFY_ONLY=a,b,c restricts the
     // sweep (and the dumped oracle_sql.json) to the named queries. The
@@ -62,9 +44,8 @@ object Verify {
       }
       // Per-query release of dead materialized frames (round 14 — see
       // Q.releaseMaterialized): the sweep is 183 independent queries, and
-      // letting their checkpointed/persisted subtrees accumulate measures
-      // driver-GC luck, not the queries. Subsumes the old persist-only
-      // clearCache (releaseMaterialized clears the cache manager too).
+      // letting their checkpointed subtrees accumulate measures driver-GC
+      // luck, not the queries.
       finally graft.queries.Q.releaseMaterialized(spark)
     }
     // Loud summary so a partial sweep can't pass for a complete one (the
@@ -89,21 +70,6 @@ object Verify {
     val json = dumpedSql
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
-    // Under the checkpoint posture the defaulted _checkpoints dir holds
-    // reliable-checkpoint RDD data for ~94 queries (plus per-round loop
-    // checkpoints) and nothing evicts it — left in place it bloats the
-    // output dir the driver scans. Only the defaulted location is
-    // removed; an explicitly configured cluster dir is never touched.
-    val defaultedCkptDir = Option.when(strategy.contains("checkpoint") &&
-      spark.conf.getOption("spark.graft.checkpointDir")
-        .contains(s"$outDir/_checkpoints"))(s"$outDir/_checkpoints")
     spark.stop()
-    defaultedCkptDir.foreach { dir =>
-      def rm(f: java.io.File): Unit = {
-        if (f.isDirectory) Option(f.listFiles).foreach(_.foreach(rm))
-        f.delete()
-      }
-      rm(new java.io.File(dir))
-    }
   }
 }

@@ -17,7 +17,7 @@ import org.apache.spark.sql.types._
   * iteration, virtual ArrayData access, a BigDecimal round per pair, and
   * an N·k-row exchange into the window; the round-9 g10 probe measured
   * it at 179–292 s of a 320 s query (stage attribution recorded in
-  * PLANS.md, round 9, "WHAT THE PROBE CAUGHT"). Here the whole
+  * history/PLANS.md, round 9, "WHAT THE PROBE CAUGHT"). Here the whole
   * per-vector scan is one eval: the vector is unpacked once to a
   * primitive double[], centroids live in a flat double[] shared across
   * rows, the inner loop is pure multiply-adds, and only candidates that

@@ -365,7 +365,7 @@ object Dedup {
       JOIN sizes sb ON sb.doc_id = doc_b
       WHERE n_common / (sa.n + sb.n - n_common) >= 0.5""".stripMargin),
     (spark, dir) => {
-      // Materialized once (strategy via Q.materialize): turns 4 evaluations
+      // Materialized once (posture via Q.materialize): turns 4 evaluations
       // of the scan+explode subtree (frequency filter, sizes, both join
       // sides) into one.
       val sh0 = Q.materialize(shingles(spark, dir))

@@ -116,7 +116,7 @@ object GraphOps {
       // 13 a SERIALIZED one: the round-12 g100 probe matrix proved the
       // deserialized localCheckpoint default is this query's scale
       // killer (uncompressed disk overflow + deserialized-rows heap
-      // term, both in the first |E|-scale exchange; see Q.level's doc).
+      // term, both in the first |E|-scale exchange; see Q.materialize's doc).
       // The round-9 shape
       // ALSO cached edges⋈deg (degree riding on the edge row) — a second
       // |E|-scale frame that halved the effective storage budget, and the

@@ -25,70 +25,76 @@ final case class Q(
 
 object Q {
   /** Materialize a subtree that downstream operators reference more than
-    * once (shingle explosions, normalized vectors), with a config-driven
-    * strategy — `spark.graft.materialize`:
+    * once (shingle explosions, normalized vectors). The posture follows
+    * the SparkContext's checkpoint directory, a deployment setting Spark
+    * itself owns (`spark.checkpoint.dir`, applied at context start, or
+    * `SparkContext.setCheckpointDir`):
     *
-    *  - `localCheckpoint` (default): eager, executor-local, query-scoped,
-    *    cleaner-managed — the right call on local[*] and the Verify/Bench
-    *    sweeps. NOT replicated: on a multi-node cluster losing an executor
-    *    kills the query instead of recomputing.
-    *  - `checkpoint`: reliable checkpoint to `spark.graft.checkpointDir`
-    *    (HDFS/object store on a cluster) — survives executor loss; the
-    *    cluster-production setting.
-    *  - `persist`: MEMORY_AND_DISK cache — recomputable lineage is kept, so
-    *    executor loss recovers; entries live in the session CacheManager
-    *    until `spark.catalog.clearCache()` (acceptable for long-lived
-    *    cluster jobs, wrong for many-query sweeps — hence not the default).
-    *  - `none`: pass-through (forces Catalyst to re-evaluate the subtree
-    *    everywhere it is referenced; only for plan-shape debugging).
+    *  - a checkpoint dir is set: `df.checkpoint()`, a reliable checkpoint
+    *    to that dir (HDFS/object store on a cluster). It survives executor
+    *    loss; the cluster-production posture.
+    *  - none is set: `df.localCheckpoint(eager = true,
+    *    MEMORY_AND_DISK_SER)`, executor-local, query-scoped and
+    *    cleaner-managed. Right for local mode and the Verify/Bench sweeps;
+    *    NOT replicated, so on a multi-node cluster losing an executor kills
+    *    the query instead of recomputing it.
+    *
+    * Both are eager and both cut lineage. The local posture's blocks are
+    * SERIALIZED: UnsafeRow bytes pack into one buffer per partition, and
+    * both the memory and disk forms route through the block codec when
+    * `spark.rdd.compress=true`. The round-12 g100 pagerank probe showed
+    * the deserialized level's two failure terms on |E|-scale frames: disk
+    * overflow written uncompressed, and (with `rdd.compress` forced) the
+    * heap term of 32 tasks' buffers on top of deserialized cached rows.
+    *
+    * Inside [[inlineScope]] (tests only) this is a pass-through that
+    * leaves the subtree inline, the semantics reference every posture
+    * must reproduce.
     */
-  def materialize(df: DataFrame): DataFrame = {
-    val spark = df.sparkSession
-    spark.conf.get("spark.graft.materialize", "localCheckpoint") match {
-      case "localCheckpoint" => df.localCheckpoint(eager = true, level(spark))
-      case "checkpoint" =>
-        if (spark.sparkContext.getCheckpointDir.isEmpty)
-          spark.sparkContext.setCheckpointDir(
-            spark.conf.get("spark.graft.checkpointDir"))
-        df.checkpoint()
-      case "persist" =>
-        df.persist(level(spark))
-      case "none" => df
-      case other => throw new IllegalArgumentException(
-        s"spark.graft.materialize: unknown strategy '$other'")
+  def materialize(df: DataFrame): DataFrame =
+    if (inlined.value) df else materializeLoop(df)
+
+  /** Materialization for ITERATIVE-loop bodies: [[materialize]]'s posture,
+    * but it ALWAYS cuts lineage, [[inlineScope]] included. A convergence
+    * loop whose rounds self-join re-doubles the logical subtree every
+    * iteration, so an inline body would hand the optimizer an
+    * exponentially growing plan.
+    */
+  def materializeLoop(df: DataFrame): DataFrame =
+    if (df.sparkSession.sparkContext.getCheckpointDir.isDefined)
+      df.checkpoint()
+    else df.localCheckpoint(eager = true,
+      org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
+
+  /** [[materialize]] plus the frame's ROW COUNT, in one action (round 14):
+    * several queries need |frame| right after materializing (quantizer
+    * split-bits, teleport mass), and a separate `.count()` is one more
+    * driver-planned, sequentially-scheduled job per query. Both postures
+    * are eager, so an Observation's CollectMetrics accumulator fires on
+    * the materialization job itself and the count is free. Inside
+    * [[inlineScope]] nothing runs until an action, so there the count is
+    * its own job.
+    */
+  def materializeCounted(df: DataFrame): (DataFrame, Long) = {
+    import org.apache.spark.sql.Observation
+    import org.apache.spark.sql.functions.{count, lit}
+    if (inlined.value) (df, df.count())
+    else {
+      val obs = Observation()
+      val out = materialize(df.observe(obs, count(lit(1)).as("n")))
+      (out, obs.get("n").asInstanceOf[Long])
     }
   }
 
-  /** Storage level for the cache-backed strategies (`localCheckpoint`,
-    * `persist`) — `spark.graft.materialize.level`:
-    *
-    *  - `mem_disk_ser` (default): serialized blocks. UnsafeRow bytes are
-    *    packed into one buffer per partition (Externalizable write of the
-    *    row's backing bytes — no per-row object graph), and BOTH the
-    *    in-memory and disk forms route through the block codec when
-    *    `spark.rdd.compress=true`. This is the level that survives
-    *    |E|-scale frames: the round-12 g100 pagerank DNF matrix showed
-    *    the deserialized default's TWO failure terms — disk overflow
-    *    written uncompressed regardless of the shuffle codec (killed the
-    *    plain and zstd-shuffle legs at ~73 GB), and with `rdd.compress`
-    *    forced, the heap term of 32 concurrent tasks' buffers on top of
-    *    a window of deserialized cached partitions (exit 52 in the same
-    *    stage). Serialized blocks remove both: compact bytes in memory,
-    *    codec-wrapped bytes on disk.
-    *  - `mem_disk`: the pre-round-13 deserialized MEMORY_AND_DISK —
-    *    skips per-read deserialization, right when every cached frame
-    *    fits in executor memory with headroom (small-SF sweeps never
-    *    notice either way; kept as the measured fallback posture).
+  private val inlined = new scala.util.DynamicVariable(false)
+
+  /** Builds `body` with [[materialize]] and [[materializeCounted]] as
+    * pass-throughs, so plan sweeps see every materialized subtree inline
+    * and result checks get a lineage-only reference. Query construction
+    * runs on the calling thread, which is the scope's extent.
     */
-  def level(spark: SparkSession): org.apache.spark.storage.StorageLevel =
-    spark.conf.get("spark.graft.materialize.level", "mem_disk_ser") match {
-      case "mem_disk_ser" =>
-        org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER
-      case "mem_disk" =>
-        org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-      case other => throw new IllegalArgumentException(
-        s"spark.graft.materialize.level: unknown level '$other'")
-    }
+  private[graft] def inlineScope[T](body: => T): T =
+    inlined.withValue(true)(body)
 
   /** Release every materialized frame of the session — the per-query
     * cleanup hook for many-query sweeps (Bench, Verify, long-lived
@@ -112,58 +118,12 @@ object Q {
     *
     * Safe by construction: materialized frames are query-scoped (every
     * query invocation rebuilds its own), so between queries no live
-    * plan references them. clearCache() covers the `persist` strategy's
-    * CacheManager entries; the unpersist loop covers checkpointed RDDs
-    * (under `checkpoint` strategy the reliable files are directory-
-    * managed and unaffected).
+    * plan references them. Reliable checkpoint files are
+    * directory-managed and unaffected.
     */
-  def releaseMaterialized(spark: SparkSession): Unit = {
-    spark.catalog.clearCache()
+  def releaseMaterialized(spark: SparkSession): Unit =
     spark.sparkContext.getPersistentRDDs.values
       .foreach(_.unpersist(blocking = false))
-  }
-
-  /** [[materialize]] plus the frame's ROW COUNT, in one action where the
-    * strategy allows it (round 14): several queries need |frame| right
-    * after materializing (quantizer split-bits, teleport mass), and a
-    * separate `.count()` over the just-cached frame is one more
-    * driver-planned, sequentially-scheduled job per query — pure fixed
-    * latency at bench SFs. Under the EAGER strategies (`localCheckpoint`,
-    * `checkpoint`) an Observation's CollectMetrics accumulator fires on
-    * the materialization job itself, so the count is free; under the
-    * LAZY ones (`persist`, `none`) nothing runs until an action, so
-    * observe-then-wait would hang — there `.count()` doubles as the
-    * cache-priming action, exactly what the code did before.
-    */
-  def materializeCounted(df: DataFrame): (DataFrame, Long) = {
-    import org.apache.spark.sql.Observation
-    import org.apache.spark.sql.functions.{count, lit}
-    df.sparkSession.conf.get("spark.graft.materialize", "localCheckpoint") match {
-      case "localCheckpoint" | "checkpoint" =>
-        val obs = Observation()
-        val out = materialize(df.observe(obs, count(lit(1)).as("n")))
-        (out, obs.get("n").asInstanceOf[Long])
-      case _ =>
-        val out = materialize(df)
-        (out, out.count())
-    }
-  }
-
-  /** Materialization for ITERATIVE-loop bodies: same strategy switch as
-    * [[materialize]], except the result must always CUT lineage — a
-    * convergence loop whose rounds self-join re-doubles the logical
-    * subtree every iteration, so a lineage-keeping strategy (`persist`,
-    * `none`) would hand the optimizer an exponentially growing plan (and
-    * make executor-loss recovery recompute the whole iteration history).
-    * `persist` and `none` therefore fall back to `localCheckpoint` here;
-    * on a real cluster the `checkpoint` strategy is the fault-tolerant
-    * loop setting (reliable files, lineage cut).
-    */
-  def materializeLoop(df: DataFrame): DataFrame =
-    df.sparkSession.conf.get("spark.graft.materialize", "localCheckpoint") match {
-      case "checkpoint" => materialize(df)
-      case _ => df.localCheckpoint(eager = true, level(df.sparkSession))
-    }
 }
 
 object Det {

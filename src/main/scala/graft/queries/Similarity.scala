@@ -227,7 +227,8 @@ object Similarity {
     * centroid) PAIR (row iteration, virtual array access, a BigDecimal
     * round per pair, a 512M-row exchange) and was the measured
     * super-linear term of the whole kNN family: 21.8×/decade,
-    * stage-attributed at 179–292 s of a 320 s query (PLANS.md, round 9).
+    * stage-attributed at 179–292 s of a 320 s query (history/PLANS.md,
+    * round 9).
     * Two intermediate rewrites (per-row HOF array sort; primitive-key
     * min-aggregation over the join) only shaved constants — HOFs are
     * CodegenFallback, and even the codegen'd join pays per-pair row

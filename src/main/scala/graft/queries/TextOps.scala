@@ -943,7 +943,7 @@ object TextOps {
     * embedded as literals, so a lazy round re-executes only stride−1
     * vocabulary-sized string rewrites inside its own job — now the
     * checkpoint is pure overhead at small strides and the stride factor
-    * divides the loop's job count. Measured at 8 (see PLANS.md BPE
+    * divides the loop's job count. Measured at 8 (see history/PLANS.md BPE
     * round-latency table); the loop is driver-latency-bound, so jobs
     * saved convert ~1:1 into wall clock.
     */
@@ -1051,7 +1051,7 @@ object TextOps {
     * is the cost — measured at a 2M-distinct-word corpus (a synthetic
     * documents table of base-36 words, 200 per doc, ~10M adjacent-pair
     * occurrences per recount; same-session pairs under comparable
-    * calibration 8.5-11.1 s; PLANS.md, round 12): full
+    * calibration 8.5-11.1 s; history/PLANS.md, round 12): full
     * recount 243.5 s, delta 139.8 s with union+re-aggregate counts
     * merging, 128.2 s with the FULL-OUTER JOIN merge below (the counts
     * frame keeps its hash partitioning across the per-round checkpoint,

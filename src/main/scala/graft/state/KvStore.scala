@@ -58,9 +58,12 @@ object KvStateMachine {
         else (cell, if (op.retried) ErrMaybe else ErrVersion)
     }
 
-  /** Sequential replay of one key's ordered op log. */
-  def replayKey(key: String, ops: Iterator[KvOp]): KvResult = {
-    var cell: Option[KvCell] = None
+  /** Sequential replay of one key's ordered op log, starting from `from`
+    * (a missing key by default; the stored cell on the streaming face).
+    */
+  def replayKey(key: String, ops: Iterator[KvOp],
+      from: Option[KvCell] = None): KvResult = {
+    var cell = from
     var applied = 0L
     var rejected = 0L
     ops.foreach { op =>
@@ -91,7 +94,7 @@ object KvBatch {
       .sortWithinPartitions(col("key"), col("seq"))
       .mapPartitions(it =>
         graft.engine.SortedRuns.fold(it, (op: KvOp) => op.key)(
-          KvStateMachine.replayKey))
+          (k, run) => KvStateMachine.replayKey(k, run)))
   }
 }
 
@@ -101,18 +104,12 @@ object KvStream {
     */
   def update(key: String, ops: Iterator[KvOp],
       state: GroupState[KvCell]): KvResult = {
-    var cell: Option[KvCell] = state.getOption
-    var applied = 0L
-    var rejected = 0L
     // Sort within the micro-batch: group order is otherwise nondeterministic.
-    ops.toSeq.sortBy(_.seq).foreach { op =>
-      val (next, err) = KvStateMachine.step(cell, op)
-      if (err == KvTypes.OK) applied += 1 else rejected += 1
-      cell = next
-    }
-    cell.foreach(state.update)
-    KvResult(key, cell.map(_.value).getOrElse(""),
-      cell.map(_.version).getOrElse(0L), applied, rejected)
+    val r = KvStateMachine.replayKey(key, ops.toSeq.sortBy(_.seq).iterator,
+      state.getOption)
+    // Versions start at 1, so version 0 is exactly "no cell yet".
+    if (r.version > 0L) state.update(KvCell(r.value, r.version))
+    r
   }
 
   def pipeline(spark: SparkSession, ops: Dataset[KvOp]): Dataset[KvResult] = {

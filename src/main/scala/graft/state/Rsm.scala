@@ -174,14 +174,12 @@ case class RsmGroupProgress(grp: Long, nKeys: Long, nApplied: Long,
 object RsmStream {
   def update(grp: Long, rows: Iterator[RsmKvLogRow],
       state: GroupState[Array[Byte]]): RsmGroupProgress = {
-    var img = state.getOption.map(KvRsmSnapshot.decode)
+    val from = state.getOption.map(KvRsmSnapshot.decode)
       .getOrElse(Rsm.start(KvRsmMachine))
     // Sort within the micro-batch: group order is nondeterministic.
-    rows.toSeq.sortBy(_.index).foreach { r =>
-      val op = KvOp(r.key, r.value, r.version, seq = r.index)
-      img = Rsm.applyEntry(KvRsmMachine, img,
-        RsmEntry(r.index, r.clientId, r.seq, op))._1
-    }
+    val img = Rsm.replay(KvRsmMachine, from,
+      rows.toSeq.sortBy(_.index).iterator.map(r => RsmEntry(r.index,
+        r.clientId, r.seq, KvOp(r.key, r.value, r.version, seq = r.index))))
     state.update(KvRsmSnapshot.encode(img))
     RsmGroupProgress(grp, img.state.size.toLong, img.nApplied,
       img.nSuppressed, img.state.valuesIterator.map(_.version).sum)

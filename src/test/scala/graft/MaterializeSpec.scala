@@ -4,53 +4,79 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.SparkTestBase
 
-/** Q.materialize strategy plumbing: the same multi-reference query must
-  * produce identical results under every strategy — localCheckpoint (local
-  * default), reliable checkpoint (cluster production), persist
-  * (recomputable-lineage cache), and none (pure re-evaluation, the
-  * semantics baseline the other three must preserve).
+/** Q.materialize's two postures: the same multi-reference query must
+  * produce identical results under the local checkpoint (no checkpoint dir
+  * on the context, the local default) and the reliable checkpoint (a
+  * checkpoint dir set, cluster production), and both must equal the
+  * inline reference built under `Q.inlineScope` (pure re-evaluation, the
+  * semantics baseline).
   */
 class MaterializeSpec extends AnyFunSuite {
   private lazy val spark = SparkTestBase.spark
   private val dir = "/root/testdata/sf0.001"
-  private val ConfKey = "spark.graft.materialize"
 
-  private def runUnder(strategy: String, q: Q = Dedup.lshVerified): Set[String] = {
-    spark.conf.set(ConfKey, strategy)
-    try q.run(spark, dir)
-      .collect().map(_.mkString("|")).toSet
-    finally spark.conf.unset(ConfKey)
+  private def rows(q: Q): Set[String] =
+    q.run(spark, dir).collect().map(_.mkString("|")).toSet
+
+  /** Runs `f` with a fresh checkpoint dir on the shared context; `null`
+    * resets a local-mode context to no dir, so no later suite runs on
+    * reliable checkpoints.
+    */
+  private def withCheckpointDir[T](f: java.io.File => T): T = {
+    val ckpt = java.nio.file.Files.createTempDirectory("graft-ckpt").toFile
+    spark.sparkContext.setCheckpointDir(ckpt.toString)
+    try f(ckpt)
+    finally spark.sparkContext.setCheckpointDir(null)
+  }
+
+  private def agreeWithInline(q: Q): Unit = {
+    val reference = Q.inlineScope(rows(q))
+    assert(reference.nonEmpty)
+    assert(spark.sparkContext.getCheckpointDir.isEmpty)
+    assert(rows(q) == reference, "local checkpoint posture")
+    withCheckpointDir(_ => assert(rows(q) == reference, "reliable posture"))
   }
 
   test("all materialization strategies agree on dedup_lsh_verified") {
-    val baseline = runUnder("none")
-    assert(baseline.nonEmpty)
-    assert(runUnder("localCheckpoint") == baseline)
-    assert(runUnder("persist") == baseline)
-    spark.catalog.clearCache()
-    val ckptDir = java.nio.file.Files.createTempDirectory("graft-ckpt").toString
-    spark.conf.set("spark.graft.checkpointDir", ckptDir)
-    try assert(runUnder("checkpoint") == baseline)
-    finally spark.conf.unset("spark.graft.checkpointDir")
+    agreeWithInline(Dedup.lshVerified)
   }
 
   test("all strategies agree on the iterative dedup_components loop") {
-    // The convergence loop routes through materializeLoop (always
-    // lineage-cutting): under `persist`/`none` the self-join would
-    // otherwise re-double the logical plan every round. This pins both
-    // the fallback's correctness and strategy-equivalence for the
-    // data-dependent-round-count iterative query (pagerank/label_prop
-    // iterate too, but over a fixed round count — the full Verify
-    // posture sweeps cover them end to end).
-    val baseline = runUnder("none", Dedup.components)
-    assert(baseline.nonEmpty)
-    assert(runUnder("localCheckpoint", Dedup.components) == baseline)
-    assert(runUnder("persist", Dedup.components) == baseline)
-    spark.catalog.clearCache()
-    val ckptDir = java.nio.file.Files.createTempDirectory("graft-ckpt").toString
-    spark.conf.set("spark.graft.checkpointDir", ckptDir)
-    try assert(runUnder("checkpoint", Dedup.components) == baseline)
-    finally spark.conf.unset("spark.graft.checkpointDir")
+    // The convergence loop routes through materializeLoop, which cuts
+    // lineage even inside Q.inlineScope: an inline self-join would
+    // re-double the logical plan every round. This pins posture
+    // equivalence for the data-dependent-round-count iterative query
+    // (pagerank/label_prop iterate too, but over a fixed round count —
+    // the Verify sweeps under both postures cover them end to end).
+    agreeWithInline(Dedup.components)
+  }
+
+  test("a checkpoint dir routes every materialization path to reliable " +
+      "checkpoint files") {
+    import org.apache.spark.sql.functions.col
+    def frame = spark.range(1234).toDF("id").filter(col("id") % 3 =!= 0)
+    withCheckpointDir { ckpt =>
+      // Spark writes each checkpointed RDD under <dir>/<uuid>/rdd-<id>/.
+      def rddDirs: Set[String] =
+        Option(ckpt.listFiles).toSeq.flatten.filter(_.isDirectory)
+          .flatMap(d => Option(d.listFiles).toSeq.flatten)
+          .filter(f => f.getName.startsWith("rdd-") && Option(f.listFiles)
+            .exists(_.exists(_.getName.startsWith("part-"))))
+          .map(_.getPath).toSet
+      def counted(df: org.apache.spark.sql.DataFrame) = (df, df.count())
+      Seq(
+        "materialize" -> (() => counted(Q.materialize(frame))),
+        "materializeLoop" -> (() => counted(Q.materializeLoop(frame))),
+        "materializeCounted" -> (() => Q.materializeCounted(frame))
+      ).foreach { case (name, run) =>
+        val before = rddDirs
+        val (df, n) = run()
+        assert(rddDirs.size == before.size + 1,
+          s"$name wrote no reliable checkpoint under $ckpt")
+        assert(n == 822L, s"$name: count $n != 822")
+        assert(df.collect().length == 822, s"$name: frame lost rows")
+      }
+    }
   }
 
   test("loop materialization caches SERIALIZED blocks by default") {
@@ -71,48 +97,33 @@ class MaterializeSpec extends AnyFunSuite {
         .filter { case (id, _) => !before(id) }
         .values.map(_.getStorageLevel).toSet
     }
+    assert(spark.sparkContext.getCheckpointDir.isEmpty)
     val df = spark.range(1000).toDF("id").withColumn("x", lit(1))
     val loopLevels = newlyPersistedLevels { Q.materializeLoop(df).count() }
-    assert(loopLevels.nonEmpty)
-    assert(loopLevels.forall(l => !l.deserialized && l.useDisk),
+    assert(loopLevels == Set(StorageLevel.MEMORY_AND_DISK_SER),
       s"materializeLoop must cache serialized+disk blocks, got $loopLevels")
     val matLevels = newlyPersistedLevels { Q.materialize(df).count() }
-    assert(matLevels.nonEmpty && matLevels.forall(!_.deserialized),
-      s"materialize must cache serialized blocks, got $matLevels")
-    // The measured fallback posture stays reachable and deserialized.
-    spark.conf.set("spark.graft.materialize.level", "mem_disk")
-    try {
-      val fb = newlyPersistedLevels { Q.materializeLoop(df).count() }
-      assert(fb.nonEmpty && fb.forall(_.deserialized),
-        s"mem_disk fallback must cache deserialized blocks, got $fb")
-    } finally spark.conf.unset("spark.graft.materialize.level")
-    // Unknown level fails loudly like an unknown strategy does.
-    spark.conf.set("spark.graft.materialize.level", "mem_only_turbo")
-    try intercept[IllegalArgumentException] { Q.materialize(df).count() }
-    finally spark.conf.unset("spark.graft.materialize.level")
+    assert(matLevels == Set(StorageLevel.MEMORY_AND_DISK_SER),
+      s"materialize must cache serialized+disk blocks, got $matLevels")
   }
 
   test("materializeCounted returns the frame's exact count under every " +
       "strategy") {
-    // Round 14: bookkeeping counts ride the materialization job as an
-    // observed metric under the EAGER strategies and fall back to a
-    // plain count() under the lazy ones. Both paths must agree with the
-    // frame's own count, and the returned frame must still carry the
-    // full row set (the observation projects nothing away).
+    // Round 14: the count rides the materialization job as an observed
+    // metric under both (eager) postures, and is its own job inside
+    // Q.inlineScope. Each must agree with the frame's own count, and the
+    // returned frame must still carry the full row set (the observation
+    // projects nothing away).
     import org.apache.spark.sql.functions.col
-    val ckptDir = java.nio.file.Files.createTempDirectory("graft-ckpt").toString
-    spark.conf.set("spark.graft.checkpointDir", ckptDir)
-    try {
-      for (strategy <- Seq("localCheckpoint", "checkpoint", "persist", "none")) {
-        spark.conf.set(ConfKey, strategy)
-        try {
-          val (df, n) = Q.materializeCounted(
-            spark.range(1234).toDF("id").filter(col("id") % 3 =!= 0))
-          assert(n == 822L, s"$strategy: observed count $n != 822")
-          assert(df.count() == 822L, s"$strategy: frame count mismatch")
-        } finally spark.conf.unset(ConfKey)
-      }
-    } finally spark.conf.unset("spark.graft.checkpointDir")
+    def check(posture: String): Unit = {
+      val (df, n) = Q.materializeCounted(
+        spark.range(1234).toDF("id").filter(col("id") % 3 =!= 0))
+      assert(n == 822L, s"$posture: observed count $n != 822")
+      assert(df.count() == 822L, s"$posture: frame count mismatch")
+    }
+    check("local checkpoint")
+    withCheckpointDir(_ => check("reliable checkpoint"))
+    Q.inlineScope(check("inline"))
   }
 
   test("observed convergence drives a multi-round chain-graph fixpoint") {
@@ -130,14 +141,5 @@ class MaterializeSpec extends AnyFunSuite {
     assert(labels.keySet == (0L to 19L).toSet)
     assert(labels.values.forall(_ == 0L),
       s"chain must collapse to min-label 0, got ${labels.filter(_._2 != 0)}")
-  }
-
-  test("unknown strategy fails loudly, not silently") {
-    spark.conf.set(ConfKey, "cache-everything")
-    try {
-      intercept[IllegalArgumentException] {
-        Dedup.lshVerified.run(spark, dir).collect()
-      }
-    } finally spark.conf.unset(ConfKey)
   }
 }

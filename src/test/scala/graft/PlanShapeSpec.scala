@@ -2,14 +2,17 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Mechanical lock on the plan shapes the scale design promises (PLANS.md
-  * is the narrative audit; this spec keeps it true): pushed-down filters
-  * on the TPC-H scans, the single-exchange shapes round 2 established, and
-  * the no-all-pairs-product rule across EVERY declared query — the only
-  * BroadcastNestedLoopJoins allowed are the deliberate bounded-broadcast
-  * ones (the 20-row query batch in sim_topk_bruteforce, the k=10 centroid
-  * table in the k-means quantizer — which the IVF probes and SemDeDup
-  * inherit — and ta_tfidf's 1-row corpus-size scalar join).
+import graft.queries.Q
+
+/** Mechanical lock on the plan shapes the scale design promises
+  * (history/PLANS.md is the narrative audit; this spec keeps it true):
+  * pushed-down filters on the TPC-H scans, the single-exchange shapes
+  * round 2 established, and the no-all-pairs-product rule across EVERY
+  * declared query — the only BroadcastNestedLoopJoins allowed are the
+  * deliberate bounded-broadcast ones (the 20-row query batch in
+  * sim_topk_bruteforce, the k=10 centroid table in the k-means quantizer
+  * — which the IVF probes and SemDeDup inherit — and ta_tfidf's 1-row
+  * corpus-size scalar join).
   */
 class PlanShapeSpec extends AnyFunSuite {
   private lazy val spark = SparkTestBase.spark
@@ -48,8 +51,8 @@ class PlanShapeSpec extends AnyFunSuite {
   }
 
   test("real-decode queries stay MAP-ONLY (zero exchanges)") {
-    // PLANS.md promises every per-payload codec query is one scan with
-    // zero exchanges — payload bytes never shuffle, only fixed-width
+    // history/PLANS.md promises every per-payload codec query is one scan
+    // with zero exchanges — payload bytes never shuffle, only fixed-width
     // feature rows leave the scan stage. Lock it mechanically: a stray
     // repartition/groupBy slipped into a decode path fails here.
     Seq("mm_pixel_stats", "mm_wav_stats", "mm_png_stats", "mm_gif_stats",
@@ -115,7 +118,7 @@ class PlanShapeSpec extends AnyFunSuite {
       "pipeline_quality_fit",
       // 1-row node-count scalar cross in the teleport term (r7); the loop
       // body's own crosses sit behind materializeLoop and are audited in
-      // PLANS.md like every iterative body.
+      // history/PLANS.md like every iterative body.
       "graph_pagerank",
       // 1-row corpus-stats (avgdl, n_docs) scalar cross (r7).
       "ta_bm25",
@@ -185,35 +188,28 @@ class PlanShapeSpec extends AnyFunSuite {
     // The sweep above reads each query's final optimizedPlan — a window
     // inside a Q.materialize'd subtree is invisible there (the subtree
     // shows as ExistingRDD) while its WindowExec WARN is still
-    // session-suppressed. Re-planning every query under
-    // spark.graft.materialize=none keeps Q.materialize subtrees inline,
-    // so this leg sees windows the final-plan sweep cannot. Remaining
-    // blind spot, stated precisely: Q.materializeLoop ALWAYS cuts
-    // lineage (a convergence loop's plan would re-double per round
-    // otherwise), so a window inside an iterative loop BODY stays behind
-    // ExistingRDD even here — loop bodies are small fixed shapes audited
-    // in PLANS.md, not sweepable. Window check only: join shapes
-    // legitimately differ under none (repeated subtrees re-inline), so
-    // the BNLJ rule stays with the default-posture sweep above.
+    // session-suppressed. Re-planning every query inside Q.inlineScope
+    // keeps Q.materialize subtrees inline, so this leg sees windows the
+    // final-plan sweep cannot. Remaining blind spot, stated precisely:
+    // Q.materializeLoop ALWAYS cuts lineage (a convergence loop's plan
+    // would re-double per round otherwise), so a window inside an
+    // iterative loop BODY stays behind ExistingRDD even here — loop
+    // bodies are small fixed shapes audited in history/PLANS.md, not
+    // sweepable. Window check only: join shapes legitimately differ
+    // inline (repeated subtrees re-inline), so the BNLJ rule stays with
+    // the default-posture sweep above.
     val boundedGlobalWindow = Set("ta_cms_topk", "ta_zipf_fit",
       "q_quantile_sketch", "q_quantile_merge")
-    val prior = spark.conf.getOption("spark.graft.materialize")
-    spark.conf.set("spark.graft.materialize", "none")
-    try {
-      SparkEntry.queries.keys.toSeq.sorted
-        .filterNot(boundedGlobalWindow.contains).foreach { q =>
-          val globals = SparkEntry.queries(q)(spark, dir)
-            .queryExecution.optimizedPlan.collect {
-              case w: org.apache.spark.sql.catalyst.plans.logical.Window
-                  if w.partitionSpec.isEmpty => w
-            }
-          assert(globals.isEmpty,
-            s"$q hides an unpartitioned global window behind a " +
-              s"materialization:\n" + globals.headOption.getOrElse(""))
-        }
-    } finally prior match {
-      case Some(v) => spark.conf.set("spark.graft.materialize", v)
-      case None => spark.conf.unset("spark.graft.materialize")
-    }
+    SparkEntry.queries.keys.toSeq.sorted
+      .filterNot(boundedGlobalWindow.contains).foreach { q =>
+        val globals = Q.inlineScope(SparkEntry.queries(q)(spark, dir))
+          .queryExecution.optimizedPlan.collect {
+            case w: org.apache.spark.sql.catalyst.plans.logical.Window
+                if w.partitionSpec.isEmpty => w
+          }
+        assert(globals.isEmpty,
+          s"$q hides an unpartitioned global window behind a " +
+            s"materialization:\n" + globals.headOption.getOrElse(""))
+      }
   }
 }

@@ -1,7 +1,7 @@
 #!/usr/bin/env bash
 # Single-command certification: everything the round gates check, locally.
 #
-#   tools/ci.sh              # full run: sbt test + stress + 3 oracle sweeps
+#   tools/ci.sh              # full run: sbt test + stress + 2 oracle sweeps
 #   STRESS_TRIALS=2 tools/ci.sh   # fewer stress trials
 #   CI_BENCH=1 tools/ci.sh        # also run the sf0.1 benchmark at the end
 #
@@ -19,9 +19,9 @@
 #                                       query failed, no retired field
 #   5. tools/stress.sh N              — N repeat-suite trials, varied
 #                                       layouts/seeds/arrival orders
-#   6. Verify+DuckDB oracle sweep at sf0.01 under each materialization
-#      posture: localCheckpoint (default), persist, checkpoint, and the
-#      serialized-level fallback (mem_disk)
+#   6. Verify+DuckDB oracle sweep at sf0.01 under both materialization
+#      postures: default (local checkpoint) and checkpoint (reliable
+#      checkpoint: spark.checkpoint.dir set, removed afterwards)
 #   7. codegen gate                   — no sweep log of step 6 holds a
 #                                       codegen fallback to interpreter mode
 set -uo pipefail
@@ -78,16 +78,16 @@ echo "=== ci: stress x$TRIALS ==="
 if tools/stress.sh "$TRIALS"; then record "stress x$TRIALS" PASS
 else record "stress x$TRIALS" FAIL; fi
 
-for posture in default persist checkpoint mem_disk; do
+# Q.materialize checkpoints reliably when the context has a checkpoint dir
+# and locally otherwise; the launcher passes the dir as a -D flag.
+CKPT_DIR=/tmp/graft_ci_ckpt
+for posture in default checkpoint; do
   echo "=== ci: oracle sweep ($posture posture, $SF_DIR) ==="
   out=/tmp/graft_ci_verify_$posture
   rm -rf "$out"
-  env=""
-  # mem_disk = the deserialized storage-level fallback under the default
-  # localCheckpoint strategy (round 13: the default level is serialized).
-  if [ "$posture" = mem_disk ]; then env="SPARK_GRAFT_MATERIALIZE_LEVEL=mem_disk"
-  elif [ "$posture" != default ]; then env="SPARK_GRAFT_MATERIALIZE=$posture"; fi
-  if env $env sbt -batch "runMain graft.Verify $SF_DIR $out" \
+  opts=""
+  [ "$posture" = checkpoint ] && opts="-Dspark.checkpoint.dir=$CKPT_DIR"
+  if EXTRA_JAVA_OPTS="$opts" tools/run_main.sh graft.Verify "$SF_DIR" "$out" \
        >/tmp/graft_ci_verify_$posture.log 2>&1 \
      && python3 tools/check_oracle.py "$SF_DIR" "$out" \
        >/tmp/graft_ci_oracle_$posture.log 2>&1; then
@@ -98,13 +98,15 @@ for posture in default persist checkpoint mem_disk; do
     record "oracle sweep ($posture)" FAIL
   fi
 done
+rm -rf "$CKPT_DIR"
 
 echo "=== ci: codegen gate (zero interpreter fallbacks in sweep logs) ==="
 # Round-8 judge finding: object-nested case classes silently knocked the
 # archive-ingest serializers out of codegen (correct rows, per-row tax,
 # ERROR noise). The classes moved to package level; this gate keeps any
 # regression loud: a full verify sweep must log NO codegen fallback.
-if grep -h "alling back to interpreter mode" /tmp/graft_ci_verify_*.log \
+if grep -h "alling back to interpreter mode" /tmp/graft_ci_verify_default.log \
+     /tmp/graft_ci_verify_checkpoint.log \
      >/tmp/graft_ci_codegen.log 2>/dev/null && [ -s /tmp/graft_ci_codegen.log ]; then
   head -3 /tmp/graft_ci_codegen.log
   record "codegen gate" FAIL
@@ -158,7 +160,7 @@ done
   echo "dirty_paths: $(git status --porcelain | awk '{print $NF}' | tr '\n' ' ')"
   grep -E "Tests: succeeded" /tmp/graft_ci_test.log | tail -1 \
     | sed 's/^\[info\] /sbt_test: /'
-  for p in default persist checkpoint mem_disk; do
+  for p in default checkpoint; do
     [ -f /tmp/graft_ci_oracle_$p.log ] \
       && echo "oracle_$p: $(tail -1 /tmp/graft_ci_oracle_$p.log)"
   done
