@@ -5,7 +5,8 @@ import scala.collection.mutable
 import scala.jdk.CollectionConverters._
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.spark.rdd.RDD
+import org.apache.spark.GraftKeyGrouping
+import org.apache.spark.rdd.{RDD, ShuffledRDD}
 import org.apache.spark.sql.SparkSession
 
 /** Spark-native restatement of the reference MapReduce runtime
@@ -13,8 +14,8 @@ import org.apache.spark.sql.SparkSession
   * E1→E2→E3/E4/E5→E6/E7→E8→E9 from SURVEY.md §2.1:
   *
   *   whole-file scan → user map, grouped by key per call → FNV hash
-  *   shuffle (nReduce partitions) → per-key list merge → user reduce →
-  *   "key value" text lines.
+  *   shuffle (nReduce partitions) → spillable grouping by key → user
+  *   reduce → "key value" text lines.
   *
   * Scheduling concerns E10–E13 (phase barrier, straggler re-execution,
   * completion tracking, worker polling) are Spark built-ins: the shuffle stage
@@ -38,9 +39,12 @@ object MapReduce {
     * is not algebraic. So nothing here calls `reduce` early. What is
     * combined is lists: each map call's output is grouped by key inside the
     * call (in-mapper combining), so the shuffle moves one `(key, values)`
-    * record per distinct key of a call, written by [[KeyValuesSerializer]].
-    * The reduce side concatenates a key's lists, one per map call, into one
-    * array and hands `reduce` that array as an immutable `Seq`.
+    * record per distinct key of a call, written by [[KeyValuesSerializer]]
+    * with no Spark aggregator. The reduce side groups a partition's records
+    * by key in the engine's own grouping (`org.apache.spark.GraftKeyGrouping`),
+    * which counts its own bytes and spills key-sorted runs through Spark's
+    * memory manager; it then concatenates a key's lists, one per map call,
+    * into one array and hands `reduce` that array as an immutable `Seq`.
     *
     * `minMapTasks` tunes `wholeTextFiles`'s file-combining: Spark packs
     * small files into shared splits (maxSplitSize = totalBytes/minPartitions);
@@ -51,18 +55,19 @@ object MapReduce {
     * size-aware packing, which is what you want at scale.
     */
   def run(spark: SparkSession, app: MRApp, inputGlob: String,
-          nReduce: Int = 10, minMapTasks: Int = 2): RDD[(String, String)] =
-    spark.sparkContext
+          nReduce: Int = 10, minMapTasks: Int = 2): RDD[(String, String)] = {
+    val calls = spark.sparkContext
       .wholeTextFiles(inputGlob, minMapTasks)
       .flatMap { case (file, contents) =>
         // wholeTextFiles yields URIs (file:/...); apps see plain paths like
         // the reference's os.Args file names (src/main/mrcoordinator.go:23).
         groupValues(app.map(plainPath(file), contents))
       }
-      .combineByKeyWithClassTag[List[Array[String]]](
-        List(_), (lists, vs) => vs :: lists, _ ::: _,
-        new FnvPartitioner(nReduce), mapSideCombine = false, KeyValuesSerializer)
-      .map { case (k, lists) => (k, app.reduce(k, concat(lists))) }
+    new ShuffledRDD[String, Array[String], Array[String]](calls, new FnvPartitioner(nReduce))
+      .setSerializer(KeyValuesSerializer)
+      .mapPartitions(records => GraftKeyGrouping.group(records)
+        .map { case (k, lists) => (k, app.reduce(k, concat(lists))) })
+  }
 
   /** One map call's output as one record per distinct key. */
   private def groupValues(kvs: Seq[KV]): Iterator[(String, Array[String])] = {

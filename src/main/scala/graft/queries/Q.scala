@@ -61,10 +61,19 @@ object Q {
     * exponentially growing plan.
     */
   def materializeLoop(df: DataFrame): DataFrame =
-    if (df.sparkSession.sparkContext.getCheckpointDir.isDefined)
-      df.checkpoint()
-    else df.localCheckpoint(eager = true,
+    if (df.sparkSession.sparkContext.getCheckpointDir.isDefined) {
+      val out = df.checkpoint()
+      out.queryExecution.logical
+        .collectFirst { case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd }
+        .flatMap(_.getCheckpointFile).foreach(checkpointFiles.add)
+      out
+    } else df.localCheckpoint(eager = true,
       org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
+
+  /** The reliable checkpoint files written since the last
+    * [[releaseMaterialized]], which deletes them.
+    */
+  private val checkpointFiles = new java.util.concurrent.ConcurrentLinkedQueue[String]
 
   /** [[materialize]] plus the frame's ROW COUNT, in one action (round 14):
     * several queries need |frame| right after materializing (quantizer
@@ -116,14 +125,24 @@ object Q {
     * halves the end-state drift but stalls timed queries with full
     * GCs; dropping the dead blocks explicitly does neither.
     *
+    * Reliable checkpoints are files, which Spark deletes only when
+    * `spark.cleaner.referenceTracking.cleanCheckpoints` is on (it is off
+    * by default), so this deletes the ones [[materializeLoop]] wrote: one
+    * sf0.01 Verify sweep with a checkpoint dir otherwise leaves 129
+    * `rdd-*` dirs behind.
+    *
     * Safe by construction: materialized frames are query-scoped (every
     * query invocation rebuilds its own), so between queries no live
-    * plan references them. Reliable checkpoint files are
-    * directory-managed and unaffected.
+    * plan references them.
     */
-  def releaseMaterialized(spark: SparkSession): Unit =
-    spark.sparkContext.getPersistentRDDs.values
-      .foreach(_.unpersist(blocking = false))
+  def releaseMaterialized(spark: SparkSession): Unit = {
+    val sc = spark.sparkContext
+    sc.getPersistentRDDs.values.foreach(_.unpersist(blocking = false))
+    Iterator.continually(checkpointFiles.poll()).takeWhile(_ != null).foreach { f =>
+      val path = new org.apache.hadoop.fs.Path(f)
+      path.getFileSystem(sc.hadoopConfiguration).delete(path, true)
+    }
+  }
 }
 
 object Det {

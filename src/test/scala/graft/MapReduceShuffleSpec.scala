@@ -9,8 +9,8 @@ import graft.apps.AppRegistry
 import graft.engine.{FnvPartitioner, KeyValuesSerializer, MapReduce}
 
 /** The shape of `MapReduce.run`'s shuffle over [[MrCorpus]]: one FNV
-  * shuffle written by the engine's own serializer, carrying one record per
-  * distinct key of each map call.
+  * shuffle written by the engine's own serializer, with no Spark
+  * aggregator, carrying one record per distinct key of each map call.
   */
 class MapReduceShuffleSpec extends AnyFunSuite {
   private lazy val spark = SparkTestBase.spark
@@ -45,6 +45,7 @@ class MapReduceShuffleSpec extends AnyFunSuite {
     val dep = deps.head
     assert(dep.serializer eq KeyValuesSerializer)
     assert(!dep.mapSideCombine)
+    assert(dep.aggregator.isEmpty)
     assert(dep.partitioner == new FnvPartitioner(10))
   }
 

@@ -29,6 +29,14 @@ class MaterializeSpec extends AnyFunSuite {
     finally spark.sparkContext.setCheckpointDir(null)
   }
 
+  /** The `rdd-*` dirs under a checkpoint dir: Spark writes each
+    * checkpointed RDD under <dir>/<uuid>/rdd-<id>/.
+    */
+  private def rddDirs(ckpt: java.io.File): Seq[java.io.File] =
+    Option(ckpt.listFiles).toSeq.flatten.filter(_.isDirectory)
+      .flatMap(d => Option(d.listFiles).toSeq.flatten)
+      .filter(_.getName.startsWith("rdd-"))
+
   private def agreeWithInline(q: Q): Unit = {
     val reference = Q.inlineScope(rows(q))
     assert(reference.nonEmpty)
@@ -56,26 +64,35 @@ class MaterializeSpec extends AnyFunSuite {
     import org.apache.spark.sql.functions.col
     def frame = spark.range(1234).toDF("id").filter(col("id") % 3 =!= 0)
     withCheckpointDir { ckpt =>
-      // Spark writes each checkpointed RDD under <dir>/<uuid>/rdd-<id>/.
-      def rddDirs: Set[String] =
-        Option(ckpt.listFiles).toSeq.flatten.filter(_.isDirectory)
-          .flatMap(d => Option(d.listFiles).toSeq.flatten)
-          .filter(f => f.getName.startsWith("rdd-") && Option(f.listFiles)
-            .exists(_.exists(_.getName.startsWith("part-"))))
-          .map(_.getPath).toSet
+      def written: Set[String] = rddDirs(ckpt)
+        .filter(f => Option(f.listFiles).exists(_.exists(_.getName.startsWith("part-"))))
+        .map(_.getPath).toSet
       def counted(df: org.apache.spark.sql.DataFrame) = (df, df.count())
       Seq(
         "materialize" -> (() => counted(Q.materialize(frame))),
         "materializeLoop" -> (() => counted(Q.materializeLoop(frame))),
         "materializeCounted" -> (() => Q.materializeCounted(frame))
       ).foreach { case (name, run) =>
-        val before = rddDirs
+        val before = written
         val (df, n) = run()
-        assert(rddDirs.size == before.size + 1,
+        assert(written.size == before.size + 1,
           s"$name wrote no reliable checkpoint under $ckpt")
         assert(n == 822L, s"$name: count $n != 822")
         assert(df.collect().length == 822, s"$name: frame lost rows")
       }
+    }
+  }
+
+  test("releaseMaterialized deletes the reliable checkpoint files") {
+    import org.apache.spark.sql.functions.col
+    def frame = spark.range(1234).toDF("id").filter(col("id") % 3 =!= 0)
+    withCheckpointDir { ckpt =>
+      Q.materialize(frame).count()
+      Q.materializeLoop(frame).count()
+      Q.materializeCounted(frame)
+      assert(rddDirs(ckpt).size == 3)
+      Q.releaseMaterialized(spark)
+      assert(rddDirs(ckpt).isEmpty, s"left behind: ${rddDirs(ckpt)}")
     }
   }
 

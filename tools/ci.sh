@@ -13,7 +13,10 @@
 #                                       the stock cluster default)
 #   2. python3 perfbench/test_run.py  — the benchmark harness's own tests
 #   3. tools/test_run_main.sh         — the class-data-sharing launcher:
-#                                       miss/hit, exit codes, key pruning
+#                                       miss/hit, exit codes, key pruning;
+#                                       MrRun against --sequential, once
+#                                       with every reduce task forced to
+#                                       spill
 #   4. bench smoke                    — graft.Bench on three queries at
 #                                       sf0.001: the JSON line parses, no
 #                                       query failed, no retired field

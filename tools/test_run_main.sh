@@ -11,6 +11,9 @@
 #   - MrRun wc and MrRun indexer (whose values, file names, merge across
 #     map calls) through the archive write the same sorted lines as
 #     --sequential;
+#   - so does MrRun wc when Spark forces every reduce task to spill after
+#     each 1000 records (each of its 10 tasks reads about 4,800), so the
+#     reduce-side grouping merges spilled runs;
 #   - no launch writes a Spark INFO line to stderr;
 #   - changing a class file's bytes gives a new key and prunes the old one.
 #
@@ -60,6 +63,17 @@ launch graft.MrRun indexer "$GLOB" "$TMP/out-idx" >/dev/null
 launch graft.MrRun indexer "$GLOB" "$TMP/out-idx-seq" --sequential >/dev/null
 check "indexer through the archive equals --sequential" \
   '[ -s "$TMP/out-idx-seq/mr-out-0" ] && diff <(sort "$TMP"/out-idx/part-*) <(sort "$TMP/out-idx-seq/mr-out-0") >/dev/null'
+# Four files of about 12,000 distinct words each (numbers spelled a-j),
+# each word twice, overlapping file to file.
+mkdir "$TMP/big"
+for i in 0 1 2 3; do
+  seq $((100000 + i * 3000)) $((112000 + i * 3000)) | tr 0-9 a-j | sed p > "$TMP/big/pg-$i.txt"
+done
+EXTRA_JAVA_OPTS=-Dspark.shuffle.spill.numElementsForceSpillThreshold=1000 \
+  launch graft.MrRun wc "$TMP/big/pg-*.txt" "$TMP/out-spill" >/dev/null
+launch graft.MrRun wc "$TMP/big/pg-*.txt" "$TMP/out-spill-seq" --sequential >/dev/null
+check "wc under forced spill equals --sequential" \
+  '[ -s "$TMP/out-spill-seq/mr-out-0" ] && diff <(sort "$TMP"/out-spill/part-*) <(sort "$TMP/out-spill-seq/mr-out-0") >/dev/null'
 check "no launch writes an INFO line to stderr" '! grep -q " INFO " "$TMP/stderr"'
 
 # A class MrRun never loads, so the extra byte changes the key only.
