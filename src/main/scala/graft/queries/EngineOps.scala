@@ -43,12 +43,13 @@ object EngineOps {
       "events become an ordered Put log per user — non-error events carry " +
       "the correct expected version (count of prior non-error ops), error " +
       "events carry a poisoned version and must be rejected. The log is " +
-      "replayed by KvBatch.replay, ONE shuffle with a SECONDARY SORT: the " +
-      "version window's user-keyed exchange is reused by the replay's " +
-      "repartition, and the in-partition sort on (user, event_id) delivers " +
-      "each user's log as a contiguous ordered run that STREAMS through " +
-      "the CAS fold — no per-user materialization, so a pathologically " +
-      "hot user spills in the sort instead of blowing the heap. " +
+      "replayed by KvBatch.replay, ONE shuffle and ONE sort through " +
+      "Spark's sorted groups (groupBy(key) + flatMapSortedGroups(seq)): " +
+      "the version window's user-keyed exchange and its (user, event_id) " +
+      "sort are reused by the grouping, so each user's log arrives as one " +
+      "ordered group that STREAMS through the CAS fold — no per-user " +
+      "materialization, so a pathologically hot user spills in the sort " +
+      "instead of blowing the heap. " +
       "The oracle is the closed form the deterministic log implies. Scales " +
       "per-key with no cross-key coordination — the state-store sharding " +
       "contract.",
@@ -64,8 +65,8 @@ object EngineOps {
     (spark, dir) => {
       import spark.implicits._
       // Expected version of a non-error op = its user's prior non-error
-      // ops; partitioned by the replay's own key, so the replay's
-      // repartition reuses this exchange.
+      // ops; partitioned by the replay's own key and ordered by its seq,
+      // so the replay's grouping reuses this exchange and this sort.
       val w = Window.partitionBy(col("key")).orderBy(col("seq"))
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
       val ops = t(spark, dir, "events")
@@ -96,12 +97,13 @@ object EngineOps {
       "checks by counting originals as applied and re-sends as suppressed. " +
       "Plan: the rank window shuffles by user (in production the CLIENT " +
       "stamps seq, so the operator itself is the single group-shuffle), " +
-      "then ONE repartition(grp) + secondary sort on (grp, idx) streams " +
-      "each group's log through the sequential fold — per-group order is " +
-      "all the contract needs, so groups scale out with no cross-group " +
-      "coordination. n_applied / n_ok / version_sum are computed from " +
-      "three independent places in the fold (apply counter, DoOp results, " +
-      "final state map) and must all equal the oracle's count.",
+      "then ONE groupBy(grp) whose groups are sorted by idx " +
+      "(flatMapSortedGroups) streams each group's log through the " +
+      "sequential fold — per-group order is all the contract needs, so " +
+      "groups scale out with no cross-group coordination. n_applied / " +
+      "n_ok / version_sum are computed from three independent places in " +
+      "the fold (apply counter, DoOp results, final state map) and must " +
+      "all equal the oracle's count.",
     Some("""
       WITH per_client AS (
         SELECT user_id % 8 AS grp, user_id AS client,
@@ -132,28 +134,25 @@ object EngineOps {
       val resend = base.filter(col("val") % 7 === 0)
         .withColumn("idx", col("idx") + 1)
       base.unionByName(resend)
-        .as[(Long, Long, Long, Long, Long)]
-        .repartition(col("grp"))
-        .sortWithinPartitions(col("grp"), col("idx"))
-        .mapPartitions(it =>
-          graft.engine.SortedRuns.fold(it,
-            (r: (Long, Long, Long, Long, Long)) => r._1) { (grp, run) =>
-            var img = Rsm.start(KvRsmMachine)
-            var nOk = 0L
-            run.foreach { case (_, client, seq, v, idx) =>
-              // Expected CAS version = seq: the client's ops apply in
-              // order, so its key's version equals its prior-op count.
-              val op = KvOp(client.toString, v.toString, version = seq,
-                seq = idx)
-              val (next, res, dup) =
-                Rsm.applyEntry(KvRsmMachine, img, RsmEntry(idx, client, seq, op))
-              if (!dup && res._1 == KvTypes.OK) nOk += 1L
-              img = next
-            }
-            (grp, img.state.size.toLong, img.nApplied, img.nSuppressed, nOk,
-              img.state.valuesIterator.map(_.value.toLong).sum,
-              img.state.valuesIterator.map(_.version).sum)
-          })
+        .groupBy(col("grp")).as[Long, (Long, Long, Long, Long, Long)]
+        .flatMapSortedGroups(col("idx")) { (grp, run) =>
+          var img = Rsm.start(KvRsmMachine)
+          var nOk = 0L
+          run.foreach { case (_, client, seq, v, idx) =>
+            // Expected CAS version = seq: the client's ops apply in
+            // order, so its key's version equals its prior-op count.
+            val op = KvOp(client.toString, v.toString, version = seq,
+              seq = idx)
+            val (next, res, dup) =
+              Rsm.applyEntry(KvRsmMachine, img, RsmEntry(idx, client, seq, op))
+            if (!dup && res._1 == KvTypes.OK) nOk += 1L
+            img = next
+          }
+          Iterator.single((grp, img.state.size.toLong, img.nApplied,
+            img.nSuppressed, nOk,
+            img.state.valuesIterator.map(_.value.toLong).sum,
+            img.state.valuesIterator.map(_.version).sum))
+        }
         .toDF("grp", "n_keys", "n_applied", "n_suppressed", "n_ok",
           "last_value_sum", "version_sum")
     })

@@ -129,7 +129,9 @@ object Q {
     * `spark.cleaner.referenceTracking.cleanCheckpoints` is on (it is off
     * by default), so this deletes the ones [[materializeLoop]] wrote: one
     * sf0.01 Verify sweep with a checkpoint dir otherwise leaves 129
-    * `rdd-*` dirs behind.
+    * `rdd-*` dirs behind. The context's own `<dir>/<uuid>/`, which
+    * `setCheckpointDir` made, goes too once it is empty; the next
+    * checkpoint re-creates it.
     *
     * Safe by construction: materialized frames are query-scoped (every
     * query invocation rebuilds its own), so between queries no live
@@ -141,6 +143,12 @@ object Q {
     Iterator.continually(checkpointFiles.poll()).takeWhile(_ != null).foreach { f =>
       val path = new org.apache.hadoop.fs.Path(f)
       path.getFileSystem(sc.hadoopConfiguration).delete(path, true)
+    }
+    // Non-recursive: a directory another thread has written into stays.
+    sc.getCheckpointDir.map(new org.apache.hadoop.fs.Path(_)).foreach { dir =>
+      val fs = dir.getFileSystem(sc.hadoopConfiguration)
+      try if (fs.listStatus(dir).isEmpty) fs.delete(dir, false)
+      catch { case _: java.io.IOException => }
     }
   }
 }

@@ -12,7 +12,7 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * porcupine model (src/models1/kv.go:49-67).
   *
   * One pure state machine ([[KvStateMachine.step]]) drives three surfaces:
-  * a batch replay operator (`mapGroups` fold per key), a Structured
+  * a batch replay operator (a sorted-group fold per key), a Structured
   * Streaming `mapGroupsWithState` pipeline, and property tests.
   */
 object KvTypes {
@@ -77,24 +77,22 @@ object KvStateMachine {
 }
 
 object KvBatch {
-  /** Distributed CAS replay via secondary sort: ops are shuffled by key
-    * (the S6 shard routing at engine level) and sorted WITHIN partitions by
-    * (key, seq), so each key's log arrives as a contiguous ordered run and
-    * streams through the sequential fold — no per-key materialization
-    * (`mapGroups` + `toSeq.sortBy` held a whole key's history in memory; a
-    * pathologically hot key was a heap hotspot, and the partition sort
-    * spills to disk where a Seq cannot). Per-key order is the only order
-    * CAS semantics need, so the operator scales to arbitrarily many keys
-    * with no cross-key coordination.
+  /** Distributed CAS replay through Spark's sorted groups: ops are grouped
+    * by the `key` column (one shuffle by key, the S6 shard routing at
+    * engine level) and each group's ops are sorted by `seq`, so each key's
+    * log streams through the sequential fold as one ordered iterator; no
+    * per-key materialization, and the sort spills to disk on a hot key.
+    * Grouping by the column (not a `groupByKey` lambda) keeps the exchange
+    * on `key` itself, so a caller already partitioned by key (the version
+    * window of `kv_cas_replay`) adds no second exchange. Per-key order is
+    * the only order CAS semantics need, so the operator scales to
+    * arbitrarily many keys with no cross-key coordination.
     */
   def replay(spark: SparkSession, ops: Dataset[KvOp]): Dataset[KvResult] = {
-    import org.apache.spark.sql.functions.col
     import spark.implicits._
-    ops.repartition(col("key"))
-      .sortWithinPartitions(col("key"), col("seq"))
-      .mapPartitions(it =>
-        graft.engine.SortedRuns.fold(it, (op: KvOp) => op.key)(
-          (k, run) => KvStateMachine.replayKey(k, run)))
+    ops.groupBy(col("key")).as[String, KvOp]
+      .flatMapSortedGroups(col("seq"))((k, run) =>
+        Iterator.single(KvStateMachine.replayKey(k, run)))
   }
 }
 

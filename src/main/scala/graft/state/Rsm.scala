@@ -20,11 +20,12 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout}
   *    rows — `index` is the Raft log index (total order within a group),
   *    one RSM instance per `group` (the shardkv deployment shape: each
   *    replica group runs its own RSM over its own log);
-  *  - APPLY is a deterministic fold in index order. Distribution follows
-  *    the repo's secondary-sort pattern: shuffle by group, sort within
-  *    partitions by (group, index), stream each group's log through the
-  *    sequential fold — per-group order is the only order the contract
-  *    needs, so groups scale out with no cross-group coordination;
+  *  - APPLY is a deterministic fold in index order. Distribution is
+  *    Spark's sorted groups: `groupBy(group)` then
+  *    `flatMapSortedGroups(index)` shuffles by group and hands each
+  *    group's log to the sequential fold as one index-ordered iterator —
+  *    per-group order is the only order the contract needs, so groups
+  *    scale out with no cross-group coordination;
   *  - EXACTLY-ONCE: a committed entry can be re-submitted (leader change →
   *    client resend → both copies commit). The standard RSM construction
   *    suppresses the re-apply with a client session table — `clientId →

@@ -47,7 +47,7 @@ class DeterminismSpec extends AnyFunSuite {
     "mm_phash_hamming" -> sfCaps,     // LSH bucket caps over image hashes (r7)
     "mm_audio_hamming" -> sfCaps,     // LSH bucket caps over audio fingerprints (r7)
     "graph_pagerank" -> sfCaps,       // iterative float sums + rounded top-20 (r7)
-    "rsm_submit_replay" -> sfSmoke,   // secondary-sort log fold + session dedup (r7)
+    "rsm_submit_replay" -> sfSmoke,   // sorted-group log fold + session dedup (r7)
     "graph_label_prop" -> sfCaps,     // iterative mode argmax tie-breaks (r7)
     "pipeline_dsir_select" -> sfCaps, // rounded-score top-50 with ties (r7)
     "sim_topk_sq8" -> sfSmoke,        // integer-distance ANN ranking ties (r7)

@@ -65,11 +65,11 @@ class KvStateMachineSpec extends AnyFunSuite {
     }
   }
 
-  test("distributed replay streams a 200k-op hot key exactly (secondary sort)") {
-    // The secondary-sort path must fold a pathologically hot key's ordered
-    // log without materializing it (it arrives as one contiguous sorted
-    // run): 200k correct-version puts to one key interleaved with a cold
-    // key, shuffled input order, exact summary out.
+  test("distributed replay streams a 200k-op hot key exactly (sorted groups)") {
+    // The sorted-group path must fold a pathologically hot key's ordered
+    // log without materializing it (it arrives as one seq-sorted group):
+    // 200k correct-version puts to one key interleaved with a cold key,
+    // shuffled input order, exact summary out.
     val spark = graft.SparkTestBase.spark
     import spark.implicits._
     val n = 200000
@@ -82,6 +82,39 @@ class KvStateMachineSpec extends AnyFunSuite {
     assert(results("hot") ==
       KvResult("hot", s"v${n - 1}", n.toLong, n.toLong, 0L))
     assert(results("cold") == KvResult("cold", "x", 1L, 1L, 1L))
+  }
+
+  test("property: distributed replay equals per-key replay over many keys") {
+    // Group boundaries: 300 keys' logs of correct-version, stale and
+    // retried puts, shuffled and spread over 1, 3 and 17 input partitions,
+    // must each fold exactly their own key's ops in seq order.
+    val spark = graft.SparkTestBase.spark
+    import spark.implicits._
+    val rnd = new scala.util.Random(31 + SparkTestBase.stressSeed)
+    var seq = 0L
+    val ops = (0 until 300).flatMap { k =>
+      var version = 0L
+      Seq.fill(1 + rnd.nextInt(20)) {
+        seq += 1
+        val op = rnd.nextInt(10) match {
+          case n if n < 6 => KvOp(s"k$k", s"v$seq", version, seq = seq)
+          case n => KvOp(s"k$k", s"v$seq", version + rnd.nextInt(5) - 2,
+            retried = n >= 8, seq = seq)
+        }
+        if (op.version == version) version += 1
+        op
+      }
+    }
+    val expected = ops.groupBy(_.key).map { case (k, log) =>
+      KvStateMachine.replayKey(k, log.sortBy(_.seq).iterator)
+    }.toSet
+    assert(expected.size == 300)
+    assert(expected.exists(_.nRejected > 0) && expected.exists(_.nApplied > 1))
+    Seq(1, 3, 17).foreach { parts =>
+      val input = spark.sparkContext.parallelize(rnd.shuffle(ops), parts).toDS()
+      val got = KvBatch.replay(spark, input).collect().toSet
+      assert(got == expected, s"$parts input partitions")
+    }
   }
 
   test("lock: mutual exclusion and owner-only release") {

@@ -86,13 +86,20 @@ class MaterializeSpec extends AnyFunSuite {
   test("releaseMaterialized deletes the reliable checkpoint files") {
     import org.apache.spark.sql.functions.col
     def frame = spark.range(1234).toDF("id").filter(col("id") % 3 =!= 0)
+    def entries(ckpt: java.io.File) = Option(ckpt.listFiles).toSeq.flatten
     withCheckpointDir { ckpt =>
       Q.materialize(frame).count()
       Q.materializeLoop(frame).count()
       Q.materializeCounted(frame)
       assert(rddDirs(ckpt).size == 3)
       Q.releaseMaterialized(spark)
-      assert(rddDirs(ckpt).isEmpty, s"left behind: ${rddDirs(ckpt)}")
+      assert(entries(ckpt).isEmpty, s"left behind: ${entries(ckpt)}")
+      // The context's <uuid> dir is gone; the next checkpoint makes it
+      // again (mkdirs creates parents), and the next release removes it.
+      assert(Q.materialize(frame).count() == 822L)
+      assert(rddDirs(ckpt).size == 1)
+      Q.releaseMaterialized(spark)
+      assert(entries(ckpt).isEmpty, s"left behind: ${entries(ckpt)}")
     }
   }
 

@@ -44,9 +44,25 @@ class PlanShapeSpec extends AnyFunSuite {
       // superset of the partitioning, so no re-exchange) (r7).
       "q_events_scd2",
       // dwell census: lag window + groupBy on the same user key (r7).
-      "q_events_dwell").foreach { q =>
+      "q_events_dwell",
+      // RSM apply: the group-keyed exchange of its sorted groups; the
+      // rank window's exchange sits behind the materialized log.
+      "rsm_submit_replay").foreach { q =>
       val shuffles = "Exchange hashpartitioning".r.findAllIn(plan(q)).length
       assert(shuffles == 1, s"$q: expected exactly 1 shuffle, got $shuffles")
+    }
+  }
+
+  test("state replays ride one sort: sorted groups reuse the existing order") {
+    // KvBatch.replay and the RSM apply group by a COLUMN, so the group
+    // sort is (key, seq) on the key-partitioned input: kv_cas_replay's
+    // version window already sorted it that way, and the RSM log is
+    // sorted once. A `groupByKey` lambda would append a new key column
+    // and plan a second exchange and sort on it.
+    Seq("kv_cas_replay", "rsm_submit_replay").foreach { q =>
+      val p = plan(q)
+      val sorts = "\\bSort \\[".r.findAllIn(p).length
+      assert(sorts == 1, s"$q: expected exactly 1 Sort, got $sorts:\n$p")
     }
   }
 

@@ -24,7 +24,8 @@
 #                                       layouts/seeds/arrival orders
 #   6. Verify+DuckDB oracle sweep at sf0.01 under both materialization
 #      postures: default (local checkpoint) and checkpoint (reliable
-#      checkpoint: spark.checkpoint.dir set, removed afterwards)
+#      checkpoint: spark.checkpoint.dir set to a fresh dir, which must
+#      hold no entry at all after Verify exits, removed afterwards)
 #   7. codegen gate                   — no sweep log of step 6 holds a
 #                                       codegen fallback to interpreter mode
 set -uo pipefail
@@ -89,9 +90,16 @@ for posture in default checkpoint; do
   out=/tmp/graft_ci_verify_$posture
   rm -rf "$out"
   opts=""
-  [ "$posture" = checkpoint ] && opts="-Dspark.checkpoint.dir=$CKPT_DIR"
+  if [ "$posture" = checkpoint ]; then
+    rm -rf "$CKPT_DIR"
+    opts="-Dspark.checkpoint.dir=$CKPT_DIR"
+  fi
+  # Q.releaseMaterialized deletes every checkpoint file and the context's
+  # own dir, so a reliable sweep leaves the checkpoint dir empty.
   if EXTRA_JAVA_OPTS="$opts" tools/run_main.sh graft.Verify "$SF_DIR" "$out" \
        >/tmp/graft_ci_verify_$posture.log 2>&1 \
+     && { [ "$posture" != checkpoint ] \
+          || [ -z "$(find "$CKPT_DIR" -mindepth 1 2>/dev/null | tee -a /tmp/graft_ci_verify_$posture.log)" ]; } \
      && python3 tools/check_oracle.py "$SF_DIR" "$out" \
        >/tmp/graft_ci_oracle_$posture.log 2>&1; then
     tail -2 /tmp/graft_ci_oracle_$posture.log
