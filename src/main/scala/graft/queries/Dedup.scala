@@ -1367,9 +1367,9 @@ object Dedup {
       "strings or ids; the doc text never moves after the one scan. " +
       "SATURATION GUARD: the prefix-df census (exactly the candidate " +
       "count) gates the join — on a vocabulary-saturated corpus, where " +
-      "any exact prefix join goes quadratic, the query fails loudly or " +
-      "routes to the LSH pipeline (spark.graft.prefixJoin.*) instead " +
-      "of silently melting.",
+      "any exact prefix join goes quadratic, the query fails loudly, " +
+      "naming its bound (spark.graft.prefixJoin.maxCandidates) and " +
+      "dedup_lsh_verified, instead of silently melting.",
     Some(s"""
       WITH sh AS ($ShinglesSql),
            dfq AS (SELECT shingle, count(*) AS df FROM sh GROUP BY shingle),
@@ -1427,40 +1427,26 @@ object Dedup {
       // The guard makes the documented scale path ENFORCED, not
       // advisory: past `spark.graft.prefixJoin.maxCandidates` (default
       // 20M — g1's saturated 55.7M trips, a decade of healthy growth
-      // does not) the query fails loudly naming the route, or with
-      // `spark.graft.prefixJoin.onSaturation=route` runs the capped
-      // LSH+exact-verify pipeline (dedup_lsh_verified — same output
-      // columns, probabilistic candidates instead of exact) instead of
-      // quietly going quadratic. The DuckDB oracle mirrors the
-      // UNSATURATED regime (the guard never trips at oracle SFs —
-      // asserted in PrefixJoinSpec).
+      // does not; the bound is sized to the workload) the query fails
+      // loudly, naming the bound and dedup_lsh_verified (the capped
+      // LSH+exact-verify pipeline, same output columns, probabilistic
+      // candidates), instead of quietly going quadratic. It never
+      // answers with that query's pairs under its own name. The DuckDB
+      // oracle mirrors the UNSATURATED regime (the guard never trips at
+      // oracle SFs — asserted in PrefixJoinSpec).
       val maxCand = spark.conf
         .get("spark.graft.prefixJoin.maxCandidates", "20000000").toLong
       val predicted = pre.groupBy(col("shingle"))
         .agg(count(lit(1)).as("dfp"))
         .agg(coalesce(sum(expr("dfp * (dfp - 1)")), lit(0L)).as("s"))
         .first().getLong(0) / 2
-      if (predicted > maxCand)
-        spark.conf.get("spark.graft.prefixJoin.onSaturation", "fail") match {
-          case "route" => verifiedPairs(spark, dir)
-          case "proceed" => prefixJoinExact(pre, sh, sz)
-          case _ => throw new IllegalStateException(
-            s"dedup_prefix_join: prefix-df census predicts $predicted " +
-              s"candidate pairs > bound $maxCand — the shingle vocabulary " +
-              "is saturated and an exact prefix join would go quadratic. " +
-              "Route to the LSH pipeline " +
-              "(spark.graft.prefixJoin.onSaturation=route), raise " +
-              "spark.graft.prefixJoin.maxCandidates, or set " +
-              "onSaturation=proceed to accept the cost explicitly.")
-        }
-      else prefixJoinExact(pre, sh, sz)
-    })
-
-  /** The exact candidate-join + verify tail of [[prefixJoin]] (runs only
-    * when the prefix-df census is under the saturation bound).
-    */
-  private def prefixJoinExact(pre: DataFrame, sh: DataFrame,
-      sz: DataFrame): DataFrame = {
+      if (predicted > maxCand) throw new IllegalStateException(
+        s"dedup_prefix_join: prefix-df census predicts $predicted " +
+          s"candidate pairs > bound $maxCand — the shingle vocabulary " +
+          "is saturated and an exact prefix join would go quadratic. " +
+          "Raise spark.graft.prefixJoin.maxCandidates to accept the " +
+          "cost, or run dedup_lsh_verified (probabilistic candidates, " +
+          "exact verify) instead.")
       val a = pre.select(col("doc_id").as("doc_a"), col("shingle"),
         col("n").as("na"), col("rn").as("rna"))
       val b = pre.select(col("doc_id").as("doc_b"), col("shingle"),
@@ -1494,7 +1480,7 @@ object Dedup {
           (col("n_common") / (col("na") + col("nb") - col("n_common")))
             .as("jaccard"))
         .filter(col("jaccard") >= 0.5)
-  }
+    })
 
   val all: Seq[Q] = Seq(exact, minhashSig, minhashPairs, ngramJaccard,
     simhash, simhashHamming, lshVerified, components, editDistance,

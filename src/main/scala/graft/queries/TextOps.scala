@@ -880,11 +880,6 @@ object TextOps {
           Det.r2e(exp(col("nll") / col("n_tokens"))).as("ppl"))
     })
 
-  /** The BPE round primitive shared by [[bpeFit]] (learns the merge table)
-    * and [[bpeApply]] (tokenizes with it): most frequent adjacent symbol
-    * pair of a (s, c) word-frequency frame — count desc, pair asc, a total
-    * order. Single definition, no drift.
-    */
   /** Adjacent-pair counts (pair, cnt) of a (s, c) symbol frame, weighted
     * by word count — the frame [[topPair]] ranks and the incremental
     * loop maintains.
@@ -906,38 +901,31 @@ object TextOps {
     .select(col("pair"), expr("replace(pair, ' ', '')").as("merged"),
       col("cnt"))
 
-  private def topMerge(sdf: org.apache.spark.sql.DataFrame) =
-    topPair(pairCounts(sdf))
-
-  /** [[topMerge]]'s winning row, or a NAMED error on merge starvation
-    * (the pair frame emptied before round `k`: every vocabulary word is
-    * already a single symbol). A bare `first()` would throw an anonymous
-    * NoSuchElementException; degrading to fewer merges is not an option
-    * either — the generated oracle chain runs exactly [[BpeMerges]]
-    * rounds, so the round counts must match or the hash compare fails.
+  /** The NAMED error of merge starvation (no adjacent pair is left before
+    * round `k`: every vocabulary word is already a single symbol), shared
+    * by both round loops. Degrading to fewer merges is not an option —
+    * the generated oracle chain runs exactly [[BpeMerges]] rounds, so the
+    * round counts must match or the hash compare fails.
     */
-  private def topMergeAt(sdf: org.apache.spark.sql.DataFrame,
-      k: Int): org.apache.spark.sql.Row =
-    sdf.take(1).headOption.getOrElse(throw new IllegalStateException(
-      s"BPE merge starvation at round $k/$BpeMerges: no adjacent symbol " +
-        "pair remains in the vocabulary — lower BpeMerges or widen the " +
-        "corpus"))
+  private def bpeStarved(k: Int, rounds: Int) = new IllegalStateException(
+    s"BPE merge starvation at round $k/$rounds: no adjacent symbol " +
+      "pair remains in the vocabulary — lower BpeMerges or widen the " +
+      "corpus")
 
   /** Merge rounds [[bpeFit]] trains (and [[bpeApply]] applies). Bounded
     * by the corpus: a merge exists while any vocabulary word has >= 2
     * symbols, and this vocabulary supports ~107 merges (sum of word
-    * lengths minus word count), so 64 rounds never starve. The loop is
-    * driver-bounded (the dedup_components pattern) with per-round
-    * lineage cuts — NOT a convergence test, so Spark and the generated
+    * lengths minus word count), so 64 rounds never starve. The round
+    * count is fixed — NOT a convergence test, so Spark and the generated
     * oracle chain run the exact same round count.
     */
   private[graft] val BpeMerges = 64
 
-  /** Rounds per lineage cut of the BPE loops' symbol frame. History of
-    * the measurement (sf0.1, min-of-3): under the round-8 structure
+  /** Rounds per lineage cut of the on-cluster BPE loop's symbol frame.
+    * History of the measurement (sf0.1, min-of-3): under the round-8 structure
     * (crossJoin-broadcast merges, every round checkpointing BOTH the
     * 1-row merge and the symbol frame = 2 jobs/round) stride 1 beat
-    * stride 4 (6.5 s vs 7.2 s) because a lazy round's topMerge nested
+    * stride 4 (6.5 s vs 7.2 s) because a lazy round's top-merge job nested
     * the previous TakeOrdered subtrees. Round 9 removed that term: the
     * winning merge is driver-COLLECTED (one deliberately tiny row) and
     * embedded as literals, so a lazy round re-executes only stride−1
@@ -949,23 +937,53 @@ object TextOps {
     */
   private[graft] val BpeLineageStride = 8
 
-  /** Vocabulary-size bound under which the merge ROUNDS run on the
-    * driver (`spark.graft.bpe.localVocabMax`, default 65536 distinct
-    * words): the shape every production tokenizer trainer uses —
+  /** Distinct-word count at or under which the merge ROUNDS run on the
+    * driver: the shape every production tokenizer trainer uses —
     * distributed word COUNT (the only corpus-scale stage), then local
     * merge rounds over the collected (symbols, count) table. The
-    * round-10 attribution found the loop driver-LATENCY-bound: 64
-    * sequential vocabulary-sized jobs cost ~70 ms each in launches
-    * alone while the actual data is a few thousand rows, so the local
-    * path converts 64 + 64/stride job launches into microseconds of
-    * driver arithmetic. Past the bound the distributed loop below runs
-    * unchanged (a 100 TB corpus with an unbounded vocabulary still
-    * trains on-cluster), and BpeLocalSpec pins the two paths
-    * merge-for-merge and symbol-for-symbol equal.
+    * round-10 attribution found the on-cluster loop driver-LATENCY-bound
+    * at test scale: 64 sequential vocabulary-sized jobs cost ~70 ms each
+    * in launches alone while the data is a few thousand rows, so the
+    * driver rounds turn the loop's job launches into microseconds of
+    * arithmetic. Past the bound [[distBpeRoundsDelta]] trains on-cluster
+    * (a 100 TB corpus with an unbounded vocabulary still trains), and
+    * BpeLocalSpec pins the two loops merge-for-merge and symbol-for-
+    * symbol equal.
     */
-  private def bpeLocalVocabMax(
-      spark: org.apache.spark.sql.SparkSession): Long =
-    spark.conf.get("spark.graft.bpe.localVocabMax", "65536").toLong
+  private[graft] val BpeLocalVocabMax = 65536L
+
+  private val clusterRounds = new scala.util.DynamicVariable(false)
+
+  /** Builds `body` with [[bpeRounds]] on the cluster at every vocabulary
+    * size, so tests cover the on-cluster loop at test scale. The choice
+    * is made while the query is built, on the calling thread — the
+    * [[Q.inlineScope]] idiom.
+    */
+  private[graft] def clusterRoundsScope[T](body: => T): T =
+    clusterRounds.withValue(true)(body)
+
+  /** [[BpeMerges]] merge rounds over a vocabulary frame (s, c, plus any
+    * columns that ride along — bpe_apply's `word`) of `nVocab` rows: on
+    * the driver ([[localBpeRounds]]) at or under [[BpeLocalVocabMax]],
+    * on the cluster ([[distBpeRoundsDelta]]) above it. Returns the
+    * learned table and the frame with `s` rewritten by the applied
+    * merges; the driver's frame is a broadcast local relation.
+    */
+  private def bpeRounds(vocab: org.apache.spark.sql.DataFrame, nVocab: Long,
+      applyLast: Boolean)
+      : (Seq[(Long, String, String, Long)], org.apache.spark.sql.DataFrame) =
+    if (nVocab > BpeLocalVocabMax || clusterRounds.value)
+      distBpeRoundsDelta(vocab, BpeMerges, applyLast)
+    else {
+      val rows = vocab.collect()
+      val (si, ci) = (vocab.schema.fieldIndex("s"), vocab.schema.fieldIndex("c"))
+      val (learned, fin) = localBpeRounds(
+        rows.map(r => (r.getString(si), r.getLong(ci))), BpeMerges, applyLast)
+      val out = rows.zip(fin).map { case (r, f) =>
+        org.apache.spark.sql.Row.fromSeq(r.toSeq.updated(si, f)) }
+      (learned, broadcast(vocab.sparkSession.createDataFrame(
+        java.util.Arrays.asList(out: _*), vocab.schema)))
+    }
 
   /** UTF-8 byte order (unsigned) — the tie-break collation BOTH engines
     * rank `pair` with (Spark UTF8String, DuckDB binary collation); JVM
@@ -984,7 +1002,7 @@ object TextOps {
   }
 
   /** Driver-local BPE merge rounds — semantics IDENTICAL to the
-    * distributed loop, op for op: pair counts weighted by `c`, winner by
+    * on-cluster loop, op for op: pair counts weighted by `c`, winner by
     * (count desc, pair asc in UTF-8 byte order), the boundary-sentinel
     * merge with left-to-right non-overlapping replace (String.replace
     * and UTF8String/DuckDB replace all share that contract), starvation
@@ -1012,10 +1030,7 @@ object TextOps {
         }
         i += 1
       }
-      if (counts.isEmpty) throw new IllegalStateException(
-        s"BPE merge starvation at round $k/$rounds: no adjacent symbol " +
-          "pair remains in the vocabulary — lower BpeMerges or widen the " +
-          "corpus")
+      if (counts.isEmpty) throw bpeStarved(k, rounds)
       var bestPair: String = null
       var bestCnt = Long.MinValue
       counts.forEach { (p, c) =>
@@ -1036,53 +1051,7 @@ object TextOps {
     (learned.toSeq, cur)
   }
 
-  /** Incremental pair-count maintenance for the DISTRIBUTED merge loop
-    * (VERDICT r11 #8): after merging pair P, only words CONTAINING P
-    * change their adjacent-pair multiset, so each round can recount the
-    * DELTA over exactly those words instead of re-exploding every
-    * adjacent pair in the whole vocabulary. The strategy is a TRADE,
-    * measured (g1 probe, forced distributed, equal ambient per the
-    * in-artifact calibration — 9.2 vs 9.6 s yardstick): at small
-    * vocabularies the delta loop LOSES (11.4 vs 9.9 s min-of-3) because
-    * it adds one materialize job per round and re-shuffles the distinct-
-    * pair frame, while the full recount's explode is trivial at that
-    * scale — the loop is job-launch-bound, exactly the round-10 BPE
-    * attribution. The delta wins where the recount's per-round explode
-    * is the cost — measured at a 2M-distinct-word corpus (a synthetic
-    * documents table of base-36 words, 200 per doc, ~10M adjacent-pair
-    * occurrences per recount; same-session pairs under comparable
-    * calibration 8.5-11.1 s; history/PLANS.md, round 12): full
-    * recount 243.5 s, delta 139.8 s with union+re-aggregate counts
-    * merging, 128.2 s with the FULL-OUTER JOIN merge below (the counts
-    * frame keeps its hash partitioning across the per-round checkpoint,
-    * so only the aggregated delta crosses an exchange) — 1.9x over the
-    * recount, widening with vocabulary since late-round deltas shrink
-    * toward single words while the recount stays vocabulary-sized every
-    * round. The round-13 sweep closed ADVICE r12's unmeasured band by
-    * walking the gate's whole domain (history/probe_bpe_gate_r13.json;
-    * paired runs under comparable in-artifact calibration, this box): delta wins
-    * 1.73x at 96k vocab (116.4 vs 67.4 s), 1.95x at 256k (179.0 vs
-    * 91.7), 2.03x at 1M (217.7 vs 107.1), 1.9x at 2M (r12) — i.e. the
-    * delta wins EVERYWHERE the distributed loop runs at all (the only
-    * measured loss, g1's tiny vocab, was a forced-distributed regime
-    * `auto` never enters: below `localVocabMax` the rounds are driver
-    * arithmetic). Hence `auto` (default) engages the delta at
-    * `spark.graft.bpe.deltaMinVocab` distinct words, DEFAULTED TO THE
-    * `localVocabMax` boundary — delta whenever distributed;
-    * `true`/`false` force the strategy for the BpeLocalSpec
-    * differential, which pins the two loops merge-for-merge equal.
-    */
-  private def bpeUseDelta(spark: org.apache.spark.sql.SparkSession,
-      vocabCount: Long): Boolean =
-    spark.conf.get("spark.graft.bpe.deltaPairCounts", "auto") match {
-      case "true"  => true
-      case "false" => false
-      case _ => vocabCount >= spark.conf
-        .get("spark.graft.bpe.deltaMinVocab",
-          bpeLocalVocabMax(spark).toString).toLong
-    }
-
-  /** Distributed BPE merge rounds with INCREMENTAL pair counts over an
+  /** On-cluster BPE merge rounds with INCREMENTAL pair counts over an
     * (s, c, ...) frame (extra columns — bpe_apply's `word` — ride along
     * untouched). The maintained state is the (pair, cnt) frame itself:
     * per round, (1) the winner is the top-1 of the MATERIALIZED pair
@@ -1091,18 +1060,30 @@ object TextOps {
     * words whose boundary-sentinel form contains the winning pair (old
     * pairs at −c, new pairs at +c, summed into the counts and zero rows
     * dropped); (3) the symbol frame rewrites lazily with the usual
-    * lineage stride. Late rounds merge rare pairs, so the touched set —
-    * and with it the per-round shuffle — shrinks toward a handful of
-    * words while the full recount would keep re-shuffling the entire
-    * vocabulary's pair explosion every round: at 100 TB-derived
-    * vocabularies (the regime past `spark.graft.bpe.localVocabMax`,
-    * where these rounds run on-cluster) that asymmetry is the round
-    * cost. Semantics are bit-identical to the full recount: the pair
+    * lineage stride. After merging a pair only the words containing it
+    * change their pair multiset, and late rounds merge rare pairs, so
+    * the touched set — and with it the per-round shuffle — shrinks
+    * toward a handful of words, where a full recount re-explodes and
+    * re-shuffles every adjacent pair of the vocabulary each round.
+    *
+    * Why the on-cluster loop is this one, measured against that full
+    * recount (forced on-cluster, paired runs under comparable calibration
+    * on one box; history/PLANS.md rounds 12-13,
+    * history/probe_bpe_gate_r13.json): the delta won 1.73x at 96k
+    * distinct words (116.4 vs 67.4 s), 1.95x at 256k (179.0 vs 91.7 s),
+    * 2.03x at 1M (217.7 vs 107.1 s) and 1.9x at 2M (243.5 vs 128.2 s) —
+    * everywhere past [[BpeLocalVocabMax]], where these rounds run. It
+    * lost only at a tiny forced-on-cluster vocabulary (11.4 vs 9.9 s),
+    * a regime the driver rounds own: there the loop is job-launch-bound
+    * and the delta adds one materialize job per round.
+    *
+    * The counts' per-round update is a FULL-OUTER JOIN, not union +
+    * re-aggregate (139.8 -> 128.2 s at 2M): see the loop body. The pair
     * multiset delta is exact (non-overlapping replace included, since
     * old and new symbol arrays are compared per word), the winner's
     * total order (cnt desc, pair asc in UTF-8 byte order) is the same
-    * Spark sort, and starvation surfaces as the same NAMED error when
-    * the counts frame empties.
+    * Spark sort, and starvation surfaces as [[bpeStarved]] when the
+    * counts frame empties.
     */
   private def distBpeRoundsDelta(s0: org.apache.spark.sql.DataFrame,
       rounds: Int, applyLast: Boolean)
@@ -1112,7 +1093,11 @@ object TextOps {
     val learned =
       scala.collection.mutable.ArrayBuffer.empty[(Long, String, String, Long)]
     for (k <- 1 to rounds) {
-      val m = topMergeAt(topPair(pc), k)
+      // The winning merge COLLECTS to the driver — one deliberately tiny
+      // row per round — and applies as LITERALS: no 1-row checkpoint job
+      // and no broadcast cross in any later round (round 9).
+      val m = topPair(pc).take(1).headOption
+        .getOrElse(throw bpeStarved(k, rounds))
       val (pair, merged) = (m.getString(0), m.getString(1))
       learned += ((k.toLong, pair, merged, m.getLong(2)))
       if (k < rounds || applyLast) {
@@ -1232,7 +1217,7 @@ object TextOps {
 
   val bpeFit = Q(
     "pipeline_bpe_fit",
-    s"BPE tokenizer TRAINING on-cluster to a real vocabulary — $BpeMerges " +
+    s"BPE tokenizer TRAINING to a real vocabulary — $BpeMerges " +
       "merge rounds of Sennrich et al. 2016 (ta_bpe_tokens APPLIES a " +
       "tokenizer; this learns one): per round, count adjacent symbol " +
       "pairs over the word-frequency table (weighted by word count — the " +
@@ -1243,12 +1228,13 @@ object TextOps {
       "boundary-sentinel string form that is exact at EVERY depth (a " +
       "pair containing a multi-char symbol can never false-match across " +
       "a symbol boundary; left-to-right non-overlap is the textbook " +
-      "merge order), recount. The loop is driver-bounded with per-round " +
-      "lineage cuts (the dedup_components pattern); the 1-row winning " +
-      "merge broadcasts into each re-write — the bounded cross this " +
-      "family always uses. Output: the learned merge table — rank, " +
-      "pair, merged symbol, pair count. The oracle's CTE chain is " +
-      "GENERATED for the same round count, never hand-unrolled.",
+      "merge order), recount. The word count runs on-cluster; the " +
+      s"rounds run on the driver up to $BpeLocalVocabMax distinct words " +
+      "and on-cluster past it, with incremental pair counts and per-" +
+      "stride lineage cuts; each round's winning merge is collected to " +
+      "the driver and applied as literals. Output: the learned merge " +
+      "table — rank, pair, merged symbol, pair count. The oracle's CTE " +
+      "chain is GENERATED for the same round count, never hand-unrolled.",
     Some(bpeChainDuck(BpeMerges, applyLast = false) +
       (1 to BpeMerges).map(k =>
         s"\n      SELECT $k::BIGINT AS rank, pair, merged, cnt FROM m$k")
@@ -1264,47 +1250,8 @@ object TextOps {
           .select(explode(toks).as("word"))
           .groupBy(col("word")).agg(count(lit(1)).cast("long").as("c"))
           .select(array_join(split(col("word"), ""), " ").as("s"), col("c")))
-      // Small-vocab fast path: the corpus-scale word count above is done;
-      // when the distinct vocabulary fits the bound, the 64 merge rounds
-      // are driver arithmetic, not 64 sequential Spark jobs.
-      var s = s0
-      if (nVocab <= bpeLocalVocabMax(spark)) {
-        val entries = s.collect().map(r => (r.getString(0), r.getLong(1)))
-        localBpeRounds(entries, BpeMerges, applyLast = false)._1
-          .toDF("rank", "pair", "merged", "cnt")
-      } else if (bpeUseDelta(spark, nVocab)) {
-        // On-cluster rounds with incremental pair counts: each round
-        // recounts only the words the previous merge touched.
-        distBpeRoundsDelta(s, BpeMerges, applyLast = false)._1
-          .toDF("rank", "pair", "merged", "cnt")
-      } else {
-      val learned = scala.collection.mutable.ArrayBuffer
-        .empty[(Long, String, String, Long)]
-      for (k <- 1 to BpeMerges) {
-        // The winning merge COLLECTS to the driver — one deliberately
-        // tiny row per round, the same driver-bounded posture as the
-        // ≤1001-key merge probe. Embedding it as LITERALS (round 9)
-        // removes both the 1-row checkpoint job and the crossJoin
-        // broadcast from every later round: the loop's real cost at
-        // vocabulary scale is sequential job launches, and this halves
-        // them (64 first() + 64/stride checkpoints, was 2 jobs/round).
-        val m = topMergeAt(topMerge(s), k)
-        val (pair, merged) = (m.getString(0), m.getString(1))
-        learned += ((k.toLong, pair, merged, m.getLong(2)))
-        if (k < BpeMerges) {
-          val next = s.select(mergeOnceCol(col("s"), pair, merged).as("s"),
-            col("c"))
-          // Lineage cut every BpeLineageStride rounds: a lazy round's
-          // topMerge re-executes at most stride−1 literal rewrites on
-          // the vocabulary-sized frame inside its own job — cheaper
-          // than a checkpoint job each round now that no TakeOrdered
-          // subtree can nest (merges are literals).
-          s = if (k % BpeLineageStride == 0) Q.materializeLoop(next)
-              else next
-        }
-      }
-      learned.toSeq.toDF("rank", "pair", "merged", "cnt")
-      }
+      bpeRounds(s0, nVocab, applyLast = false)._1
+        .toDF("rank", "pair", "merged", "cnt")
     })
 
   val bpeApply = Q(
@@ -1344,7 +1291,6 @@ object TextOps {
       FROM tf JOIN syms ON syms.word = tf.word
       GROUP BY tf.doc_id"""),
     (spark, dir) => {
-      import spark.implicits._
       val toks = filter(split(col("text"), " "), x => x =!= "")
       val tf = Q.materialize(
         t(spark, dir, "documents")
@@ -1356,42 +1302,11 @@ object TextOps {
       val (vocab, nVocab) = Q.materializeCounted(tf
         .groupBy(col("word")).agg(sum(col("c")).cast("long").as("c"))
         .withColumn("s", array_join(split(col("word"), ""), " ")))
-      val syms = if (nVocab <= bpeLocalVocabMax(spark)) {
-        // Small-vocab fast path (same gate as bpe_fit): merges re-learn
-        // and apply on the driver; only the vocab-row symbol table goes
-        // back out, broadcast into the corpus-scale join below.
-        val rows = vocab.select(col("word"), col("s"), col("c")).collect()
-        val fin = localBpeRounds(
-          rows.map(r => (r.getString(1), r.getLong(2))), BpeMerges,
-          applyLast = true)._2
-        broadcast(rows.zip(fin).toSeq.map { case (r, f) =>
-          val w = r.getString(0)
-          (w, w.codePointCount(0, w.length).toLong,
-            f.split(" ").count(_.nonEmpty).toLong)
-        }.toDF("word", "n_chr", "n_sym"))
-      } else if (bpeUseDelta(spark, nVocab)) {
-        // On-cluster rounds with incremental pair counts (the `word`
-        // column rides through the rewrite untouched).
-        distBpeRoundsDelta(vocab, BpeMerges, applyLast = true)._2
-          .select(col("word"), length(col("word")).cast("long").as("n_chr"),
-            size(filter(split(col("s"), " "), x => x =!= ""))
-              .cast("long").as("n_sym"))
-      } else {
-        var s = vocab
-        for (k <- 1 to BpeMerges) {
-          // Same shape as bpe_fit: the winning merge driver-collects (one
-          // tiny row) and applies as literals; the symbol frame strides.
-          val m = topMergeAt(topMerge(s.select(col("s"), col("c"))), k)
-          val next = s.select(col("word"),
-            mergeOnceCol(col("s"), m.getString(0), m.getString(1)).as("s"),
-            col("c"))
-          s = if (k % BpeLineageStride == 0 || k == BpeMerges)
-            Q.materializeLoop(next) else next
-        }
-        s.select(col("word"), length(col("word")).cast("long").as("n_chr"),
+      // The `word` column rides through the rounds untouched.
+      val syms = bpeRounds(vocab, nVocab, applyLast = true)._2
+        .select(col("word"), length(col("word")).cast("long").as("n_chr"),
           size(filter(split(col("s"), " "), x => x =!= ""))
             .cast("long").as("n_sym"))
-      }
       tf.join(syms, "word")
         .groupBy(col("doc_id"))
         .agg(sum(col("c")).cast("long").as("n_tokens"),

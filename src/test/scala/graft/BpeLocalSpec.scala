@@ -4,66 +4,40 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.SparkTestBase
 
-/** The BPE small-vocab fast path (merge rounds on the driver once the
-  * distributed word count fits `spark.graft.bpe.localVocabMax`) against
-  * the distributed loop it replaces at test scale: BOTH paths must emit
-  * the identical merge table and the identical per-doc symbol counts —
-  * the gate changes where the rounds run, never what they learn. Forcing
-  * the bound to 0 routes the same queries through the distributed loop,
-  * so this differential keeps that loop covered even though every test
-  * SF takes the local path.
+/** The BPE driver rounds (every test SF's vocabulary fits
+  * `TextOps.BpeLocalVocabMax`) against the on-cluster rounds that run
+  * past the bound: BOTH must emit the identical merge table and the
+  * identical per-doc symbol counts — the bound changes where the rounds
+  * run, never what they learn. `TextOps.clusterRoundsScope` builds the
+  * same queries through the on-cluster loop, so this differential keeps
+  * that loop covered at test scale. PlanShapeSpec sweeps only the
+  * driver-round plans for all-pairs products, so the on-cluster plans
+  * are checked here.
   */
 class BpeLocalSpec extends AnyFunSuite {
   private lazy val spark = SparkTestBase.spark
   private val dir = "/root/testdata/sf0.001"
 
-  private def withConf[T](key: String, v: String)(f: => T): T = {
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key, v)
-    try f
-    finally prev match {
-      case Some(p) => spark.conf.set(key, p)
-      case None => spark.conf.unset(key)
-    }
+  private def rows(df: org.apache.spark.sql.DataFrame): Seq[Seq[Any]] =
+    df.collect().map(_.toSeq).toSeq.sortBy(_.mkString("\u0000"))
+
+  private def query(name: String) = graft.SparkEntry.queries(name)(spark, dir)
+
+  private def onCluster(name: String): Seq[Seq[Any]] = {
+    val df = TextOps.clusterRoundsScope(query(name))
+    val p = df.queryExecution.executedPlan.toString
+    assert(!p.contains("BroadcastNestedLoopJoin"),
+      s"$name on-cluster rounds grew an all-pairs product:\n$p")
+    rows(df)
   }
 
-  private def withBound[T](n: Long)(f: => T): T =
-    withConf("spark.graft.bpe.localVocabMax", n.toString)(f)
-
-  private def rows(name: String): Seq[Seq[Any]] =
-    graft.SparkEntry.queries(name)(spark, dir)
-      .collect().map(_.toSeq).toSeq.sortBy(_.mkString("\u0000"))
-
   test("pipeline_bpe_fit: local rounds == distributed rounds") {
-    val local = withBound(Long.MaxValue)(rows("pipeline_bpe_fit"))
-    val dist = withBound(0L)(rows("pipeline_bpe_fit"))
-    assert(local.nonEmpty && local == dist)
+    val local = rows(query("pipeline_bpe_fit"))
+    assert(local.nonEmpty && local == onCluster("pipeline_bpe_fit"))
   }
 
   test("pipeline_bpe_apply: local rounds == distributed rounds") {
-    val local = withBound(Long.MaxValue)(rows("pipeline_bpe_apply"))
-    val dist = withBound(0L)(rows("pipeline_bpe_apply"))
-    assert(local.nonEmpty && local == dist)
-  }
-
-  // Delta-vs-full differential (VERDICT r11 #8): the incremental
-  // pair-count loop must learn the SAME merges and symbol counts as the
-  // full recount loop — the delta changes what gets recounted, never
-  // what wins. Both runs force the distributed path (bound 0); the flag
-  // toggles the maintenance strategy.
-  test("pipeline_bpe_fit: delta pair counts == full recount") {
-    val delta = withBound(0L)(withConf("spark.graft.bpe.deltaPairCounts",
-      "true")(rows("pipeline_bpe_fit")))
-    val full = withBound(0L)(withConf("spark.graft.bpe.deltaPairCounts",
-      "false")(rows("pipeline_bpe_fit")))
-    assert(delta.nonEmpty && delta == full)
-  }
-
-  test("pipeline_bpe_apply: delta pair counts == full recount") {
-    val delta = withBound(0L)(withConf("spark.graft.bpe.deltaPairCounts",
-      "true")(rows("pipeline_bpe_apply")))
-    val full = withBound(0L)(withConf("spark.graft.bpe.deltaPairCounts",
-      "false")(rows("pipeline_bpe_apply")))
-    assert(delta.nonEmpty && delta == full)
+    val local = rows(query("pipeline_bpe_apply"))
+    assert(local.nonEmpty && local == onCluster("pipeline_bpe_apply"))
   }
 }

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.ShuffleDependency
+import org.apache.spark.{GraftSparkShim, ShuffleDependency}
 import org.apache.spark.rdd.RDD
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted}
 import org.scalatest.funsuite.AnyFunSuite
@@ -60,10 +60,8 @@ class MapReduceShuffleSpec extends AnyFunSuite {
       sc.clearJobGroup()
       assert(groups == MrCorpus.wcLines.size)
 
-      // Listener events are async: wait for the map and the reduce stage.
-      val deadline = System.currentTimeMillis() + 30000
-      while (listener.synchronized(listener.stagesDone) < 2 &&
-          System.currentTimeMillis() < deadline) Thread.sleep(50)
+      // Listener events are async: drain the bus before reading them.
+      GraftSparkShim.waitListenerBusEmpty(sc, 30000)
       val perFile = MrCorpus.books.map(_.words.distinct.size.toLong).sum
       assert(perFile < MrCorpus.totalWords)
       listener.synchronized {

@@ -20,13 +20,17 @@ class MaterializeSpec extends AnyFunSuite {
 
   /** Runs `f` with a fresh checkpoint dir on the shared context; `null`
     * resets a local-mode context to no dir, so no later suite runs on
-    * reliable checkpoints.
+    * reliable checkpoints. The dir is deleted afterwards.
     */
   private def withCheckpointDir[T](f: java.io.File => T): T = {
-    val ckpt = java.nio.file.Files.createTempDirectory("graft-ckpt").toFile
+    val ckpt = java.nio.file.Files.createTempDirectory("graft-ckpt")
     spark.sparkContext.setCheckpointDir(ckpt.toString)
-    try f(ckpt)
-    finally spark.sparkContext.setCheckpointDir(null)
+    try f(ckpt.toFile)
+    finally {
+      spark.sparkContext.setCheckpointDir(null)
+      java.nio.file.Files.walk(ckpt).sorted(java.util.Comparator.reverseOrder())
+        .forEach(p => java.nio.file.Files.delete(p))
+    }
   }
 
   /** The `rdd-*` dirs under a checkpoint dir: Spark writes each

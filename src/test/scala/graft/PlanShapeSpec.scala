@@ -130,7 +130,7 @@ class PlanShapeSpec extends AnyFunSuite {
       "dedup_semantic", "pipeline_modal_curation", "ta_tfidf",
       "ta_unigram_logprob", "pipeline_token_budget", "q_events_setops",
       "q_hll_merge", "q_quantile_sketch", "q_quantile_merge",
-      "sim_power_iteration", "pipeline_bpe_fit", "q_events_gapfill",
+      "sim_power_iteration", "q_events_gapfill",
       "pipeline_quality_fit",
       // 1-row node-count scalar cross in the teleport term (r7); the loop
       // body's own crosses sit behind materializeLoop and are audited in
@@ -138,9 +138,6 @@ class PlanShapeSpec extends AnyFunSuite {
       "graph_pagerank",
       // 1-row corpus-stats (avgdl, n_docs) scalar cross (r7).
       "ta_bm25",
-      // 1-row learned-merge crosses (the bpe_fit pattern) applied to the
-      // vocabulary frame (r7).
-      "pipeline_bpe_apply",
       // 1-row (N_tgt, N_raw, |V|) totals cross into the lexicon — the
       // unigram_logprob pattern (r7).
       "pipeline_dsir_select",

@@ -131,7 +131,12 @@ class StreamsSpec extends AnyFunSuite {
       val closed = rows.filter(_.closed)
       assert(closed.exists(c => c.n_events == 2 && c.total_value == 3.0),
         s"restored state lost pre-restart events: ${rows.mkString(", ")}")
-    } finally q2.stop()
+    } finally {
+      q2.stop()
+      java.nio.file.Files.walk(java.nio.file.Paths.get(ckpt))
+        .sorted(java.util.Comparator.reverseOrder())
+        .forEach(p => java.nio.file.Files.delete(p))
+    }
   }
 
   test("streaming LSH dedup pairs arrivals with ALL prior bucket members") {

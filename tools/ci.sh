@@ -4,6 +4,11 @@
 #   tools/ci.sh              # full run: sbt test + stress + 2 oracle sweeps
 #   STRESS_TRIALS=2 tools/ci.sh   # fewer stress trials
 #   CI_BENCH=1 tools/ci.sh        # also run the sf0.1 benchmark at the end
+#   CI_STREAM_BENCH=1 tools/ci.sh # also run the RocksDB stream benchmark
+#
+# Every step that runs a main (the bench smoke, both sweeps and the two
+# opt-in benchmarks) runs it through tools/run_main.sh, on the classes
+# that step 1's `sbt test` compiled.
 #
 # Steps (each recorded in the pass/fail summary; the script runs ALL steps
 # and exits nonzero if any failed, so one broken leg can't hide the rest):
@@ -128,7 +133,7 @@ fi
 if [ "${CI_STREAM_BENCH:-0}" = "1" ]; then
   echo "=== ci: stream bench (RocksDB) ==="
   if STREAM_BENCH_OUT=/tmp/graft_ci_stream_bench.json \
-       sbt -batch "runMain graft.StreamBench" >/tmp/graft_ci_stream.log 2>&1 \
+       tools/run_main.sh graft.StreamBench >/tmp/graft_ci_stream.log 2>&1 \
      && python3 -c 'import json; d=json.load(open("/tmp/graft_ci_stream_bench.json")); assert d["streams"]'; then
     cat /tmp/graft_ci_stream_bench.json
     record "stream bench" PASS
@@ -142,7 +147,7 @@ if [ "${CI_BENCH:-0}" = "1" ]; then
   echo "=== ci: bench (sf0.1) ==="
   if SPARK_GRAFT_SF_DIR=${BENCH_SF_DIR:-/root/testdata/sf0.1} \
        BENCH_OUT=/tmp/graft_ci_bench.json \
-       sbt -batch "runMain graft.Bench" >/tmp/graft_ci_bench.log 2>&1 \
+       tools/run_main.sh graft.Bench >/tmp/graft_ci_bench.log 2>&1 \
      && python3 -c 'import json,sys; d=json.load(open("/tmp/graft_ci_bench.json")); sys.exit(0 if d["value"] > 0 else 1)'; then
     cat /tmp/graft_ci_bench.json
     record "bench sf0.1" PASS
