@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
-
 /** Benchmark main (driver contract): runs the headline queries on
   * SPARK_GRAFT_SF_DIR, prints ONE JSON line
   * `{"metric":"total","value":N,"unit":"sec","queries":{...},"sf":...}`.
@@ -74,10 +72,6 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val spark = Sessions.local("graft-bench")
-    // SPARK_GRAFT_LOG=INFO turns on per-job timing lines for
-    // tools/profile_query.sh (the local-mode stand-in for the Spark UI's
-    // stage timeline — the UI is off in every harness JVM). Default WARN.
-    spark.sparkContext.setLogLevel(sys.env.getOrElse("SPARK_GRAFT_LOG", "WARN"))
 
     // Untimed warmup on the BENCHMARKED dataset: loads classes, JITs the
     // codegen paths, and scans every table in sfDir once — warming a
@@ -110,20 +104,6 @@ object Bench {
     // inside ±9% and the headline total inside ±11%, so 3 is the default.
     val repeat = sys.env.get("SPARK_GRAFT_BENCH_REPEAT")
       .flatMap(_.toIntOption).getOrElse(3) max 1
-    // Always-on task-metric listener. Per-query task counts in the
-    // artifact (VERDICT r13 #7) make serial-by-design (the decode
-    // family's zero-exchange map law over a one-split scan)
-    // distinguishable from serial-by-bug (a one-split scan feeding heavy
-    // map work) without jstack archaeology. Per-query spill and shuffle
-    // bytes tell a spill knee (per-partition bytes outgrew execution
-    // memory; fix = partitions ∝ data) from an algorithmic term (work
-    // grew super-linearly; fix = the plan). The last repeat of each query
-    // is bracketed by deterministic listenerBus.waitUntilEmpty drains, so
-    // each recorded delta is exactly one run — no trailing-task bleed, no
-    // summing across repeats. A few AtomicLong adds per task end — no
-    // measurable cost next to a task's own overhead.
-    val taskCount = new TaskCountListener
-    spark.sparkContext.addSparkListener(taskCount)
     // Optional isolation filter (comma-separated query names): lets a
     // fresh JVM time a suspect query without the preceding sweeps. Any
     // DECLARED query can be isolated (not just headline names), and an
@@ -139,26 +119,18 @@ object Bench {
           s"SPARK_GRAFT_BENCH_ONLY: unknown queries ${unknown.mkString(",")}")
         headline.filter(f) ++ f.diff(headline.toSet).toSeq.sorted
     }
-    val spillRows = scala.collection.mutable.LinkedHashMap.empty[String, String]
-    // Deterministic listener-bus drain (replaces a Thread.sleep(200) that
-    // could still let trailing task-end events land on the next query's
-    // spill row): waitUntilEmpty blocks until every posted event is
-    // delivered, so the before/after snapshots bracket exactly this run.
-    // Returns false (instead of aborting the whole sweep on the shim's
-    // TimeoutException) when the bus is still busy after 30 s under heavy
-    // spill — the affected spill row is then marked approximate rather
-    // than the bench run dying mid-sweep.
-    def drainBus(): Boolean =
-      try {
-        org.apache.spark.GraftSparkShim.waitListenerBusEmpty(
-          spark.sparkContext, 30000L)
-        true
-      } catch {
-        case _: java.util.concurrent.TimeoutException =>
-          System.err.println(
-            "[bench] listener bus still busy after 30 s; spill row approximate")
-          false
-      }
+    // The last timed repeat of each query runs inside a TaskLog, which
+    // gives the query's row in `tasks`, `spill` and `jobs`. Per-query task
+    // counts make serial-by-design (the decode family's zero-exchange map
+    // law over a one-split scan) distinguishable from serial-by-bug (a
+    // one-split scan feeding heavy map work). Spill and shuffle bytes tell
+    // a spill knee (per-partition bytes outgrew execution memory; fix =
+    // partitions ∝ data) from an algorithmic term (work grew
+    // super-linearly; fix = the plan). In `jobs`, the query's time minus
+    // `s` is the driver time outside Spark jobs. The queries are
+    // deterministic, so one run's log is per-RUN, not repeat× the figures.
+    // Only the rendered rows are kept, not the log's events.
+    val rows = scala.collection.mutable.LinkedHashMap.empty[String, Seq[String]]
     // Isolation-mode warm pass: a fresh JVM timing one query pays cold
     // shared-builder materializations the full sweep amortizes across
     // neighbors (dedup_keep_best: 5.2 s isolated vs 3.76 s in-sweep, same
@@ -166,7 +138,6 @@ object Bench {
     // timed repeats when repeat > 1; a repeat=1 run times a single cold
     // pass. The artifact records which mode ran (isolation_warm).
     val isolationWarm = only.nonEmpty && repeat > 1
-    val taskRows = scala.collection.mutable.LinkedHashMap.empty[String, Long]
     val loadavgStart = loadavg()
     val raw = selected.filter(queries.contains).map { name =>
       if (isolationWarm) {
@@ -175,30 +146,26 @@ object Bench {
         catch { case _: Throwable => () } // timed pass reports the failure
         graft.queries.Q.releaseMaterialized(spark)
       }
-      val times = (1 to repeat).map { i =>
-        // Task-metric attribution records the last iteration's delta:
-        // the queries are deterministic (same bytes every repeat), so
-        // this is per-RUN bytes, not repeat× the real spill.
-        var approx = false
-        val last = i == repeat
-        if (last) approx ||= !drainBus()
-        val before = if (last) taskCount.snapshot() else null
+      def timed(): Double = {
         val t0 = System.nanoTime()
-        val ok =
-          try {
-            queries(name)(spark, sfDir)
-              .write.format("noop").mode("overwrite").save()
-            true
-          } catch {
-            case e: Throwable =>
-              System.err.println(s"[bench] $name failed: ${e.getMessage}")
-              false
-          }
-        val dt = if (ok) (System.nanoTime() - t0) / 1e9 else -1.0
-        if (last) {
-          approx ||= !drainBus()
-          taskRows(name) = taskCount.tasks - before(0)
-          spillRows(name) = taskCount.spillJson(before, approx)
+        try {
+          queries(name)(spark, sfDir)
+            .write.format("noop").mode("overwrite").save()
+          (System.nanoTime() - t0) / 1e9
+        } catch {
+          case e: Throwable =>
+            System.err.println(s"[bench] $name failed: ${e.getMessage}")
+            -1.0
+        }
+      }
+      val times = (1 to repeat).map { i =>
+        val dt = if (i < repeat) timed() else {
+          val (dt, log) = TaskLog.of(spark.sparkContext)(timed())
+          if (!log.complete) System.err.println(
+            s"[bench] listener bus did not drain; $name's rows approximate")
+          rows(name) = Seq(log.tasks.size.toString, spillJson(log),
+            s"""{"n":${log.jobs.size},"s":${jf(log.jobSeconds)}}""")
+          dt
         }
         // Per-repeat release of the dead materialized frames (round 14,
         // guide §5 "unpersist when done" — see Q.releaseMaterialized):
@@ -240,8 +207,9 @@ object Bench {
     // make a breaking change read as a speedup.
     val total =
       if (results.exists(_._2 < 0)) -1.0 else results.map(_._2).sum
-    val spillField = spillRows.map { case (k, v) => "\"" + k + "\":" + v }
-      .mkString(""""spill":{""", ",", "},")
+    def field(key: String, i: Int): String =
+      rows.map { case (k, r) => "\"" + k + "\":" + r(i) }
+        .mkString("\"" + key + "\":{", ",", "},")
     // Run provenance IN the artifact: loadavg before/after the timed
     // sweep plus the kernel's runnable/total process counts — a loadavg
     // far above this JVM's own core use means the numbers were measured
@@ -251,16 +219,10 @@ object Bench {
       s""""loadavg_end":"$loadavgEnd","cpus":${Sessions.cpus},""" +
       s""""shuffle_partitions":${spark.conf.get("spark.sql.shuffle.partitions")},""" +
       s""""isolation_warm":$isolationWarm}"""
-    // Per-query task counts of the LAST timed repeat (VERDICT r13 #7):
-    // a query whose heavy stage is one task on a 32-core box is either
-    // map-only-over-one-split by design or under-split by bug — the
-    // artifact now says which queries to ask that question about.
-    val tasksField = taskRows
-      .map { case (k, v) => "\"" + k + "\":" + v }
-      .mkString(""""tasks":{""", ",", "},")
     val line =
       s"""{"metric":"total","value":${jf(total)},"unit":"sec",""" +
-        s""""queries":$qs,"spreads":$spreads,$tasksField$spillField""" +
+        s""""queries":$qs,"spreads":$spreads,""" +
+        field("tasks", 0) + field("spill", 1) + field("jobs", 2) +
         s""""repeat":$repeat,"provenance":$prov,"sf":"$sfDir"}"""
     println(line)
     // Also write the line to a file: sbt decorates stdout with [info]
@@ -289,43 +251,19 @@ object Bench {
       .trim.split("\\s+").take(4).mkString(" ")
     catch { case _: Throwable => "" }
 
-  /** Cumulative task-end count and task-metric totals (thread-safe:
-    * onTaskEnd fires on the listener-bus thread while the bench thread
-    * snapshots).
-    */
-  private[graft] final class TaskCountListener extends SparkListener {
-    import java.util.concurrent.atomic.AtomicLong
-    private val n = new AtomicLong
-    private val memSpill = new AtomicLong
-    private val diskSpill = new AtomicLong
-    private val shufWrite = new AtomicLong
-    private val shufRead = new AtomicLong
-    override def onTaskEnd(te: SparkListenerTaskEnd): Unit = {
-      n.incrementAndGet()
-      val m = te.taskMetrics
-      if (m != null) {
-        memSpill.addAndGet(m.memoryBytesSpilled)
-        diskSpill.addAndGet(m.diskBytesSpilled)
-        shufWrite.addAndGet(m.shuffleWriteMetrics.bytesWritten)
-        shufRead.addAndGet(m.shuffleReadMetrics.totalBytesRead)
-      }
-    }
-    def tasks: Long = n.get
-    /** (tasks, memory spill, disk spill, shuffle write, shuffle read). */
-    def snapshot(): Array[Long] =
-      Array(n.get, memSpill.get, diskSpill.get, shufWrite.get, shufRead.get)
-    def spillJson(before: Array[Long], approx: Boolean): String = {
-      val d = snapshot().zip(before).map { case (a, b) => a - b }.drop(1)
-      def gb(x: Long): String =
-        String.format(java.util.Locale.ROOT, "%.2f", Double.box(x / 1e9))
-      // approx=true: a listener-bus drain timed out around this row's
-      // snapshots, so trailing task-end events may bleed across the
-      // bracket — the bytes are attribution-approximate, and the row
-      // says so itself instead of the sweep aborting.
-      val approxField = if (approx) ""","approx":true""" else ""
-      s"""{"spill_mem_gb":${gb(d(0))},"spill_disk_gb":${gb(d(1))},""" +
-        s""""shuffle_write_gb":${gb(d(2))},"shuffle_read_gb":${gb(d(3))}""" +
-        approxField + "}"
-    }
+  /** Spill and shuffle bytes summed over a log's task ends. */
+  private def spillJson(log: TaskLog): String = {
+    val ms = log.tasks.map(_.taskMetrics).filter(_ != null)
+    def gb(bytes: org.apache.spark.executor.TaskMetrics => Long): String =
+      String.format(java.util.Locale.ROOT, "%.2f", Double.box(ms.map(bytes).sum / 1e9))
+    // approx=true: the listener-bus drain timed out, so task ends of this
+    // run may be missing — the bytes are a lower bound, and the row says
+    // so itself instead of the sweep aborting.
+    val approxField = if (log.complete) "" else ""","approx":true"""
+    s"""{"spill_mem_gb":${gb(_.memoryBytesSpilled)},""" +
+      s""""spill_disk_gb":${gb(_.diskBytesSpilled)},""" +
+      s""""shuffle_write_gb":${gb(_.shuffleWriteMetrics.bytesWritten)},""" +
+      s""""shuffle_read_gb":${gb(_.shuffleReadMetrics.totalBytesRead)}""" +
+      approxField + "}"
   }
 }

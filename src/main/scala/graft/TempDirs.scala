@@ -58,7 +58,8 @@ object TempDirs {
     drainHooks.forEach(cb => cb())
   }
 
-  private def rmTree(f: java.io.File): Unit = {
+  /** Delete `f` and, if it is a directory, everything under it. */
+  private[graft] def rmTree(f: java.io.File): Unit = {
     if (f.isDirectory) Option(f.listFiles).foreach(_.foreach(rmTree))
     f.delete()
   }

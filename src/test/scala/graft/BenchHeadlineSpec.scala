@@ -29,40 +29,40 @@ class BenchHeadlineSpec extends AnyFunSuite {
       s"oracled queries: ${SparkEntry.oracleSql.size}, docs say 183")
   }
 
-  test("per-query task counting: the listener counts every task end") {
-    // VERDICT r13 #7: the bench artifact carries a `tasks` count per
-    // query (delta of this counter over the last timed repeat) so
-    // serial-by-design (a zero-exchange decode over a one-split scan)
-    // is distinguishable from serial-by-bug without thread-dump
-    // archaeology. Pin the counter's mechanism: task-end events
-    // increment it by exactly the number of tasks the job ran.
+  test("TaskLog logs the tasks, shuffle bytes and jobs of its block only") {
+    // Bench's `tasks`, `spill` and `jobs` rows are read from a TaskLog of
+    // each query's last timed run.
     val spark = SparkTestBase.spark
-    val l = new Bench.TaskCountListener
-    spark.sparkContext.addSparkListener(l)
+    val sc = spark.sparkContext
+    val parts = 7
+    def noop(df: org.apache.spark.sql.Dataset[_]): Unit =
+      df.write.format("noop").mode("overwrite").save()
+    def shuffleWritten(log: TaskLog): Long =
+      log.tasks.map(_.taskMetrics.shuffleWriteMetrics.bytesWritten).sum
+
+    val (_, mapOnly) = TaskLog.of(sc)(noop(spark.range(0, 1000, 1, parts)))
+    assert(mapOnly.complete)
+    assert(mapOnly.tasks.size == parts,
+      s"expected exactly $parts task ends, got ${mapOnly.tasks.size}")
+    assert(shuffleWritten(mapOnly) == 0L)
+    val (_, shuffled) = TaskLog.of(sc)(noop(spark.range(0, 1000, 1, parts).repartition(3)))
+    assert(shuffleWritten(shuffled) > 0L)
+
+    // A thread started before the block carries no job group, so the job
+    // it runs while the block's listener is registered is not logged.
+    val outside = java.util.concurrent.Executors.newSingleThreadExecutor()
     try {
-      org.apache.spark.GraftSparkShim.waitListenerBusEmpty(
-        spark.sparkContext, 30000L)
-      val before = l.tasks
-      val parts = 7
-      spark.range(0, 1000, 1, parts).toDF("id")
-        .write.format("noop").mode("overwrite").save()
-      org.apache.spark.GraftSparkShim.waitListenerBusEmpty(
-        spark.sparkContext, 30000L)
-      assert(l.tasks - before == parts,
-        s"expected exactly $parts task ends, got ${l.tasks - before}")
-      // The same listener carries the spill/shuffle columns: a map-only
-      // job writes no shuffle bytes, a job with an exchange does.
-      def shuffleWritten(job: => Unit): Long = {
-        val b = l.snapshot()(3)
-        job
-        org.apache.spark.GraftSparkShim.waitListenerBusEmpty(
-          spark.sparkContext, 30000L)
-        l.snapshot()(3) - b
+      outside.submit(() => 0L).get()
+      val (n, log) = TaskLog.of(sc) {
+        assert(outside.submit(() => sc.parallelize(1 to 10, 3).count()).get() == 10L)
+        (1 to 3).map(_ => sc.parallelize(1 to 10, 2).count()).sum
       }
-      assert(shuffleWritten(spark.range(0, 1000, 1, parts)
-        .write.format("noop").mode("overwrite").save()) == 0L)
-      assert(shuffleWritten(spark.range(0, 1000, 1, parts)
-        .repartition(3).write.format("noop").mode("overwrite").save()) > 0L)
-    } finally spark.sparkContext.removeSparkListener(l)
+      assert(n == 30L)
+      assert(log.jobs.size == 3, log.jobs)
+      assert(log.tasks.size == 6, log.tasks)
+      assert(log.stages.size == 3)
+      assert(log.jobSeconds > 0.0 &&
+        log.jobSeconds <= log.jobs.map { case (a, b) => b - a }.sum / 1e3)
+    } finally outside.shutdown()
   }
 }

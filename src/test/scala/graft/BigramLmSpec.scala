@@ -61,7 +61,7 @@ class BigramLmSpec extends AnyFunSuite {
 
   test("word-order destruction moves bigram xent but not unigram xent") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("bigram-order").toString
+    val dir = graft.TestDirs.create("bigram-order").toString
     val base = spark.read
       .parquet("/root/testdata/sf0.001/documents.parquet")
       .selectExpr("doc_id", "text")

@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions.{col, md5}
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -38,7 +36,7 @@ class BloomIndexSpec extends AnyFunSuite {
 
   test("pre-index files are conservatively kept; compact materializes " +
       "filters; the bloom then skips most files on a digest point read") {
-    val table = Files.createTempDirectory("graft_bloom1").toString
+    val table = TestDirs.create("graft_bloom1").toString
     Snapshots.publish(docs.repartitionByRange(8, col("doc_id")), table) // v1
     val probe = docs.filter(col("doc_id") === 42L)
       .select(col("digest")).first().getString(0)
@@ -70,7 +68,7 @@ class BloomIndexSpec extends AnyFunSuite {
   }
 
   test("long-typed probe, DV interplay, and drop semantics") {
-    val table = Files.createTempDirectory("graft_bloom2").toString
+    val table = TestDirs.create("graft_bloom2").toString
     Snapshots.publish(docs.repartitionByRange(8, col("doc_id")), table) // v1
     Snapshots.addBloomIndex(table, "doc_id")                            // v2
     Snapshots.optimize(spark, table, 8L * 1024 * 1024)                  // v3
@@ -96,7 +94,7 @@ class BloomIndexSpec extends AnyFunSuite {
 
   test("merge on a bloom-indexed key narrows findTouchedFiles to filter " +
       "bytes and stays row-exact") {
-    val table = Files.createTempDirectory("graft_bloom4").toString
+    val table = TestDirs.create("graft_bloom4").toString
     Snapshots.publish(docs.repartitionByRange(8, col("doc_id")), table) // v1
     Snapshots.addBloomIndex(table, "doc_id")                            // v2
     Snapshots.compact(spark, table, 8, col("doc_id"))                   // v3
@@ -131,7 +129,7 @@ class BloomIndexSpec extends AnyFunSuite {
 
   test("probe hashing follows the column's PHYSICAL type: Int probes on " +
       "INT32 and Float probes on FLOAT find their rows (no false negatives)") {
-    val table = Files.createTempDirectory("graft_bloom5").toString
+    val table = TestDirs.create("graft_bloom5").toString
     // id32 is IntegerType → parquet INT32: the written filter hashed
     // 4-byte values, so an Int probe must go through hash(int) —
     // hashing i.toLong would "prove absent" rows that exist.
@@ -174,7 +172,7 @@ class BloomIndexSpec extends AnyFunSuite {
     import org.apache.spark.sql.functions.{date_add, lit, to_date}
     // Null key in the delta: dropped from the bloom probe set (a null
     // matches nothing), the row itself lands as an insert.
-    val t1 = Files.createTempDirectory("graft_bloom6").toString
+    val t1 = TestDirs.create("graft_bloom6").toString
     Snapshots.publish(docs.repartitionByRange(4, col("doc_id")), t1)   // v1
     Snapshots.addBloomIndex(t1, "doc_id")                              // v2
     Snapshots.compact(spark, t1, 4, col("doc_id"))                     // v3
@@ -194,7 +192,7 @@ class BloomIndexSpec extends AnyFunSuite {
 
     // Date-typed merge key: pruneFilesBloomAny does not hash dates —
     // the merge must degrade to the full scan, never crash.
-    val t2 = Files.createTempDirectory("graft_bloom7").toString
+    val t2 = TestDirs.create("graft_bloom7").toString
     val dated = docs.filter(col("doc_id") < 100)
       .select(col("doc_id"), date_add(to_date(lit("2026-01-01")),
         col("doc_id").cast("int")).as("day"), col("n_chars"))
@@ -213,7 +211,7 @@ class BloomIndexSpec extends AnyFunSuite {
 
   test("appends after the index carry filters; time travel sees each " +
       "version's property") {
-    val table = Files.createTempDirectory("graft_bloom3").toString
+    val table = TestDirs.create("graft_bloom3").toString
     Snapshots.publish(docs.filter(col("doc_id") < 300)
       .repartitionByRange(4, col("doc_id")), table)                     // v1
     Snapshots.addBloomIndex(table, "digest")                            // v2

@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions.col
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -31,7 +29,7 @@ class BucketingSpec extends AnyFunSuite {
 
   test("bucketed equi join plans with zero shuffles; plain parquet " +
       "shuffles both sides; results identical") {
-    val tmp = Files.createTempDirectory("graft_bucket_spec").toString
+    val tmp = TestDirs.create("graft_bucket_spec").toString
     val tag = tmp.substring(tmp.lastIndexOf('/') + 1)
     val li = spark.read.parquet(s"$dir/lineitem.parquet")
       .select(col("l_orderkey"), col("l_quantity"))
@@ -65,7 +63,7 @@ class BucketingSpec extends AnyFunSuite {
   }
 
   test("a bucket-count mismatch falls back to shuffling one side only") {
-    val tmp = Files.createTempDirectory("graft_bucket_mis").toString
+    val tmp = TestDirs.create("graft_bucket_mis").toString
     val tag = tmp.substring(tmp.lastIndexOf('/') + 1)
     val li = spark.read.parquet(s"$dir/lineitem.parquet")
       .select(col("l_orderkey"), col("l_quantity"))

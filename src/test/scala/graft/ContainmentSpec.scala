@@ -18,7 +18,7 @@ class ContainmentSpec extends AnyFunSuite {
 
   test("planted subset docs surface with containment exactly 1.0") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("containment").toString
+    val dir = graft.TestDirs.create("containment").toString
     val rows = (0 until 20).flatMap { i =>
       val words = (0 until 80).map(k => s"w${(i * 997 + k * 131) % 4096}")
       Seq((i.toLong, "base", words.mkString(" ")),

@@ -3,6 +3,7 @@ package graft
 import java.util.concurrent.ConcurrentHashMap
 
 import org.apache.spark.TaskContext
+import org.apache.spark.scheduler.SparkListenerTaskEnd
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.apps.AppRegistry
@@ -11,9 +12,11 @@ import graft.engine.{KV, MRApp, MapReduce}
 /** The reference's crash-recovery methodology (src/main/test-mr.sh:284-330 /
   * src/mrapps/crash.go): inject task failures mid-job and require the output
   * to still match the no-crash golden run. Here the failure is a
-  * deterministic first-attempt exception inside the map UDF; Spark's task
-  * re-execution (the E11 analog of the coordinator's 10 s requeue) must
-  * retry and converge to the identical result.
+  * deterministic first-attempt exception inside a map or reduce UDF; Spark's
+  * task re-execution (the E11 analog of the coordinator's 10 s requeue; the
+  * test master `local[4,2]` allows one retry) must retry and converge to
+  * the identical result. Each run's [[TaskLog]] shows the crash: exactly
+  * one failed attempt 0, then a successful attempt 1 of the same partition.
   */
 class CrashRecoverySpec extends AnyFunSuite {
   private lazy val spark = SparkTestBase.spark
@@ -35,12 +38,7 @@ class CrashRecoverySpec extends AnyFunSuite {
       def reduce(key: String, values: Seq[String]): String =
         inner.reduce(key, values)
     }
-    val got = MapReduce.run(spark, crashing, glob, 10)
-      .map { case (k, v) => s"$k $v" }.collect().toSeq.sorted
-    val want = MapReduce
-      .runSequential(inner, MapReduce.globPaths(glob)).sorted
-    assert(CrashRecoverySpec.crashed.size > 0, "no crash was injected")
-    assert(got == want)
+    assertRecovered(crashing, inner)
   }
 
   test("reduce-side task crash on first attempt still matches the golden run") {
@@ -62,12 +60,28 @@ class CrashRecoverySpec extends AnyFunSuite {
         inner.reduce(key, values)
       }
     }
-    val got = MapReduce.run(spark, crashing, glob, 10)
-      .map { case (k, v) => s"$k $v" }.collect().toSeq.sorted
+    assertRecovered(crashing, inner)
+  }
+
+  /** Runs `crashing` and checks its output against `inner`'s sequential
+    * run, and its task log for one crash and its retry.
+    */
+  private def assertRecovered(crashing: MRApp, inner: MRApp): Unit = {
+    val (got, log) = TaskLog.of(spark.sparkContext) {
+      MapReduce.run(spark, crashing, glob, 10)
+        .map { case (k, v) => s"$k $v" }.collect().toSeq.sorted
+    }
+    assert(log.complete)
+    val failed = log.tasks.filterNot(_.taskInfo.successful)
+    assert(failed.size == 1, "failed task attempts")
+    val crash = failed.head
+    assert(crash.taskInfo.attemptNumber == 0)
+    def slot(t: SparkListenerTaskEnd) = (t.stageId, t.taskInfo.index)
+    val retries = log.tasks.filter(t => slot(t) == slot(crash) && t.taskInfo.successful)
+    assert(retries.map(_.taskInfo.attemptNumber) == Seq(1),
+      s"retries of stage ${crash.stageId} partition ${crash.taskInfo.index}")
     val want = MapReduce
       .runSequential(inner, MapReduce.globPaths(glob)).sorted
-    assert(CrashRecoverySpec.reduceCrashed.size > 0,
-      "no reduce crash was injected")
     assert(got == want)
   }
 }
@@ -76,12 +90,12 @@ object CrashRecoverySpec {
   /** Crash exactly once per matching file across the job (executor-local
     * map is enough: local mode shares the JVM).
     */
-  val crashed = new ConcurrentHashMap[String, Boolean]()
+  private val crashed = ConcurrentHashMap.newKeySet[String]()
   def shouldCrash(file: String): Boolean =
-    file.contains("sherlock") && crashed.putIfAbsent(file, true) == null
+    file.contains("sherlock") && crashed.add(file)
 
   /** Same once-only marker for the reduce stage, keyed by reduce key. */
-  val reduceCrashed = new ConcurrentHashMap[String, Boolean]()
+  private val reduceCrashed = ConcurrentHashMap.newKeySet[String]()
   def shouldCrashReduce(key: String): Boolean =
-    key == "Sherlock" && reduceCrashed.putIfAbsent(key, true) == null
+    key == "Sherlock" && reduceCrashed.add(key)
 }

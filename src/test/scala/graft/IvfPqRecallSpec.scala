@@ -35,7 +35,7 @@ class IvfPqRecallSpec extends AnyFunSuite {
     * near-copy (vec_id 10000+q) of each query vector q < 20.
     */
   private lazy val dir: String = {
-    val out = java.nio.file.Files.createTempDirectory("graft-ivfpq").toString
+    val out = graft.TestDirs.create("graft-ivfpq").toString
     val base = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
     val planted = base.filter(col("vec_id") < 20)
       .select((col("vec_id") + lit(PlantBase)).as("vec_id"),

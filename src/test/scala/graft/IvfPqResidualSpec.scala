@@ -37,7 +37,7 @@ class IvfPqResidualSpec extends AnyFunSuite {
   }
 
   private lazy val dir: String = {
-    val out = java.nio.file.Files.createTempDirectory("graft-ivfpqres").toString
+    val out = graft.TestDirs.create("graft-ivfpqres").toString
     val base = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
     val planted = base.filter(col("vec_id") < 20)
       .select((col("vec_id") + lit(PlantBase)).as("vec_id"),

@@ -75,7 +75,7 @@ class KnnGraphSpec extends AnyFunSuite {
     // coordinate sits within 0.01 of zero — those plants are excluded),
     // so it is ALWAYS a candidate: same cell, exact rescore, distance ~0
     // wins rank 1.
-    val out = java.nio.file.Files.createTempDirectory("graft_knn_mp").toString
+    val out = graft.TestDirs.create("graft_knn_mp").toString
     val base = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
     val planted = base.filter(col("vec_id") < 20)
       .select((col("vec_id") + lit(PlantBase)).as("vec_id"),
@@ -101,7 +101,7 @@ class KnnGraphSpec extends AnyFunSuite {
   }
 
   test("eligible planted neighbors appear in the graph") {
-    val out = java.nio.file.Files.createTempDirectory("graft_knn").toString
+    val out = graft.TestDirs.create("graft_knn").toString
     val base = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
     val planted = base.filter(col("vec_id") < 20)
       .select((col("vec_id") + lit(PlantBase)).as("vec_id"),
@@ -148,7 +148,7 @@ class KnnGraphSpec extends AnyFunSuite {
     // ABOVE it (3 jittered tilings of the 500-vector table + plants =
     // 1520 > 1280 -> m = 1, 20 cells): the split must actually engage,
     // and the planted-neighbor plumbing law must hold unchanged.
-    val out = java.nio.file.Files.createTempDirectory("graft_knn_big").toString
+    val out = graft.TestDirs.create("graft_knn_big").toString
     val base = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
     val tiled = (0 until 3).map { k =>
       base.select((col("vec_id") + lit(k * 1000L)).as("vec_id"),

@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -16,7 +14,7 @@ class LayoutSpec extends AnyFunSuite {
   private lazy val spark = SparkTestBase.spark
 
   test("compaction yields n files with disjoint, internally-sorted ranges") {
-    val out = Files.createTempDirectory("graft_layout").toString + "/docs"
+    val out = TestDirs.create("graft_layout").toString + "/docs"
     val docs = spark.read
       .parquet("/root/testdata/sf0.01/documents.parquet")
       // Scatter the input so the test starts from the worst layout.

@@ -1,13 +1,12 @@
 package graft
 
 import java.nio.charset.StandardCharsets.UTF_8
-import java.nio.file.{Files, Path}
+import java.nio.file.Files
 
-import scala.collection.mutable
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.{GraftSparkShim, SparkEnv}
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskEnd}
+import org.apache.spark.SparkEnv
+import org.apache.spark.executor.TaskMetrics
 import org.apache.spark.util.CollectionAccumulator
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -23,60 +22,38 @@ import graft.engine.{KV, MRApp, MapReduce}
   */
 class MapReduceSpillSpec extends AnyFunSuite {
   private lazy val spark = SparkTestBase.spark
-  import MapReduceSpillSpec.ReduceTask
 
   private val ForceSpill = "spark.shuffle.spill.numElementsForceSpillThreshold"
 
-  /** Collects the reduce tasks of one job group. */
-  private final class ReduceTasks(group: String) extends SparkListener {
-    private val stages = mutable.Set[Int]()
-    val tasks = mutable.ArrayBuffer[ReduceTask]()
-
-    override def onJobStart(e: SparkListenerJobStart): Unit = synchronized {
-      if (Option(e.properties).exists(p => group == p.getProperty("spark.jobGroup.id")))
-        stages ++= e.stageIds
-    }
-    override def onTaskEnd(e: SparkListenerTaskEnd): Unit = synchronized {
-      val m = e.taskMetrics
-      if (stages.contains(e.stageId) && m != null && m.shuffleReadMetrics.recordsRead > 0)
-        tasks += ReduceTask(m.shuffleReadMetrics.recordsRead, m.diskBytesSpilled,
-          m.memoryBytesSpilled)
-    }
-  }
-
   /** Runs `app` over `glob` with every reduce task spilling after each
     * `threshold` records; returns the sorted `"key value"` lines and the
-    * reduce tasks. In local mode the executor reads the SparkContext's
-    * conf, which is set for the run's extent.
+    * reduce tasks' metrics. In local mode the executor reads the
+    * SparkContext's conf, which is set for the run's extent.
     */
-  private def spilled(app: MRApp, glob: String, threshold: Int): (Seq[String], Seq[ReduceTask]) = {
-    val sc = spark.sparkContext
+  private def spilled(app: MRApp, glob: String, threshold: Int): (Seq[String], Seq[TaskMetrics]) = {
     val conf = SparkEnv.get.conf
     val prior = conf.getOption(ForceSpill)
-    val group = s"spill-${System.nanoTime()}"
-    val listener = new ReduceTasks(group)
     conf.set(ForceSpill, threshold.toString)
-    sc.addSparkListener(listener)
     try {
-      sc.setJobGroup(group, "forced spill")
-      val lines = MapReduce.run(spark, app, glob)
-        .map { case (k, v) => s"$k $v" }.collect().toSeq.sorted
-      sc.clearJobGroup()
-      GraftSparkShim.waitListenerBusEmpty(sc, 30000)
-      (lines, listener.synchronized(listener.tasks.toSeq))
-    } finally {
-      sc.removeSparkListener(listener)
-      prior.fold(conf.remove(ForceSpill))(conf.set(ForceSpill, _))
-    }
+      val (lines, log) = TaskLog.of(spark.sparkContext) {
+        MapReduce.run(spark, app, glob)
+          .map { case (k, v) => s"$k $v" }.collect().toSeq.sorted
+      }
+      assert(log.complete)
+      (lines, log.tasks.map(_.taskMetrics).filter(_.shuffleReadMetrics.recordsRead > 0))
+    } finally prior.fold(conf.remove(ForceSpill))(conf.set(ForceSpill, _))
   }
+
+  private def records(m: TaskMetrics): Long = m.shuffleReadMetrics.recordsRead
 
   /** Spark spills once `threshold` is passed, so a task that read more
     * than twice `threshold + 1` records spilled at least twice.
     */
-  private def assertSpilledTwice(tasks: Seq[ReduceTask], threshold: Int): Unit = {
+  private def assertSpilledTwice(tasks: Seq[TaskMetrics], threshold: Int): Unit = {
     assert(tasks.size == 10)
-    assert(tasks.forall(_.records > 2 * (threshold + 1)), tasks)
-    assert(tasks.forall(t => t.diskSpilled > 0 && t.memorySpilled > 0), tasks)
+    assert(tasks.forall(records(_) > 2 * (threshold + 1)), tasks.map(records))
+    assert(tasks.forall(t => t.diskBytesSpilled > 0 && t.memoryBytesSpilled > 0),
+      tasks.map(t => (t.diskBytesSpilled, t.memoryBytesSpilled)))
   }
 
   test("wc under forced spill equals the sequential oracle, and the task " +
@@ -96,38 +73,28 @@ class MapReduceSpillSpec extends AnyFunSuite {
 
   test("a hot key in every map call is reduced once, with all its values, " +
       "under forced spill") {
-    val dir = Files.createTempDirectory("graft-mr-hot-")
-    try {
-      // Each file: the hot key 4000 times, 40 words of its own and one
-      // word shared by all. A word is letters only, so numbers are
-      // spelled with the letters a-j.
-      def spell(n: Int): String = n.toString.map(c => ('a' + (c - '0')).toChar)
-      val files = 12
-      val hotPerFile = 4000
-      (0 until files).foreach { f =>
-        val own = (0 until 40).map(j => s"w${spell(f)}x${spell(j)}")
-        val text = (Seq.fill(hotPerFile)("hot") ++ own :+ "shared").mkString(" ")
-        Files.write(dir.resolve(s"pg-$f.txt"), text.getBytes(UTF_8))
-      }
-      val calls = spark.sparkContext.collectionAccumulator[Int]("hot reduce calls")
-      // 12 hot records cannot fit in one run of at most 5 records.
-      val (got, tasks) = spilled(HotKeyCount(calls), s"$dir/pg-*.txt", 4)
-      val paths = MapReduce.globPaths(s"$dir/pg-*.txt")
-      assert(paths.size == files)
-      assert(got == MapReduce.runSequential(WordCount, paths).sorted)
-      assert(got.contains(s"hot ${files * hotPerFile}"))
-      assert(calls.value.asScala.toSeq == Seq(files * hotPerFile))
-      assert(tasks.exists(_.diskSpilled > 0), tasks)
-    } finally Files.walk(dir).sorted(java.util.Comparator.reverseOrder())
-      .forEach((p: Path) => Files.delete(p))
+    val dir = TestDirs.create("graft-mr-hot-")
+    // Each file: the hot key 4000 times, 40 words of its own and one
+    // word shared by all. A word is letters only, so numbers are
+    // spelled with the letters a-j.
+    def spell(n: Int): String = n.toString.map(c => ('a' + (c - '0')).toChar)
+    val files = 12
+    val hotPerFile = 4000
+    (0 until files).foreach { f =>
+      val own = (0 until 40).map(j => s"w${spell(f)}x${spell(j)}")
+      val text = (Seq.fill(hotPerFile)("hot") ++ own :+ "shared").mkString(" ")
+      Files.write(dir.resolve(s"pg-$f.txt"), text.getBytes(UTF_8))
+    }
+    val calls = spark.sparkContext.collectionAccumulator[Int]("hot reduce calls")
+    // 12 hot records cannot fit in one run of at most 5 records.
+    val (got, tasks) = spilled(HotKeyCount(calls), s"$dir/pg-*.txt", 4)
+    val paths = MapReduce.globPaths(s"$dir/pg-*.txt")
+    assert(paths.size == files)
+    assert(got == MapReduce.runSequential(WordCount, paths).sorted)
+    assert(got.contains(s"hot ${files * hotPerFile}"))
+    assert(calls.value.asScala.toSeq == Seq(files * hotPerFile))
+    assert(tasks.exists(_.diskBytesSpilled > 0), tasks.map(_.diskBytesSpilled))
   }
-}
-
-object MapReduceSpillSpec {
-  /** Per reduce task: the shuffle records it read and the bytes it
-    * spilled to disk and from memory.
-    */
-  final case class ReduceTask(records: Long, diskSpilled: Long, memorySpilled: Long)
 }
 
 /** wc, recording the value count of each reduce call of the key `hot`. */

@@ -25,9 +25,8 @@ import graft.engine.MapReduce
   * [[totalWords]] are built from. A word is a maximal run of letters: every
   * separator the generator writes between two words holds no letter.
   *
-  * The files are written once per JVM into a directory of their own, which a
-  * shutdown hook deletes. Not [[TempDirs]]: suites call `TempDirs.drain()`
-  * mid-run, and that must not delete the corpus under a later suite.
+  * The files are written once per JVM into a [[TestDirs]] directory of their
+  * own, deleted when the JVM exits.
   */
 object MrCorpus {
   /** One generated file: its name, its bytes and the words written to it. */
@@ -202,12 +201,8 @@ object MrCorpus {
 
   /** The corpus directory, written on first use and deleted at JVM exit. */
   lazy val dir: Path = {
-    val d = Files.createTempDirectory("graft-mr-corpus-")
+    val d = TestDirs.create("graft-mr-corpus-")
     books.foreach(b => Files.write(d.resolve(b.name), b.bytes))
-    Runtime.getRuntime.addShutdownHook(new Thread(() => {
-      books.foreach(b => Files.deleteIfExists(d.resolve(b.name)))
-      Files.deleteIfExists(d)
-    }, "graft-mr-corpus"))
     d
   }
 

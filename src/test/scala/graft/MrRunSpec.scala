@@ -16,12 +16,8 @@ import graft.engine.MapReduce
   */
 class MrRunSpec extends AnyFunSuite {
 
-  private def withTempDir(body: java.nio.file.Path => Unit): Unit = {
-    val dir = Files.createTempDirectory("graft_mrrun")
-    try body(dir)
-    finally Files.walk(dir).sorted(java.util.Comparator.reverseOrder())
-      .forEach(f => Files.delete(f))
-  }
+  private def withTempDir(body: java.nio.file.Path => Unit): Unit =
+    body(TestDirs.create("graft_mrrun"))
 
   private def write(file: java.nio.file.Path, text: String): Unit = {
     Files.createDirectories(file.getParent)

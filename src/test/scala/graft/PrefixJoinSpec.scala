@@ -54,7 +54,7 @@ class PrefixJoinSpec extends AnyFunSuite {
     // with N and Σ C(df,2) explodes (the g1 probe's failure mode in
     // miniature). ~40 words/doc → ~23k prefix rows over ≤27 distinct
     // shingles → ~10M predicted candidate pairs.
-    val sat = java.nio.file.Files.createTempDirectory("graft_satdocs")
+    val sat = TestDirs.create("graft_satdocs")
     val words = Array("a", "b", "c")
     val rows = (0L until 600L).map { id =>
       val r = new scala.util.Random(id)
@@ -83,11 +83,7 @@ class PrefixJoinSpec extends AnyFunSuite {
       spark.conf.unset(boundKey)
       assert(SparkEntry.queries("dedup_prefix_join")(spark, dir)
         .count() >= 1)
-    } finally {
-      spark.conf.unset(boundKey)
-      java.nio.file.Files.walk(sat).sorted(java.util.Comparator.reverseOrder())
-        .forEach(f => java.nio.file.Files.delete(f))
-    }
+    } finally spark.conf.unset(boundKey)
   }
 
   test("the exact join dominates the LSH pipeline's answer") {

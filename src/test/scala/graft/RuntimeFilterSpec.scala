@@ -36,7 +36,7 @@ class RuntimeFilterSpec extends AnyFunSuite {
       // filter exists for.
       conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
 
-      val dir = java.nio.file.Files.createTempDirectory("graft-rf").toString
+      val dir = TestDirs.create("graft-rf").toString
       // Fact: 200k rows over 10k keys; dim: 50 keys after a selective
       // filter — parquet-backed so the optimizer sees real scan sizes.
       spark.range(0, 200000)

@@ -34,7 +34,7 @@ class ScaleSpec extends AnyFunSuite {
   }
 
   test("partitioned write enables partition pruning in the scan") {
-    val tmp = java.nio.file.Files.createTempDirectory("graft-part").toString
+    val tmp = TestDirs.create("graft-part").toString
     val li = spark.read.parquet(s"$dir/lineitem.parquet")
     li.withColumn("ship_year", year(col("l_shipdate")))
       .write.partitionBy("ship_year").mode("overwrite").parquet(tmp)

@@ -39,7 +39,7 @@ class SchemaMappingSpec extends AnyFunSuite {
 
   test("rename is metadata-only, data survives, time travel keeps old " +
       "names, appends under the old name fail loudly") {
-    val table = Files.createTempDirectory("graft_map1").toString
+    val table = TestDirs.create("graft_map1").toString
     Snapshots.publish(docs.repartitionByRange(4, col("doc_id")), table) // v1
     val before = docs.collect().map(r =>
       r.getLong(0) -> ((r.getString(1), r.getLong(2)))).toMap
@@ -90,7 +90,7 @@ class SchemaMappingSpec extends AnyFunSuite {
 
   test("drop hides the column; re-adding the logical name never " +
       "resurrects dropped bytes; the last column cannot be dropped") {
-    val table = Files.createTempDirectory("graft_map2").toString
+    val table = TestDirs.create("graft_map2").toString
     Snapshots.publish(docs.repartition(3), table)                       // v1
     Snapshots.dropColumn(table, "lang")                                 // v2
     assert(mfiles(table, 1) == mfiles(table, 2), "drop must move no data")
@@ -114,7 +114,7 @@ class SchemaMappingSpec extends AnyFunSuite {
       .filter(col("lang") === "zz").mcount() == 3)
 
     intercept[IllegalArgumentException] {
-      val t2 = Files.createTempDirectory("graft_map2b").toString
+      val t2 = TestDirs.create("graft_map2b").toString
       Snapshots.publish(docs.select(col("doc_id")), t2)
       Snapshots.dropColumn(t2, "doc_id")
     }
@@ -122,7 +122,7 @@ class SchemaMappingSpec extends AnyFunSuite {
 
   test("bloom index and stats pruning follow a rename; the change feed " +
       "binds to the end version's names") {
-    val table = Files.createTempDirectory("graft_map3").toString
+    val table = TestDirs.create("graft_map3").toString
     Snapshots.publish(docs.repartitionByRange(8, col("doc_id")), table) // v1
     Snapshots.addBloomIndex(table, "doc_id")                            // v2
     Snapshots.compact(spark, table, 8, col("doc_id"))                   // v3
@@ -164,7 +164,7 @@ class SchemaMappingSpec extends AnyFunSuite {
       "footers (cross-engine id resolution); pre-mapping files carry " +
       "none; a mixed table materializes every column") {
     import scala.jdk.CollectionConverters._
-    val table = Files.createTempDirectory("graft_map5").toString
+    val table = TestDirs.create("graft_map5").toString
     Snapshots.publish(docs.repartition(2), table)                      // v1
     Snapshots.renameColumn(table, "n_chars", "char_count")             // v2
     Snapshots.append(docs.limit(4).select(
@@ -204,7 +204,7 @@ class SchemaMappingSpec extends AnyFunSuite {
   }
 
   test("constraint-referenced columns refuse rename and drop") {
-    val table = Files.createTempDirectory("graft_map4").toString
+    val table = TestDirs.create("graft_map4").toString
     Snapshots.publish(docs.repartition(2), table)                       // v1
     Snapshots.addConstraint(spark, table, "chars_pos", "n_chars > 0")   // v2
     val e1 = intercept[IllegalArgumentException] {

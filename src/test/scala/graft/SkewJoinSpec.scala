@@ -107,7 +107,7 @@ class SkewJoinSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
       md.digest(s"skew:$i".getBytes("UTF-8")).map("%02x".format(_)).mkString
     }.mkString(" ")
     val hot = hotIds.toSeq.map(id => (id, s"planted-$id", s"$body tail${id}a tail${id}b"))
-    val out = java.nio.file.Files.createTempDirectory("graft-skew").toString
+    val out = TestDirs.create("graft-skew").toString
     spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
       .select(col("doc_id"), col("source"), col("text"))
       .unionByName(hot.toDF("doc_id", "source", "text"))

@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions.col
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -29,7 +27,7 @@ class SnapshotStreamSourceSpec extends AnyFunSuite {
 
   test("tailing delivers the bootstrap snapshot, then each commit's " +
       "exact change set") {
-    val table = Files.createTempDirectory("graft_tail1").toString
+    val table = TestDirs.create("graft_tail1").toString
     Snapshots.publish(docs.repartitionByRange(4, col("doc_id")), table)
 
     val q = spark.readStream.format("graft-snapshot").load(table)
@@ -62,7 +60,7 @@ class SnapshotStreamSourceSpec extends AnyFunSuite {
 
   test("a merge-on-read DV delete streams as its masked rows — the " +
       "source inherits deletion-vector attribution from the change feed") {
-    val table = Files.createTempDirectory("graft_tail_dv").toString
+    val table = TestDirs.create("graft_tail_dv").toString
     Snapshots.publish(docs.repartitionByRange(4, col("doc_id")), table)
 
     val q = spark.readStream.format("graft-snapshot").load(table)
@@ -85,9 +83,9 @@ class SnapshotStreamSourceSpec extends AnyFunSuite {
 
   test("exactly-once across restart: the checkpointed offset resumes, " +
       "nothing re-delivered, nothing lost") {
-    val table = Files.createTempDirectory("graft_tail2").toString
-    val cp = Files.createTempDirectory("graft_tail2_cp").toString
-    val out = Files.createTempDirectory("graft_tail2_out").toString
+    val table = TestDirs.create("graft_tail2").toString
+    val cp = TestDirs.create("graft_tail2_cp").toString
+    val out = TestDirs.create("graft_tail2_out").toString
     Snapshots.publish(docs.filter(col("doc_id") < 100), table)         // v1
 
     // A RECOVERABLE sink (file), because recovery is the point here.
@@ -122,9 +120,9 @@ class SnapshotStreamSourceSpec extends AnyFunSuite {
 
   test("maxVersionsPerBatch paces catch-up into capped micro-batches, " +
       "and the pacing survives restart") {
-    val table = Files.createTempDirectory("graft_tail4").toString
-    val cp = Files.createTempDirectory("graft_tail4_cp").toString
-    val out = Files.createTempDirectory("graft_tail4_out").toString
+    val table = TestDirs.create("graft_tail4").toString
+    val cp = TestDirs.create("graft_tail4_cp").toString
+    val out = TestDirs.create("graft_tail4_out").toString
     Snapshots.publish(docs.filter(col("doc_id") < 10), table)          // v1
     for (i <- 0 until 4)                                               // v2..v5
       Snapshots.append(docs.filter(col("doc_id") === (10L + i)), table)
@@ -168,9 +166,9 @@ class SnapshotStreamSourceSpec extends AnyFunSuite {
   test("startingVersion=latest is PINNED at first start: a restart after " +
       "downtime delivers the versions that landed in between, never " +
       "re-resolving against the advanced table") {
-    val table = Files.createTempDirectory("graft_tail5").toString
-    val cp = Files.createTempDirectory("graft_tail5_cp").toString
-    val out = Files.createTempDirectory("graft_tail5_out").toString
+    val table = TestDirs.create("graft_tail5").toString
+    val cp = TestDirs.create("graft_tail5_cp").toString
+    val out = TestDirs.create("graft_tail5_out").toString
     Snapshots.publish(docs.filter(col("doc_id") < 100), table)         // v1
     Snapshots.append(docs.filter(col("doc_id") === 100L), table)       // v2
 
@@ -201,9 +199,9 @@ class SnapshotStreamSourceSpec extends AnyFunSuite {
 
   test("maxBytesPerBatch paces by what a version WEIGHS: a fat commit " +
       "and thin ones split into byte-bounded batches, exactly-once intact") {
-    val table = Files.createTempDirectory("graft_tail6").toString
-    val cp = Files.createTempDirectory("graft_tail6_cp").toString
-    val out = Files.createTempDirectory("graft_tail6_out").toString
+    val table = TestDirs.create("graft_tail6").toString
+    val cp = TestDirs.create("graft_tail6_cp").toString
+    val out = TestDirs.create("graft_tail6_out").toString
     // v1 FAT (500 docs WITH text — real payload bytes), v2..v5 thin
     // single-row appends: the version-count cap would see 5 equal
     // versions; the byte cap sees one heavy commit and four light ones.
@@ -241,7 +239,7 @@ class SnapshotStreamSourceSpec extends AnyFunSuite {
   }
 
   test("startingVersion=latest tails only future commits") {
-    val table = Files.createTempDirectory("graft_tail3").toString
+    val table = TestDirs.create("graft_tail3").toString
     Snapshots.publish(docs.filter(col("doc_id") < 200), table)         // v1
     Snapshots.deleteWhere(spark, table, col("doc_id") < 10)            // v2
 

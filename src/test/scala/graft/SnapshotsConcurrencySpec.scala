@@ -67,7 +67,7 @@ class SnapshotsConcurrencySpec extends AnyFunSuite {
 
   raceTest("racing blind appends all commit; history is serializable") {
     import spark.implicits._
-    val table = Files.createTempDirectory("graft_conc1").toString
+    val table = TestDirs.create("graft_conc1").toString
     Snapshots.publish(Seq(0L).toDF("doc_id"), table)
 
     val nWriters = 6
@@ -102,7 +102,7 @@ class SnapshotsConcurrencySpec extends AnyFunSuite {
   raceTest("racing publishes: every committed version is exactly one " +
       "writer's frame, never a mixture") {
     import spark.implicits._
-    val table = Files.createTempDirectory("graft_conc2").toString
+    val table = TestDirs.create("graft_conc2").toString
     val nWriters = 4
     val frames: Seq[Set[Long]] = (0 until nWriters).map(w =>
       ((w * 1000) to (w * 1000 + 9)).map(_.toLong).toSet)
@@ -120,7 +120,7 @@ class SnapshotsConcurrencySpec extends AnyFunSuite {
       "re-run against the new base succeeds") {
     import org.apache.spark.sql.types.{LongType, StructField}
     import spark.implicits._
-    val table = Files.createTempDirectory("graft_conc3").toString
+    val table = TestDirs.create("graft_conc3").toString
     Snapshots.publish(Seq(1L, 2L, 3L).toDF("doc_id"), table)
 
     val fields = Seq(StructField("extra_a", LongType),
@@ -143,7 +143,7 @@ class SnapshotsConcurrencySpec extends AnyFunSuite {
   raceTest("racing DV deletes: one commits, the loser conflicts loudly, and " +
       "its re-run lands on the new base") {
     import spark.implicits._
-    val table = Files.createTempDirectory("graft_conc_dv").toString
+    val table = TestDirs.create("graft_conc_dv").toString
     Snapshots.publish((1L to 100L).toDF("doc_id").repartition(4), table)
 
     import org.apache.spark.sql.functions.col
@@ -178,7 +178,7 @@ class SnapshotsConcurrencySpec extends AnyFunSuite {
     for (w <- 0 until 3) {
       val seed = SparkTestBase.stressSeed * 100 + w
       val rnd = new scala.util.Random(seed)
-      val table = Files.createTempDirectory(s"graft_concfuzz_$seed").toString
+      val table = TestDirs.create(s"graft_concfuzz_$seed").toString
       Snapshots.publish(Seq(-1L).toDF("doc_id"), table)            // v1
       val nWriters = 4
       val ops: Seq[(String, Set[Long])] = (0 until nWriters).map { i =>
@@ -218,7 +218,7 @@ class SnapshotsConcurrencySpec extends AnyFunSuite {
 
   raceTest("racing appendBatch replays of the SAME batch: exactly one commits") {
     import spark.implicits._
-    val table = Files.createTempDirectory("graft_conc4").toString
+    val table = TestDirs.create("graft_conc4").toString
     Snapshots.appendBatch(Seq(0L).toDF("doc_id"), table, 0L)
 
     // Two replicas replay batch 1 concurrently (the speculative-retry /
@@ -242,7 +242,7 @@ class SnapshotsConcurrencySpec extends AnyFunSuite {
   raceTest("racing mergeBatch replays of the SAME batch: exactly one commits, " +
       "upserts land once") {
     import spark.implicits._
-    val table = Files.createTempDirectory("graft_conc5").toString
+    val table = TestDirs.create("graft_conc5").toString
     Snapshots.appendBatch(
       Seq((1L, 10L), (2L, 20L)).toDF("doc_id", "n_chars"), table, 0L)
 
@@ -274,7 +274,7 @@ class SnapshotsConcurrencySpec extends AnyFunSuite {
     // it into '/' and split the key.
     val store =
       new graft.sources.HttpConditionalStore(graft.S3StubServer.endpoint)
-    val dir = Files.createTempDirectory("graft_conc_keys")
+    val dir = TestDirs.create("graft_conc_keys")
     val key = dir.resolve("a +b%c d%2Fe.json").toString
     assert(store.putIfAbsent(key, "payload-1"),
       "first conditional PUT must win")
@@ -316,7 +316,7 @@ class SnapshotsConcurrencySpec extends AnyFunSuite {
   test("injected commit losses: blind appends retry through spurious CAS " +
       "failures; read-modify-write conflicts on the first loss") {
     import spark.implicits._
-    val table = Files.createTempDirectory("graft_conc6").toString
+    val table = TestDirs.create("graft_conc6").toString
     Snapshots.publish(Seq(0L, 1L, 2L).toDF("doc_id"), table)            // v1
 
     // A blind append retries: three refused attempts, then commits ONCE
@@ -342,7 +342,7 @@ class SnapshotsConcurrencySpec extends AnyFunSuite {
   test("exhaustion: a commit primitive that loses EVERY race fails a " +
       "blind append loudly after bounded retries, leaving only orphans") {
     import spark.implicits._
-    val table = Files.createTempDirectory("graft_conc7").toString
+    val table = TestDirs.create("graft_conc7").toString
     Snapshots.publish(Seq(0L).toDF("doc_id"), table)                    // v1
     val e = intercept[IllegalStateException] {
       withPrimitive(new LossyCommit(Int.MaxValue)) {
@@ -359,7 +359,7 @@ class SnapshotsConcurrencySpec extends AnyFunSuite {
   test("a racer injected AT the commit point: the rebase path picks up " +
       "the racer's rows and both writers' data lands") {
     import spark.implicits._
-    val table = Files.createTempDirectory("graft_conc8").toString
+    val table = TestDirs.create("graft_conc8").toString
     Snapshots.publish(Seq(0L).toDF("doc_id"), table)                    // v1
 
     // On the victim's FIRST create, commit a competing append through

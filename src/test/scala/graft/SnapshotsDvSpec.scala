@@ -51,7 +51,7 @@ class SnapshotsDvSpec extends AnyFunSuite {
 
   test("DV delete masks rows, moves no data files, time-travels, elides " +
       "empty matches") {
-    val table = Files.createTempDirectory("graft_dv1").toString
+    val table = TestDirs.create("graft_dv1").toString
     Snapshots.publish(docs.repartitionByRange(4, col("doc_id")), table)
     val filesV1 = arrOf(table, 1, "files")
 
@@ -75,7 +75,7 @@ class SnapshotsDvSpec extends AnyFunSuite {
 
   test("DVs are cumulative, appends are untouched, rowCount is exact " +
       "metadata at every version") {
-    val table = Files.createTempDirectory("graft_dv2").toString
+    val table = TestDirs.create("graft_dv2").toString
     Snapshots.publish(docs.repartitionByRange(4, col("doc_id")), table)
     Snapshots.deleteWhereDV(spark, table, col("doc_id") % 10 === 3) // v2
     Snapshots.deleteWhereDV(spark, table, col("doc_id") % 10 === 7) // v3
@@ -98,7 +98,7 @@ class SnapshotsDvSpec extends AnyFunSuite {
 
   test("rewrites read DV-applied: compact purges masks, COW delete never " +
       "resurrects them") {
-    val table = Files.createTempDirectory("graft_dv3").toString
+    val table = TestDirs.create("graft_dv3").toString
     Snapshots.publish(docs.repartitionByRange(4, col("doc_id")), table)
     Snapshots.deleteWhereDV(spark, table, col("doc_id") % 10 === 3) // v2
     val v3 = Snapshots.compact(spark, table, 2, col("doc_id"))
@@ -108,7 +108,7 @@ class SnapshotsDvSpec extends AnyFunSuite {
 
     // COW delete on a still-DV-carrying table (fresh one): survivors of
     // the rewritten files must not resurrect masked rows.
-    val t2 = Files.createTempDirectory("graft_dv3b").toString
+    val t2 = TestDirs.create("graft_dv3b").toString
     Snapshots.publish(docs.repartitionByRange(4, col("doc_id")), t2)
     Snapshots.deleteWhereDV(spark, t2, col("doc_id") % 10 === 3)
     Snapshots.deleteWhere(spark, t2, col("doc_id") % 10 === 4)
@@ -120,7 +120,7 @@ class SnapshotsDvSpec extends AnyFunSuite {
 
   test("optimize bin-packs small files, carries right-sized ones " +
       "byte-for-byte, purges touched masks, and converges") {
-    val table = Files.createTempDirectory("graft_dv4").toString
+    val table = TestDirs.create("graft_dv4").toString
     // 6 small files (a 30% slice) + 1 file holding a 10x-replicated
     // re-keyed copy, big enough that the smalls' SUM stays under its
     // size (one bin → one packed file → the second optimize converges).
@@ -160,7 +160,7 @@ class SnapshotsDvSpec extends AnyFunSuite {
 
   test("restore republishes a retained version's exact state as a new " +
       "commit; history intact; vacuumed targets fail loudly") {
-    val table = Files.createTempDirectory("graft_dv5").toString
+    val table = TestDirs.create("graft_dv5").toString
     Snapshots.publish(docs.repartitionByRange(4, col("doc_id")), table) // v1
     Snapshots.deleteWhereDV(spark, table, col("doc_id") % 10 === 3)    // v2
     val extra = docs.filter(col("doc_id") % 100 === 11)
@@ -201,7 +201,7 @@ class SnapshotsDvSpec extends AnyFunSuite {
 
   test("change feed: a DV step emits exactly the masked rows as deletes; " +
       "a mask-purging compaction still diffs empty") {
-    val table = Files.createTempDirectory("graft_dv6").toString
+    val table = TestDirs.create("graft_dv6").toString
     Snapshots.publish(docs.repartitionByRange(4, col("doc_id")), table) // v1
     Snapshots.deleteWhereDV(spark, table, col("doc_id") % 10 === 3)    // v2
     val extra = docs.filter(col("doc_id") % 100 === 11)
@@ -233,7 +233,7 @@ class SnapshotsDvSpec extends AnyFunSuite {
   }
 
   test("vacuum keeps retained versions' masks and expires the rest") {
-    val table = Files.createTempDirectory("graft_dv7").toString
+    val table = TestDirs.create("graft_dv7").toString
     Snapshots.publish(docs.repartitionByRange(4, col("doc_id")), table) // v1
     Snapshots.deleteWhereDV(spark, table, col("doc_id") % 10 === 3)    // v2
     val extra = docs.filter(col("doc_id") % 100 === 11)
@@ -256,7 +256,7 @@ class SnapshotsDvSpec extends AnyFunSuite {
 
   test("a lost stats sidecar under carried DVs degrades rowCount to " +
       "None — unknown masked counts are never reported as a number") {
-    val table = Files.createTempDirectory("graft_dv_lost_stats").toString
+    val table = TestDirs.create("graft_dv_lost_stats").toString
     Snapshots.publish(docs.filter(col("doc_id") < 100)
       .repartition(2), table)                                          // v1
     Snapshots.deleteWhereDV(spark, table, col("doc_id") < 10)          // v2

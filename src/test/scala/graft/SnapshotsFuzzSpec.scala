@@ -63,7 +63,7 @@ class SnapshotsFuzzSpec extends AnyFunSuite {
     for (w <- 0 until nSeeds) {
       val seed = SparkTestBase.stressSeed * seedsPerTrial + seedOffset + w
       val rnd = new scala.util.Random(seed)
-      val table = Files.createTempDirectory(s"graft_snapfuzz_$seed").toString
+      val table = TestDirs.create(s"graft_snapfuzz_$seed").toString
       var nextId = 0L
       def batch(): (org.apache.spark.sql.DataFrame, Set[Long]) = {
         val n = 2 + rnd.nextInt(3)

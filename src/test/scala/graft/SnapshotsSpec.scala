@@ -28,7 +28,7 @@ class SnapshotsSpec extends AnyFunSuite {
         Paths.get(table, "_manifests", f"v$v%05d.json"))).toSet
 
   test("publish/read round-trip, snapshot isolation, time travel") {
-    val table = Files.createTempDirectory("graft_snap").toString
+    val table = TestDirs.create("graft_snap").toString
     val docs = spark.read.parquet(s"$dir/documents.parquet")
 
     val v1 = Snapshots.publish(docs, table)
@@ -46,7 +46,7 @@ class SnapshotsSpec extends AnyFunSuite {
   }
 
   test("a crashed commit is invisible: orphans and manifest temp debris") {
-    val table = Files.createTempDirectory("graft_snap2").toString
+    val table = TestDirs.create("graft_snap2").toString
     val docs = spark.read.parquet(s"$dir/documents.parquet")
     Snapshots.publish(docs, table)
     val before = ids(Snapshots.read(spark, table))
@@ -85,7 +85,7 @@ class SnapshotsSpec extends AnyFunSuite {
   }
 
   test("append commits reuse prior files; compact preserves rows") {
-    val table = Files.createTempDirectory("graft_snap3").toString
+    val table = TestDirs.create("graft_snap3").toString
     val docs = spark.read.parquet(s"$dir/documents.parquet")
     val half1 = docs.filter(col("doc_id") < 250)
     val half2 = docs.filter(col("doc_id") >= 250)
@@ -112,7 +112,7 @@ class SnapshotsSpec extends AnyFunSuite {
   }
 
   test("vacuum deletes only what no retained manifest references") {
-    val table = Files.createTempDirectory("graft_snap6").toString
+    val table = TestDirs.create("graft_snap6").toString
     val docs = spark.read.parquet(s"$dir/documents.parquet")
     // v1 full, v2 = v1's files + appended rows (SHARED files), v3 rewrite.
     Snapshots.publish(docs.filter(col("doc_id") < 250), table)
@@ -148,7 +148,7 @@ class SnapshotsSpec extends AnyFunSuite {
   }
 
   test("Z-order compaction commit preserves rows and versions") {
-    val table = Files.createTempDirectory("graft_snap7").toString
+    val table = TestDirs.create("graft_snap7").toString
     // events carry the two keys the z-order census normalizes.
     val ev = graft.queries.Tables.events(spark, dir)
       .select(col("event_id"), col("user_id"))
@@ -165,7 +165,7 @@ class SnapshotsSpec extends AnyFunSuite {
   }
 
   test("deleteWhere is copy-on-write: only touched files rewritten") {
-    val table = Files.createTempDirectory("graft_snap8").toString
+    val table = TestDirs.create("graft_snap8").toString
     val docs = spark.read.parquet(s"$dir/documents.parquet")
     // Range layout so the predicate's rows live in a known file subset.
     Snapshots.publish(docs.repartitionByRange(4, col("doc_id")), table)
@@ -193,7 +193,7 @@ class SnapshotsSpec extends AnyFunSuite {
   }
 
   test("merge upserts delta rows as one transactional commit") {
-    val table = Files.createTempDirectory("graft_snap9").toString
+    val table = TestDirs.create("graft_snap9").toString
     val docs = spark.read.parquet(s"$dir/documents.parquet")
       .select(col("doc_id"), col("n_chars"))
     Snapshots.publish(docs.repartitionByRange(4, col("doc_id")), table)
@@ -222,7 +222,7 @@ class SnapshotsSpec extends AnyFunSuite {
   }
 
   test("merge with tombstones: upserts and deletes land in one commit") {
-    val table = Files.createTempDirectory("graft_snap13").toString
+    val table = TestDirs.create("graft_snap13").toString
     val docs = spark.read.parquet(s"$dir/documents.parquet")
       .select(col("doc_id"), col("n_chars"))
     Snapshots.publish(docs.repartitionByRange(4, col("doc_id")), table)
@@ -257,7 +257,7 @@ class SnapshotsSpec extends AnyFunSuite {
   }
 
   test("staged-data debris from a crashed commit does not wedge the retry") {
-    val table = Files.createTempDirectory("graft_snap10").toString
+    val table = TestDirs.create("graft_snap10").toString
     val docs = spark.read.parquet(s"$dir/documents.parquet")
     Snapshots.publish(docs, table)
     // Crash AFTER staging moved parts into data/ but BEFORE the commit:
@@ -276,7 +276,7 @@ class SnapshotsSpec extends AnyFunSuite {
   }
 
   test("vacuum tolerates a retention increase after a tighter vacuum") {
-    val table = Files.createTempDirectory("graft_snap11").toString
+    val table = TestDirs.create("graft_snap11").toString
     val docs = spark.read.parquet(s"$dir/documents.parquet")
     (1 to 4).foreach(k =>
       Snapshots.publish(docs.filter(col("doc_id") < k * 100), table))
@@ -289,7 +289,7 @@ class SnapshotsSpec extends AnyFunSuite {
   }
 
   test("an all-empty-partitions commit stays readable") {
-    val table = Files.createTempDirectory("graft_snap12").toString
+    val table = TestDirs.create("graft_snap12").toString
     val docs = spark.read.parquet(s"$dir/documents.parquet")
     Snapshots.publish(docs.filter(col("doc_id") < -1), table)
     val empty = Snapshots.read(spark, table)
@@ -306,7 +306,7 @@ class SnapshotsSpec extends AnyFunSuite {
     // foreachBatch re-runs a batch after failure; the sink's batchId
     // watermark rides in the same atomic rename as the data commit, so a
     // replay is a no-op and an interleaved batch commit can't duplicate.
-    val table = Files.createTempDirectory("graft_snap4").toString
+    val table = TestDirs.create("graft_snap4").toString
     val docs = spark.read.parquet(s"$dir/documents.parquet")
     val b0 = docs.filter(col("doc_id") < 100)
     val b1 = docs.filter(col("doc_id") >= 100 && col("doc_id") < 200)
@@ -332,7 +332,7 @@ class SnapshotsSpec extends AnyFunSuite {
     // And the real wiring: drive it from an actual foreachBatch stream.
     implicit val sql = spark.sqlContext
     import spark.implicits._
-    val table2 = Files.createTempDirectory("graft_snap5").toString
+    val table2 = TestDirs.create("graft_snap5").toString
     val input = org.apache.spark.sql.execution.streaming.runtime
       .MemoryStream[Long]
     val q = input.toDS().toDF("doc_id")
@@ -353,7 +353,7 @@ class SnapshotsSpec extends AnyFunSuite {
 
   test("streaming mergeBatch is exactly-once under batch replay, " +
       "tombstones included") {
-    val table = Files.createTempDirectory("graft_snap_mb").toString
+    val table = TestDirs.create("graft_snap_mb").toString
     val docs = spark.read.parquet(s"$dir/documents.parquet")
       .select(col("doc_id"), col("n_chars"))
     Snapshots.publish(docs.filter(col("doc_id") < 100)
@@ -392,7 +392,7 @@ class SnapshotsSpec extends AnyFunSuite {
     // the batch watermark survives the stream.
     implicit val sql = spark.sqlContext
     import spark.implicits._
-    val table2 = Files.createTempDirectory("graft_snap_mb2").toString
+    val table2 = TestDirs.create("graft_snap_mb2").toString
     Snapshots.publish(Seq((1L, 10L), (2L, 20L)).toDF("doc_id", "n_chars"),
       table2)
     val input = org.apache.spark.sql.execution.streaming.runtime
@@ -416,7 +416,7 @@ class SnapshotsSpec extends AnyFunSuite {
   test("ADD COLUMN is metadata-only; old files null-fill; time travel " +
       "reads the old schema") {
     import org.apache.spark.sql.types.{DoubleType, LongType, StructField}
-    val table = Files.createTempDirectory("graft_snap_evo").toString
+    val table = TestDirs.create("graft_snap_evo").toString
     val docs = spark.read.parquet(s"$dir/documents.parquet")
       .select(col("doc_id"), col("lang"), col("n_chars"))
     Snapshots.publish(docs, table)
@@ -455,7 +455,7 @@ class SnapshotsSpec extends AnyFunSuite {
   test("appends and merges after evolution carry values; compat gate " +
       "rejects drift") {
     import org.apache.spark.sql.types.{DoubleType, StructField}
-    val table = Files.createTempDirectory("graft_snap_evo2").toString
+    val table = TestDirs.create("graft_snap_evo2").toString
     val docs = spark.read.parquet(s"$dir/documents.parquet")
       .select(col("doc_id"), col("lang"), col("n_chars"))
     Snapshots.publish(docs.filter(col("doc_id") < 100), table)
@@ -502,7 +502,7 @@ class SnapshotsSpec extends AnyFunSuite {
 
   test("CHECK constraints gate every write path at commit time") {
     import org.apache.spark.sql.functions.lit
-    val table = Files.createTempDirectory("graft_snap_check").toString
+    val table = TestDirs.create("graft_snap_check").toString
     val docs = spark.read.parquet(s"$dir/documents.parquet")
       .select(col("doc_id"), col("n_chars"))
     Snapshots.publish(docs, table)                                   // v1
@@ -568,7 +568,7 @@ class SnapshotsSpec extends AnyFunSuite {
 
   test("TIMESTAMP AS OF resolves on manifest commit times") {
     import java.nio.file.attribute.FileTime
-    val table = Files.createTempDirectory("graft_snap_asof").toString
+    val table = TestDirs.create("graft_snap_asof").toString
     val docs = spark.read.parquet(s"$dir/documents.parquet")
     Snapshots.publish(docs.filter(col("doc_id") < 100), table)   // v1
     Snapshots.publish(docs.filter(col("doc_id") < 200), table)   // v2
@@ -602,7 +602,7 @@ class SnapshotsSpec extends AnyFunSuite {
 
   test("vacuum expires schema metadata with its manifest") {
     import org.apache.spark.sql.types.{DoubleType, StructField}
-    val table = Files.createTempDirectory("graft_snap_evo3").toString
+    val table = TestDirs.create("graft_snap_evo3").toString
     val docs = spark.read.parquet(s"$dir/documents.parquet")
       .select(col("doc_id"), col("lang"))
     Snapshots.publish(docs.filter(col("doc_id") < 50), table)   // v1
@@ -629,10 +629,10 @@ class SnapshotsSpec extends AnyFunSuite {
       .select(col("doc_id"), col("n_chars")).limit(10)
     // Stage one data file by hand, the way the pre-positional-format
     // revision laid tables out: bare JSON array of file names.
-    val table = Files.createTempDirectory("graft_legacy").toString
+    val table = TestDirs.create("graft_legacy").toString
     Files.createDirectories(Paths.get(table, "data"))
     Files.createDirectories(Paths.get(table, "_manifests"))
-    val tmp = Files.createTempDirectory("graft_legacy_stage").toString
+    val tmp = TestDirs.create("graft_legacy_stage").toString
     docs.coalesce(1).write.mode("overwrite").parquet(tmp)
     val listing = Files.list(Paths.get(tmp))
     val src = try {

@@ -32,7 +32,7 @@ class SnapshotsStatsSpec extends AnyFunSuite {
     df.select(col("doc_id")).collect().map(_.getLong(0)).toSet
 
   test("stats are recorded at commit and prune a clustered range read") {
-    val table = Files.createTempDirectory("graft_stats1").toString
+    val table = TestDirs.create("graft_stats1").toString
     Snapshots.publish(docs.repartitionByRange(8, col("doc_id")), table)
 
     val stats = Snapshots.statsFor(table, 1)
@@ -61,7 +61,7 @@ class SnapshotsStatsSpec extends AnyFunSuite {
 
   test("multi-point read prunes files and is row-identical to the " +
       "full-scan isin AND the per-value readRange union") {
-    val table = Files.createTempDirectory("graft_statsPts").toString
+    val table = TestDirs.create("graft_statsPts").toString
     Snapshots.publish(docs.repartitionByRange(8, col("doc_id")), table)
 
     // Scattered probe set: some values co-resident in one file, some in
@@ -93,7 +93,7 @@ class SnapshotsStatsSpec extends AnyFunSuite {
 
   test("a column with no stats is conservatively kept; appends inherit " +
       "carried files' stats") {
-    val table = Files.createTempDirectory("graft_stats2").toString
+    val table = TestDirs.create("graft_stats2").toString
     Snapshots.publish(docs.repartitionByRange(4, col("doc_id")), table)
     // `lang` is a string column: no numeric stats => no file may be
     // skipped on it, whatever the bounds.
@@ -120,7 +120,7 @@ class SnapshotsStatsSpec extends AnyFunSuite {
   }
 
   test("delete/merge/compact keep stats current; vacuum expires them") {
-    val table = Files.createTempDirectory("graft_stats3").toString
+    val table = TestDirs.create("graft_stats3").toString
     Snapshots.publish(docs.repartitionByRange(4, col("doc_id")), table)
     Snapshots.deleteWhere(spark, table, col("doc_id") < 50)          // v2
     Snapshots.merge(spark, table,
@@ -149,7 +149,7 @@ class SnapshotsStatsSpec extends AnyFunSuite {
   }
 
   test("multi-range pruning on a Z-ordered table skips on both dimensions") {
-    val table = Files.createTempDirectory("graft_stats_z").toString
+    val table = TestDirs.create("graft_stats_z").toString
     val ev = graft.queries.Tables.events(spark, dir)
       .select(col("event_id"), col("user_id"))
     Snapshots.publish(ev.repartition(8), table)
@@ -189,7 +189,7 @@ class SnapshotsStatsSpec extends AnyFunSuite {
 
   test("string-equality pruning skips files on a lang-clustered table " +
       "and stays row-identical") {
-    val table = Files.createTempDirectory("graft_stats_s").toString
+    val table = TestDirs.create("graft_stats_s").toString
     Snapshots.publish(docs.repartitionByRange(6, col("lang"), col("doc_id")),
       table)
 
@@ -232,7 +232,7 @@ class SnapshotsStatsSpec extends AnyFunSuite {
 
   test("changesBetween replays deletes, updates, and inserts; carried " +
       "rows cancel") {
-    val table = Files.createTempDirectory("graft_cdf1").toString
+    val table = TestDirs.create("graft_cdf1").toString
     val base = docs.select(col("doc_id"), col("n_chars"))
     Snapshots.publish(base.repartitionByRange(4, col("doc_id")), table) // v1
     Snapshots.deleteWhere(spark, table, col("doc_id") < 50)             // v2
@@ -291,7 +291,7 @@ class SnapshotsStatsSpec extends AnyFunSuite {
 
   test("an evolved-column backfill diffs as a value change under the " +
       "later schema") {
-    val table = Files.createTempDirectory("graft_cdf2").toString
+    val table = TestDirs.create("graft_cdf2").toString
     Snapshots.publish(docs.filter(col("doc_id") < 100)
       .repartitionByRange(2, col("doc_id")), table)                     // v1
     Snapshots.addColumns(spark, table,

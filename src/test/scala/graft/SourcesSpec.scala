@@ -21,7 +21,7 @@ class SourcesSpec extends AnyFunSuite {
       .collect().map(_.mkString("|")).toSet
 
   test("partitioned parquet sink round-trips and prunes partitions on read") {
-    val out = java.nio.file.Files.createTempDirectory("graft-sink").toString
+    val out = TestDirs.create("graft-sink").toString
     docs.write.mode("overwrite").partitionBy("source").parquet(out)
     val back = spark.read.parquet(out)
     assert(canon(back) == canon(docs))
@@ -36,7 +36,7 @@ class SourcesSpec extends AnyFunSuite {
   }
 
   test("csv sink with header round-trips under an explicit schema") {
-    val out = java.nio.file.Files.createTempDirectory("graft-csv").toString
+    val out = TestDirs.create("graft-csv").toString
     docs.write.mode("overwrite").option("header", "true").csv(out)
     val back = spark.read.option("header", "true")
       .schema("doc_id bigint, source string, lang string, n_chars bigint")
@@ -45,7 +45,7 @@ class SourcesSpec extends AnyFunSuite {
   }
 
   test("json-lines sink round-trips (the reference's wire codec)") {
-    val out = java.nio.file.Files.createTempDirectory("graft-json").toString
+    val out = TestDirs.create("graft-json").toString
     docs.write.mode("overwrite").json(out)
     val back = spark.read
       .schema("doc_id bigint, source string, lang string, n_chars bigint")

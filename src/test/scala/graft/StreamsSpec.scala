@@ -105,7 +105,7 @@ class StreamsSpec extends AnyFunSuite {
     // closes it with the pre-restart accumulations intact.
     implicit val sql = spark.sqlContext
     import spark.implicits._
-    val ckpt = java.nio.file.Files.createTempDirectory("graft-ckpt").toString
+    val ckpt = TestDirs.create("graft-ckpt").toString
     val input = MemoryStream[Event]
     // The memory sink refuses checkpoint recovery; foreachBatch supports it.
     val out = new java.util.concurrent.ConcurrentLinkedQueue[SessionUpdate]()
@@ -131,12 +131,7 @@ class StreamsSpec extends AnyFunSuite {
       val closed = rows.filter(_.closed)
       assert(closed.exists(c => c.n_events == 2 && c.total_value == 3.0),
         s"restored state lost pre-restart events: ${rows.mkString(", ")}")
-    } finally {
-      q2.stop()
-      java.nio.file.Files.walk(java.nio.file.Paths.get(ckpt))
-        .sorted(java.util.Comparator.reverseOrder())
-        .forEach(p => java.nio.file.Files.delete(p))
-    }
+    } finally q2.stop()
   }
 
   test("streaming LSH dedup pairs arrivals with ALL prior bucket members") {
@@ -883,7 +878,7 @@ class StreamsSpec extends AnyFunSuite {
     import graft.streaming.Streams.{ChunkDup, DocEvent}
     val textA = "the quick brown fox jumps over the lazy dog while " +
       "seventeen green bottles stand on the wall near the old mill"
-    val ckpt = java.nio.file.Files.createTempDirectory("graft-cdc-ckpt").toString
+    val ckpt = TestDirs.create("graft-cdc-ckpt").toString
     val input = MemoryStream[DocEvent]
     val out = new java.util.concurrent.ConcurrentLinkedQueue[ChunkDup]()
     def start() = Streams.cdcDedupStream(spark, input.toDS())

@@ -36,7 +36,7 @@ class UrlCanonSpec extends AnyFunSuite {
   test("each noise variant canonicalizes to the clean page URL") {
     // Drive the DECLARED query over a six-doc corpus that hits every
     // variant arm (doc_id % 6 = 0..5); all six share page id via %100.
-    val dir = java.nio.file.Files.createTempDirectory("urlcanon").toString
+    val dir = graft.TestDirs.create("urlcanon").toString
     spark.range(6).selectExpr("id AS doc_id", "'x' AS text")
       .write.mode("overwrite").parquet(s"$dir/documents.parquet")
     val got = Dedup.urlCanonical.run(spark, dir).collect()

@@ -29,7 +29,7 @@ class WebDatasetSpec extends AnyFunSuite {
   }
 
   test("GNU tar extracts this encoder's archive bit-identically") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-tar")
+    val dir = TestDirs.create("graft-tar")
     val payload = Array.tabulate(777)(i => (i * 31 % 256).toByte)
     val bytes = Tar.encode(Seq("sample.txt" -> ascii("the body"),
       "sample.bin" -> payload))
@@ -48,7 +48,7 @@ class WebDatasetSpec extends AnyFunSuite {
   }
 
   test("this walker decodes a GNU-tar-written ustar archive") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-tar2")
+    val dir = TestDirs.create("graft-tar2")
     java.nio.file.Files.write(dir.resolve("x.txt"), ascii("gnu content"))
     java.nio.file.Files.write(dir.resolve("y.bin"),
       Array.tabulate(600)(i => (i % 251).toByte))
@@ -64,7 +64,7 @@ class WebDatasetSpec extends AnyFunSuite {
   }
 
   test("GNU-tar long paths (prefix field) and directory entries decode") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-tar3")
+    val dir = TestDirs.create("graft-tar3")
     // A path over 100 chars forces GNU tar's ustar writer to split it
     // across prefix + name; a naive reader that ignores the prefix field
     // silently truncates the path.

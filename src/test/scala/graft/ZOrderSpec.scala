@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -50,7 +48,7 @@ class ZOrderSpec extends AnyFunSuite {
   }
 
   test("z-compacted files bound both dims; range compaction does not") {
-    val base = Files.createTempDirectory("graft_zorder").toString
+    val base = TestDirs.create("graft_zorder").toString
     // Same min/max 16-bit normalization as the declared query (driver-side
     // literals are fine in a test).
     val raw = graft.queries.Tables.events(spark, dir)

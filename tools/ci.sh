@@ -24,7 +24,10 @@
 #                                       spill
 #   4. bench smoke                    — graft.Bench on three queries at
 #                                       sf0.001: the JSON line parses, no
-#                                       query failed, no retired field
+#                                       query failed, no retired field,
+#                                       and every query's TaskLog row
+#                                       counts at least one job
+#                                       (jobs[q].n) and one task (tasks[q])
 #   5. tools/stress.sh N              — N repeat-suite trials, varied
 #                                       layouts/seeds/arrival orders
 #   6. Verify+DuckDB oracle sweep at sf0.01 under both materialization
@@ -74,7 +77,8 @@ if SPARK_GRAFT_SF_DIR="$(dirname "$SF_DIR")/sf0.001" SPARK_GRAFT_BENCH_REPEAT=1 
      tools/run_main.sh graft.Bench >/tmp/graft_ci_bench_smoke.log 2>&1 \
    && python3 -c 'import json, sys; raw = open(sys.argv[1]).read(); d = json.loads(raw)
 assert d["value"] > 0 and all(v >= 0 for v in d["queries"].values()), raw
-assert "\"vs_prior\"" not in raw and "\"calibration_sec\"" not in raw, raw' \
+assert "\"vs_prior\"" not in raw and "\"calibration_sec\"" not in raw, raw
+assert all(d["jobs"][q]["n"] >= 1 and d["tasks"][q] >= 1 for q in d["queries"]), raw' \
      /tmp/graft_ci_bench_smoke.json; then
   cat /tmp/graft_ci_bench_smoke.json
   record "bench smoke" PASS
